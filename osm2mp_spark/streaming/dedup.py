@@ -138,37 +138,44 @@ def _commit_compacted(
     `write(tmp_path)`, rename into place, and VERIFY the final dir exists
     before any destructive step — Hadoop FS rename reports failure by
     returning False (_rename raises on it) but object stores can also lie,
-    so existence is checked explicitly. Only then are the merged `sources`
-    and the previous compacted dir deleted. strict=False returns False
+    so existence is checked explicitly. Only then are the merged `sources`,
+    the previous compacted dir and a dir moved aside from the target path
+    deleted; a failed commit moves that dir back. strict=False returns False
     instead of raising when the committed dir never materialized (callers
     whose sources are safe to leave behind)."""
     tmp = _join(root, f"compacted={horizon}.tmp")
     final = _join(root, f"compacted={horizon}")
+    # a rerun at an UNCHANGED horizon re-commits to the path the old
+    # compacted dir occupies (reachable for labels/rollup, whose callers
+    # have no empty-tail early return): move the old dir aside rather than
+    # deleting it, so a failed rename can put the store's only compacted
+    # state back
+    bak = _join(root, f"compacted={horizon}.bak")
     _rmtree(tmp)
     write(tmp)
-    _rmtree(final)
+    _rmtree(bak)
+    aside = _exists(final)
+    if aside:
+        _rename(final, bak)
     try:
         _rename(tmp, final)
-    except IOError:
-        # strict=False callers (the lenient metrics rollup) treat a failed
-        # commit as deferred listing-growth debt — the rename raising here
-        # must not abort them any more than the existence check below would
-        if strict:
-            raise
-        return False
-    if not _exists(final):
-        if strict:
+        if not _exists(final):
             raise IOError(
                 f"compacted {final} missing after rename — refusing to "
                 f"delete merged sources"
             )
+    except IOError:
+        if aside:
+            _rmtree(final)
+            _rename(bak, final)
+        # strict=False callers (the lenient metrics rollup) treat a failed
+        # commit as deferred listing-growth debt, safe to leave behind
+        if strict:
+            raise
         return False
+    _rmtree(bak)
     for d in sources:
         _rmtree(d)
-    # a rerun at an UNCHANGED horizon re-commits to the same path the old
-    # compacted dir occupied (reachable for labels/rollup, whose callers
-    # have no empty-tail early return): the rename already replaced it, so
-    # deleting old_comp here would delete the store's only compacted state
     if old_comp and old_comp != final:
         _rmtree(old_comp)
     return True
@@ -324,6 +331,19 @@ def _store_rowgroup_stats(path: str) -> tuple[int, int] | None:
         return total, biggest
     except Exception:
         return None
+
+
+def _parquet_rows(spark: SparkSession, dirs: list[str]) -> int:
+    """Total rows of parquet dirs, summed from their footers — driver-side,
+    no Spark job. Falls back to a Spark count only for a path scheme
+    pyarrow cannot footer-read."""
+    total = 0
+    for d in dirs:
+        stats = _store_rowgroup_stats(d)
+        if stats is None:
+            return spark.read.parquet(*dirs).count()
+        total += stats[0]
+    return total
 
 
 def pruned_store_scan(
@@ -580,25 +600,33 @@ def _jvm_read_bytes() -> int:
     """Cumulative bytes read (/proc rchar) by the local-mode JVM — driver
     and executor threads share one process, so the per-batch delta is an
     honest all-inclusive bytes-read ledger (page-cached reads included,
-    which executor InputMetrics under-report for vectorized parquet).
-    Returns 0 when no child JVM is found (cluster mode — there, read the
-    executor task input metrics off the event log instead)."""
-    import subprocess
-
+    which executor InputMetrics under-report for vectorized parquet). The
+    JVM is found as a `java` child of this process in /proc/<pid>/stat, so
+    no helper process is forked. Returns 0 when no child JVM is found
+    (cluster mode — there, read the executor task input metrics off the
+    event log instead)."""
+    me = str(os.getpid())
+    tot = 0
     try:
-        pids = subprocess.run(
-            ["pgrep", "-P", str(os.getpid()), "java"],
-            capture_output=True, text=True,
-        ).stdout.split()
-        tot = 0
-        for pid in pids:
+        pids = [p for p in os.listdir("/proc") if p.isdigit()]
+    except OSError:
+        return 0
+    for pid in pids:
+        try:
+            with open(f"/proc/{pid}/stat") as f:
+                stat = f.read()
+            # "pid (comm) state ppid ..." — comm may hold spaces or parens
+            comm = stat[stat.index("(") + 1:stat.rindex(")")]
+            ppid = stat[stat.rindex(")") + 1:].split()[1]
+            if ppid != me or "java" not in comm:
+                continue
             with open(f"/proc/{pid}/io") as f:
                 for line in f:
                     if line.startswith("rchar:"):
                         tot += int(line.split()[1])
-        return tot
-    except Exception:
-        return 0
+        except (OSError, ValueError, IndexError):
+            continue  # exited mid-scan, or unreadable
+    return tot
 
 
 def _is_listing_race(e: Exception) -> bool:
@@ -632,6 +660,16 @@ BATCH_METRICS_SCHEMA = (
     "batch_id long, n_images long, n_pairs long, secs double, "
     "images_per_sec double, store_rows_scanned long, read_bytes long"
 )
+
+
+def _metrics_row(spark: SparkSession, values: tuple) -> DataFrame:
+    """One BATCH_METRICS_SCHEMA row as a literal projection over a
+    one-partition range: a JVM-only plan, where createDataFrame over a
+    Python list would start a Python worker task to serialize one row."""
+    cols = [f.split() for f in BATCH_METRICS_SCHEMA.split(", ")]
+    return spark.range(0, 1, 1, 1).select(*[
+        F.lit(v).cast(t).alias(c) for (c, t), v in zip(cols, values)
+    ])
 
 
 def start_incremental_dedup(
@@ -674,6 +712,22 @@ def start_incremental_dedup(
     records store_rows_scanned and the JVM's actual read_bytes so the
     boundedness is measurable from the ledger (BENCH.md §1b).
 
+    The ledger costs the batch almost no extra Spark work:
+      - n_images: the batch's band keys are collected once (8 per
+        signature, no distinct shuffle) for the pruned scan; their count
+        / 8 is the image count;
+      - n_pairs: parquet footer row counts of the batch's pairs dir;
+      - store_rows_scanned: 8 × the uncompacted tail's footer row count,
+        plus ONE count of the pruned compacted scan, run only once a
+        compacted dir exists;
+      - read_bytes: /proc rchar of the child JVM, less the pruned
+        count's own re-read;
+      - the row itself is a literal projection over one partition, so
+        writing it starts no Python worker.
+    On 4 cores with 45-image batches a micro-batch submits 7–11 Spark jobs
+    (15–19 when it counted its inputs, store and output with Spark jobs
+    and wrote the row through createDataFrame).
+
     A compaction that commits while a batch is in flight can delete tail
     dirs between our listing and the read — the store read retries once on
     a FileNotFound-class failure, picking up the new compacted layout
@@ -698,14 +752,21 @@ def start_incremental_dedup(
         )
         new = spark.read.parquet(sig_dir)
         newb = banded_signatures(new)
-        keys = [r[0] for r in newb.select("bandkey").distinct().collect()]
+        # one row per (signature, band): the batch's band keys, deduplicated
+        # on the driver (no distinct shuffle), and at 8 bands per signature
+        # its image count
+        band_rows = [r[0] for r in newb.select("bandkey").collect()]
+        keys = list(set(band_rows))
+        n_new = len(band_rows) // 8
         out = _join(pairs_path, f"batch={batch_id:09d}")
 
-        def build_allb() -> DataFrame:
+        def build_allb() -> tuple[DataFrame, int, DataFrame | None]:
             """Banded view of everything the batch joins against: its own
             rows + the uncompacted tail + the pruned compacted prefix —
             RE-LISTED on each call so a retry after a mid-stream compaction
-            picks up the new layout."""
+            picks up the new layout. Also returns the tail's banded row
+            count (8 × its footer row count) and the pruned scan, the two
+            parts of store_rows_scanned."""
             comp, n = _compacted_dir(store_path)
             if comp is not None and n > batch_id + 1:
                 raise RuntimeError(
@@ -718,32 +779,41 @@ def start_incremental_dedup(
                 if int(re.search(r"batch=(\d+)$", d).group(1)) >= n
                 and d != sig_dir
             ]
-            allb = newb
+            allb, tail_rows, pruned = newb, 0, None
             if tail:
                 allb = allb.unionByName(
                     banded_signatures(spark.read.parquet(*tail))
                 )
+                tail_rows = 8 * _parquet_rows(spark, tail)
             if comp is not None:
-                allb = allb.unionByName(
-                    pruned_store_scan(spark, comp, keys)
-                )
-            return allb
+                pruned = pruned_store_scan(spark, comp, keys)
+                allb = allb.unionByName(pruned)
+            return allb, tail_rows, pruned
 
-        def race_retry(run):
-            """Run `run(build_allb())`, retrying once with a fresh listing
-            when a concurrently-committed compaction deleted dirs between
-            our listing and the read."""
+        def join_store() -> tuple[int, int]:
+            """Write the batch's pairs; return store_rows_scanned and the
+            bytes its count read. Retries once with a fresh listing when a
+            concurrently-committed compaction deleted dirs between our
+            listing and the read. The pruned prefix is counted inside the
+            same attempt, so the count always describes the layout the
+            written pairs were joined against."""
             for attempt in (0, 1):
                 try:
-                    return run(build_allb())
+                    allb, n_store, pruned = build_allb()
+                    pairs_touching_banded(newb, allb, max_hamming).write.mode(
+                        "overwrite"
+                    ).parquet(out)
+                    count_bytes = 0
+                    if pruned is not None:
+                        r = _jvm_read_bytes()
+                        n_store += pruned.count()
+                        count_bytes = _jvm_read_bytes() - r
+                    return n_store, count_bytes
                 except Exception as e:
                     if attempt or not _is_listing_race(e):
                         raise
 
-        race_retry(
-            lambda allb: pairs_touching_banded(newb, allb, max_hamming)
-            .write.mode("overwrite").parquet(out)
-        )
+        n_store, count_bytes = join_store()
         if ann_state_path is not None:
             from .ann import update_topk_state
 
@@ -783,24 +853,19 @@ def start_incremental_dedup(
                         spark, rollup_root, int(batch_id), new,
                         rollup_key_expr, fold, rollup_assign,
                     )
-        read_bytes = _jvm_read_bytes() - r0
+        # the ledger's own count re-reads pruned row groups: not batch work
+        read_bytes = _jvm_read_bytes() - r0 - count_bytes
         # per-batch lineage + throughput record (north_rule: resumable with
         # per-partition lineage + metrics). Same idempotent overwrite layout
         # as the data; written LAST so a metrics row certifies a completed
         # batch.
-        n_new = new.count()
-        # allb is banded (8 rows/signature) and includes the new side; the
-        # count re-executes the (bounded) store read, under the same
-        # compaction-race retry as the production join
-        n_store = race_retry(lambda allb: allb.count()) - 8 * n_new
-        n_pairs = spark.read.parquet(out).count()
+        n_pairs = _parquet_rows(spark, [out])
         secs = time.time() - t0
-        spark.createDataFrame(
-            [(int(batch_id), n_new, n_pairs, float(secs),
-              float(n_new / secs) if secs > 0 else 0.0,
-              int(n_store), int(read_bytes))],
-            BATCH_METRICS_SCHEMA,
-        ).coalesce(1).write.mode("overwrite").parquet(
+        _metrics_row(spark, (
+            int(batch_id), n_new, n_pairs, float(secs),
+            float(n_new / secs) if secs > 0 else 0.0,
+            int(n_store), int(read_bytes),
+        )).write.mode("overwrite").parquet(
             _join(_join(store_path, "metrics"), f"batch={batch_id:09d}")
         )
         if on_batch_complete is not None:

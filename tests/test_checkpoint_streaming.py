@@ -865,6 +865,190 @@ class TestIncrementalDedupStream:
         n = read_store_signatures(spark, store).count()
         assert n == 16
 
+    def test_ledger_counts_exact_across_compaction(self, spark, tmp_path):
+        """Every metrics field against an explicit Spark count, on the shape
+        where a store-side row-count Observation breaks: the first batch
+        has no near-duplicates (empty pair join), the store is compacted
+        after it, and a later batch again yields zero pairs while joining
+        a compacted prefix plus an uncompacted tail. store_rows_scanned
+        must be 8 × tail signature rows + the compacted rows sharing a band
+        key with the batch."""
+        import time
+
+        from osm2mp_spark.sources.images import phash_corpus_row
+        from osm2mp_spark.streaming.dedup import (
+            banded_signatures,
+            compact_store,
+            read_batch_metrics,
+            start_incremental_dedup,
+        )
+
+        land = tmp_path / "landing"
+        land.mkdir()
+        # batch 0: originals only; batch 1: the dup of batch 0's image 0
+        # (a pair through the compacted prefix) plus a same-batch pair;
+        # batch 2: originals only, joined against prefix + batch-1 tail
+        for rows in (
+            [phash_corpus_row(i, dup=False) for i in range(6)],
+            [phash_corpus_row(0, dup=True), phash_corpus_row(7, dup=False),
+             phash_corpus_row(7, dup=True), phash_corpus_row(8, dup=False)],
+            [phash_corpus_row(i, dup=False) for i in range(15, 20)],
+        ):
+            spark.createDataFrame(pd.DataFrame(rows)).coalesce(1).write.mode(
+                "append"
+            ).parquet(str(land))
+            time.sleep(1.05)  # distinct mtimes pin the batch order
+        schema = spark.read.parquet(str(land)).schema
+        store, pairs = str(tmp_path / "store"), str(tmp_path / "pairs")
+
+        def hook(batch_id):
+            if batch_id == 0:
+                assert compact_store(spark, store) == 1
+
+        q = start_incremental_dedup(
+            spark, str(land), schema, store, pairs, str(tmp_path / "ckpt"),
+            max_hamming=7, max_files_per_trigger=1, on_batch_complete=hook,
+        )
+        try:
+            q.awaitTermination()
+        finally:
+            q.stop()
+
+        m = read_batch_metrics(spark, store).toPandas()
+        m = m.sort_values("batch_id").reset_index(drop=True)
+        assert list(m.batch_id) == [0, 1, 2]
+        assert list(m.n_pairs) == [0, 2, 0]
+        assert list(m.n_images) == [6, 4, 5]
+        comp = spark.read.parquet(f"{store}/compacted=1")
+
+        def sigs(b):
+            return spark.read.parquet(f"{store}/batch={b:09d}")
+
+        for b in (1, 2):
+            assert m.n_images[b] == sigs(b).count()
+            assert m.n_pairs[b] == spark.read.parquet(
+                f"{pairs}/batch={b:09d}"
+            ).count()
+            keys = [
+                r[0] for r in
+                banded_signatures(sigs(b)).select("bandkey").distinct()
+                .collect()
+            ]
+            tail = sum(8 * sigs(t).count() for t in range(1, b))
+            pruned = comp.filter(F.col("bandkey").isin(keys)).count()
+            assert m.store_rows_scanned[b] == tail + pruned
+        assert m.store_rows_scanned[0] == 0
+        # both parts are exercised: batch 1 scans the prefix rows of image
+        # 0's colliding bands, batch 2 the 4-image tail
+        assert m.store_rows_scanned[1] > 0
+        assert m.store_rows_scanned[2] >= 8 * 4
+
+    def test_metrics_rows_mix_across_writers(self, spark, tmp_path):
+        """Metrics dirs written by the old createDataFrame path and by the
+        literal-projection row share one parquet schema (names and types of
+        BATCH_METRICS_SCHEMA), so a store holding both reads back the same
+        rows through read_batch_metrics and through compact_store's
+        metrics/compacted=<N> roll-up."""
+        import glob
+
+        import pyarrow.parquet as pq
+
+        from osm2mp_spark.operators.images import DHASH_WIDE_SCHEMA
+        from osm2mp_spark.streaming.dedup import (
+            BATCH_METRICS_SCHEMA,
+            _metrics_row,
+            compact_store,
+            read_batch_metrics,
+        )
+
+        store = str(tmp_path / "store")
+        rows = [
+            (b, 40 + b, b % 3, 1.5 + b, (40 + b) / (1.5 + b), 8 * b,
+             (1 << 33) + b)
+            for b in range(4)
+        ]
+        for b, row in enumerate(rows):
+            spark.createDataFrame(
+                [(f"img{b}", b, b + 1, b + 2, b + 3)], DHASH_WIDE_SCHEMA
+            ).write.mode("overwrite").parquet(f"{store}/batch={b:09d}")
+            mdir = f"{store}/metrics/batch={b:09d}"
+            if b < 2:   # the old writer
+                spark.createDataFrame([row], BATCH_METRICS_SCHEMA).coalesce(
+                    1
+                ).write.mode("overwrite").parquet(mdir)
+            else:
+                _metrics_row(spark, row).write.mode("overwrite").parquet(mdir)
+
+        def arrow_cols(b):
+            (f,) = glob.glob(f"{store}/metrics/batch={b:09d}/*.parquet")
+            return [(c.name, str(c.type)) for c in pq.read_schema(f)]
+
+        want = [
+            (c, {"long": "int64", "double": "double"}[t])
+            for c, t in (f.split() for f in BATCH_METRICS_SCHEMA.split(", "))
+        ]
+        assert arrow_cols(0) == arrow_cols(3) == want
+
+        def read():
+            df = read_batch_metrics(spark, store)
+            assert df.schema.simpleString() == (
+                spark.createDataFrame([], BATCH_METRICS_SCHEMA)
+                .schema.simpleString()
+            )
+            return sorted(map(tuple, df.collect()))
+
+        assert read() == rows
+        assert compact_store(spark, store) == 4
+        assert glob.glob(f"{store}/metrics/compacted=4/*.parquet")
+        assert not glob.glob(f"{store}/metrics/batch=*")
+        assert read() == rows
+
+    def test_failed_recommit_keeps_compacted_dir(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A lenient re-compaction at an UNCHANGED horizon whose final
+        rename fails must leave the previous compacted dir in place (it is
+        the store's only compacted state); a strict one must restore it
+        before raising."""
+        import os
+
+        from osm2mp_spark.streaming import dedup
+
+        root = str(tmp_path / "metrics")
+        old = f"{root}/compacted=2"
+        spark.range(3).write.parquet(old)
+        real = dedup._rename
+
+        def failing(src, dst):
+            if src.endswith(".tmp"):
+                raise IOError(f"injected rename failure: {src} -> {dst}")
+            real(src, dst)
+
+        monkeypatch.setattr(dedup, "_rename", failing)
+
+        def write(tmp):
+            spark.range(5).write.parquet(tmp)
+
+        assert dedup._commit_compacted(
+            root, 2, write, sources=[], old_comp=old, strict=False,
+        ) is False
+        assert dedup._compacted_dir(root) == (old, 2)
+        assert spark.read.parquet(old).count() == 3
+        with pytest.raises(IOError, match="injected"):
+            dedup._commit_compacted(root, 2, write, sources=[], old_comp=old)
+        assert dedup._compacted_dir(root) == (old, 2)
+        assert spark.read.parquet(old).count() == 3
+        assert sorted(os.listdir(root)) == [
+            "compacted=2", "compacted=2.tmp",
+        ]
+        # with the rename working again the recommit replaces the content
+        monkeypatch.setattr(dedup, "_rename", real)
+        assert dedup._commit_compacted(
+            root, 2, write, sources=[], old_comp=old, strict=False,
+        ) is True
+        assert spark.read.parquet(old).count() == 5
+        assert sorted(os.listdir(root)) == ["compacted=2"]
+
 
 class TestBandedStorePruning:
     """The r4 verdict's weak item: per-batch store reads must be O(batch),
