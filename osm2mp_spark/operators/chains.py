@@ -347,9 +347,9 @@ def fix_close_nodes_walk(
     )
 
 
-# Crossover for min_label_components: at or below this many (directed)
-# edges the component labeling runs as a DRIVER union-find over the
-# checkpointed edge list instead of the distributed fixpoint. Rationale
+# Crossover for min_label_components: at or below this many (one-
+# direction) edges the component labeling runs as a DRIVER union-find over
+# the pulled edge list instead of the distributed fixpoint. Rationale
 # (measured r3/r5): each pointer-doubling round costs ~0.4-0.5 s of FIXED
 # job overhead at local[32] regardless of data volume, and a converged run
 # takes 3-6 rounds — while a driver union-find over ≤200k edges is
@@ -377,21 +377,28 @@ def min_label_components(
     round (lazy checkpoint materialized by the monotone sum-of-labels
     convergence witness).
 
-    ADAPTIVE: the edge list is checkpointed first (both paths need it
-    materialized), then one cheap count on the cached frame picks the
-    plan — a driver union-find when the graph fits the bounded crossover
-    (identical labels by construction: union-by-min root = component
-    minimum), the distributed fixpoint otherwise."""
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .localCheckpoint(eager=True)
-    )
+    ADAPTIVE: the edge list is checkpointed LAZILY, and ONE bounded pull of
+    at most driverMaxEdges + 1 edges both materializes it and picks the
+    plan. When the pull comes back within the bound, the graph is already
+    on the driver: a union-find labels it (identical labels by
+    construction: union-by-min root = component minimum) and the returned
+    table — bounded at 2·driverMaxEdges rows — carries a broadcast hint,
+    so callers join it without shuffling their own side. Beyond the
+    edges' own shuffle stages that is one job. Above the bound the
+    distributed fixpoint runs over the checkpoint the pull filled."""
     spark = edges.sparkSession
     max_edges = int(
         spark.conf.get(_DRIVER_EDGES_CONF, str(_DEFAULT_DRIVER_EDGES))
     )
-    if und.count() <= 2 * max_edges:
+    one = edges.select(
+        F.col(src).alias("a"), F.col(dst).alias("b")
+    ).localCheckpoint(eager=False)
+    # Arrow toPandas + .tolist() (python-native values, same semantics
+    # as Row indexing) measured ~2× faster than toLocalIterator for the
+    # bounded edge pull, and the pandas createDataFrame path ships the
+    # result back through Arrow instead of pickled rows
+    pdf = one.limit(max_edges + 1).toPandas()
+    if len(pdf) <= max_edges:
         parent: dict = {}
 
         def find(x):
@@ -402,33 +409,30 @@ def min_label_components(
                 parent[x], x = r, parent[x]
             return r
 
-        # Arrow toPandas + .tolist() (python-native values, same semantics
-        # as Row indexing) measured ~2× faster than toLocalIterator for the
-        # bounded edge pull, and the pandas createDataFrame path ships the
-        # result back through Arrow instead of pickled rows
-        pdf = und.toPandas()
         verts = set()
-        for a, b in zip(pdf.iloc[:, 0].tolist(), pdf.iloc[:, 1].tolist()):
+        for a, b in zip(pdf["a"].tolist(), pdf["b"].tolist()):
             verts.add(a)
             verts.add(b)
             ra, rb = find(a), find(b)
             if ra != rb:
                 lo, hi = (ra, rb) if ra < rb else (rb, ra)
                 parent[hi] = lo
-        import pandas as pd
         from pyspark.sql import types as T
 
-        vt = und.schema[0].dataType
+        vt = one.schema[0].dataType
         schema = T.StructType([
             T.StructField("vertex", vt), T.StructField("label", vt)
         ])
         ordered = sorted(verts)
-        return spark.createDataFrame(
+        return F.broadcast(spark.createDataFrame(
             pd.DataFrame(
                 {"vertex": ordered, "label": [find(v) for v in ordered]}
             ),
             schema,
-        )
+        ))
+    und = one.unionByName(
+        one.select(F.col("b").alias("a"), F.col("a").alias("b"))
+    )
     labels = (
         und.select(F.col("a").alias("vertex")).distinct()
         .withColumn("label", F.col("vertex"))

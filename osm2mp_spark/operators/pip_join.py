@@ -88,10 +88,17 @@ def pip_resolve(
             _resolve_masks(idx_b, cgrid, fgrid, aids, level, lons, lats)
         )
 
-    out_df = df.withColumn(area_col, _resolve(F.col(lon), F.col(lat)))
     if keep_unmatched:
-        return out_df
-    return out_df.filter(F.col(area_col).isNotNull())
+        return df.withColumn(area_col, _resolve(F.col(lon), F.col(lat)))
+    # Marked nondeterministic so Catalyst cannot push the null filter below
+    # the projection: pushed, the filter and the projection each evaluate
+    # the UDF — two ArrowEvalPython passes (Python worker tasks) over the
+    # same points. The keep_unmatched path stays deterministic, so chained
+    # resolves still collapse into one ArrowEvalPython (pip_hierarchy).
+    resolve = _resolve.asNondeterministic()
+    return df.withColumn(area_col, resolve(F.col(lon), F.col(lat))).filter(
+        F.col(area_col).isNotNull()
+    )
 
 
 def pip_join(

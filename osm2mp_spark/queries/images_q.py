@@ -17,10 +17,12 @@ from . import golden_oracle, register
 
 
 def _n_for(spark: SparkSession, sf_dir: str) -> int:
-    """Scale the synthesized images volume with the sf tier."""
-    return int(
-        spark.read.parquet(f"{sf_dir}/customer.parquet").count()
-    )
+    """Scale the synthesized images volume with the sf tier: the customer
+    table's row count, read from its parquet footers (no Spark job; a
+    path pyarrow cannot read falls back to a Spark count)."""
+    from ..sources.parquet_footers import parquet_rows
+
+    return parquet_rows(spark, [f"{sf_dir}/customer.parquet"])
 
 
 @register("image_verify", oracle=golden_oracle("image_verify"))
@@ -439,11 +441,9 @@ def image_dhash_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     """256-bit wide perceptual signatures (4 independent 64-bit pooling
     geometries, operators.images.WIDE_GEOMETRIES) over the dedup corpus,
     golden-pinned. Dup pairs ≤ 5 bits apart, unrelated ≥ 96/256."""
-    from ..operators.images import dhash_wide_images
-    from ..sources.images import generate_phash_corpus_df
+    from ..sources.images import generate_phash_signatures_df
 
-    corpus = generate_phash_corpus_df(spark, _n_for(spark, sf_dir))
-    return dhash_wide_images(corpus)
+    return generate_phash_signatures_df(spark, _n_for(spark, sf_dir))
 
 
 def _wide_pairs_oracle(max_hamming: int = 7) -> str | None:
@@ -475,13 +475,14 @@ def image_dedup_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     8 word-aligned 32-bit bands → equi-join → exact 4-word popcount ≤ 7.
     Same planted pairs as image_dedup_phash but with 2^32 buckets per band
     — the configuration that stays near-linear at 10^12 signatures."""
-    from ..operators.images import dhash_wide_images, wide_hamming_pairs
-    from ..sources.images import generate_phash_corpus_df
+    from ..operators.images import wide_hamming_pairs
+    from ..sources.images import generate_phash_signatures_df
 
-    corpus = generate_phash_corpus_df(spark, _n_for(spark, sf_dir))
     # checkpoint before the self-join: both band-explode sides share ONE
     # hash pass instead of regenerating the corpus per side (guide §2.4)
-    sigs = dhash_wide_images(corpus).localCheckpoint(eager=False)
+    sigs = generate_phash_signatures_df(
+        spark, _n_for(spark, sf_dir)
+    ).localCheckpoint(eager=False)
     return wide_hamming_pairs(sigs, max_hamming=7)
 
 
@@ -491,11 +492,11 @@ def image_dedup_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
 def image_dhash_wide_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wide signatures over the ANN fixture corpus (variants=2), golden-
     pinned — the table image_ann_topk_wide's oracle recomputes top-k from."""
-    from ..operators.images import dhash_wide_images
-    from ..sources.images import generate_phash_corpus_df
+    from ..sources.images import generate_phash_signatures_df
 
-    corpus = generate_phash_corpus_df(spark, _n_for(spark, sf_dir), variants=2)
-    return dhash_wide_images(corpus)
+    return generate_phash_signatures_df(
+        spark, _n_for(spark, sf_dir), variants=2
+    )
 
 
 def _ann_topk_wide_oracle(max_hamming: int = 7, k: int = 3) -> str | None:
@@ -533,17 +534,14 @@ def image_ann_topk_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hamming, neighbor_id) window rank. The at-scale ANN configuration."""
     from pyspark.sql import Window
 
-    from ..operators.images import (
-        WIDE_WORDS,
-        dhash_wide_images,
-        wide_band_explode,
-    )
+    from ..operators.images import WIDE_WORDS, wide_band_explode
     from ..plans.hints import maybe_broadcast
-    from ..sources.images import generate_phash_corpus_df
+    from ..sources.images import generate_phash_signatures_df
 
     n = _n_for(spark, sf_dir)
-    corpus = generate_phash_corpus_df(spark, n, variants=2)
-    sigs = dhash_wide_images(corpus).localCheckpoint(eager=False)
+    sigs = generate_phash_signatures_df(
+        spark, n, variants=2
+    ).localCheckpoint(eager=False)
 
     e = wide_band_explode(sigs)
     qs = e.filter("image_id LIKE '%d' OR image_id LIKE '%e'").select(
@@ -623,11 +621,12 @@ def image_dedup_clusters_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-label components → keeper = min image_id per cluster. Completes
     the wide family end-to-end (signature → pairs → clusters → keeper)."""
     from ..operators.chains import min_label_components
-    from ..operators.images import dhash_wide_images, wide_hamming_pairs
-    from ..sources.images import generate_phash_corpus_df
+    from ..operators.images import wide_hamming_pairs
+    from ..sources.images import generate_phash_signatures_df
 
-    corpus = generate_phash_corpus_df(spark, _n_for(spark, sf_dir))
-    sigs = dhash_wide_images(corpus).localCheckpoint(eager=False)
+    sigs = generate_phash_signatures_df(
+        spark, _n_for(spark, sf_dir)
+    ).localCheckpoint(eager=False)
     pairs = wide_hamming_pairs(sigs, max_hamming=7).selectExpr(
         f"{_img_key('id_a')} AS ka", f"{_img_key('id_b')} AS kb"
     )
@@ -711,19 +710,20 @@ def multimodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     token-set overlap (n_inter/n_union — Jaccard as two exact ints, no
     float division in the gate). The caption side carries no bytes and is
     size-gate-broadcast into both joins."""
-    from ..operators.images import dhash_wide_images, wide_hamming_pairs
+    from ..operators.images import wide_hamming_pairs
     from ..plans.hints import maybe_broadcast
     from ..sources.images import (
         generate_captions_df,
-        generate_phash_corpus_df,
+        generate_phash_signatures_df,
     )
 
     n = _n_for(spark, sf_dir)
-    corpus = generate_phash_corpus_df(spark, n, variants=2)
     # checkpoint before the self-join — one hash pass, not one per band
     # side (the un-checkpointed plan ran the corpus gen+decode 4×: twice
     # for the pair join, twice for the caption legs)
-    sigs = dhash_wide_images(corpus).localCheckpoint(eager=False)
+    sigs = generate_phash_signatures_df(
+        spark, n, variants=2
+    ).localCheckpoint(eager=False)
     pairs = wide_hamming_pairs(sigs, max_hamming=7)
     caps = generate_captions_df(spark, n, variants=2).select(
         "image_id", "caption",
@@ -870,17 +870,28 @@ def flagship_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     decision → keepers get derived positions → fused PIP+BSP assignment
     with kNN fallback → per-(city, tile) keeper counts and total
     represented images (keeper + its dropped duplicates). One pipeline
-    from raw image bytes to the spatial rollup a 100-TB ingest would
-    publish — the banded pair join and the fused Arrow spatial kernel are
-    the only heavyweight stages, both the at-scale configurations."""
+    from raw images to the spatial rollup a 100-TB ingest would publish —
+    the banded pair join and the fused Arrow spatial kernel are the only
+    heavyweight stages, both the at-scale configurations.
+
+    Job and worker shape (4 cores): the corpus is generated, encoded,
+    decoded and hashed in ONE mapInPandas (generate_phash_signatures_df),
+    so encoded bytes never cross Arrow and each generator task is one
+    Python worker task. The size comes from parquet footers (no
+    job). The pair graph reaches the driver in one bounded pull
+    (min_label_components), and the driver-built label table joins the
+    signature keys as a broadcast. Per call that is 5 Python worker tasks
+    on local[4]: 4 generator tasks and 1 spatial kernel task (BENCH.md
+    §1d)."""
     from ..operators.chains import min_label_components
-    from ..operators.images import dhash_wide_images, wide_hamming_pairs
+    from ..operators.images import wide_hamming_pairs
     from ..plans.flagship import flagship_assign
-    from ..sources.images import generate_phash_corpus_df
+    from ..sources.images import generate_phash_signatures_df
     from ..sources.points import with_derived_position
 
-    corpus = generate_phash_corpus_df(spark, _n_for(spark, sf_dir))
-    sigs = dhash_wide_images(corpus).localCheckpoint(eager=False)
+    sigs = generate_phash_signatures_df(
+        spark, _n_for(spark, sf_dir)
+    ).localCheckpoint(eager=False)
     pairs = wide_hamming_pairs(sigs, max_hamming=7).selectExpr(
         f"{_img_key('id_a')} AS ka", f"{_img_key('id_b')} AS kb"
     )

@@ -364,6 +364,39 @@ _DUP_VARIANTS = (
 )
 
 
+def _base_pixels(idx: int) -> np.ndarray:
+    """Pattern + noise of original `idx`, before any near-dup perturbation."""
+    return pattern_pixels_for(
+        f"pimg{idx:09d}", W_CHOICES[idx % 3], H_CHOICES[idx % 3]
+    )
+
+
+def _corpus_variants(idx: int, dup_every: int, variants: int) -> list:
+    """(dup, variant) of every corpus row generated from original `idx`, in
+    emission order: the original, then its near-duplicates."""
+    dups = [(True, v) for v in range(variants)] if idx % dup_every == 0 else []
+    return [(False, 0)] + dups
+
+
+def _corpus_pixels(
+    idx: int, dup: bool, variant: int = 0, base_px: np.ndarray | None = None
+) -> tuple[str, str, np.ndarray]:
+    """(image_id, fmt, pixels) of one corpus row — see phash_corpus_row.
+    `base_px` lets the batch generators synthesize the base pattern ONCE
+    per idx and share it across the original + its dup variants (each
+    variant perturbs a COPY) — same rows, one pixel synthesis instead of
+    1 + variants."""
+    base_id = f"pimg{idx:09d}"
+    px = _base_pixels(idx) if base_px is None else base_px
+    if dup:
+        suffix, stride, delta, rot = _DUP_VARIANTS[variant]
+        px = px.copy()
+        flat = px.reshape(-1)
+        flat[::stride] += delta
+        return base_id + suffix, FMT_CHOICES[(idx + rot) % 3], px
+    return base_id, FMT_CHOICES[idx % 3], px
+
+
 def phash_corpus_row(
     idx: int, dup: bool, variant: int = 0, _base_px: np.ndarray | None = None
 ) -> dict:
@@ -378,26 +411,12 @@ def phash_corpus_row(
     re-encode — same caption), variant 'e' drifts it (the meme/crop case:
     near-dup pixels, altered text) — so joint image×caption dedup policies
     have both regimes planted."""
-    base_id = f"pimg{idx:09d}"
-    w, h = W_CHOICES[idx % 3], H_CHOICES[idx % 3]
-    # `_base_px` lets the batch generator synthesize the base pattern ONCE
-    # per idx and share it across the original + its dup variants (each
-    # variant perturbs a COPY) — same rows, one pixel synthesis instead of
-    # 1 + variants
-    px = pattern_pixels_for(base_id, w, h) if _base_px is None else _base_px
-    if dup:
-        suffix, stride, delta, rot = _DUP_VARIANTS[variant]
-        px = px.copy()
-        flat = px.reshape(-1)
-        flat[::stride] += delta
-        image_id, fmt = base_id + suffix, FMT_CHOICES[(idx + rot) % 3]
-    else:
-        image_id, fmt = base_id, FMT_CHOICES[idx % 3]
+    image_id, fmt, px = _corpus_pixels(idx, dup, variant, _base_px)
     return {
         "image_id": image_id,
         "bytes": encode(px, fmt),
-        "w": w,
-        "h": h,
+        "w": W_CHOICES[idx % 3],
+        "h": H_CHOICES[idx % 3],
         "fmt": fmt,
         "caption": phash_corpus_caption(idx, dup, variant),
     }
@@ -430,16 +449,14 @@ def generate_captions_df(spark, n: int, dup_every: int = 7,
 
     def gen(it):
         for pdf in it:
-            rows = []
-            for i in pdf["id"]:
-                idx = int(i)
-                rows.append((f"pimg{idx:09d}", phash_corpus_caption(idx)))
-                if idx % dup_every == 0:
-                    for v in range(variants):
-                        rows.append((
-                            f"pimg{idx:09d}" + _DUP_VARIANTS[v][0],
-                            phash_corpus_caption(idx, True, v),
-                        ))
+            rows = [
+                (
+                    f"pimg{idx:09d}" + (_DUP_VARIANTS[v][0] if dup else ""),
+                    phash_corpus_caption(idx, dup, v),
+                )
+                for idx in map(int, pdf["id"])
+                for dup, v in _corpus_variants(idx, dup_every, variants)
+            ]
             yield pd.DataFrame(rows, columns=["image_id", "caption"])
 
     return rng.mapInPandas(gen, schema="image_id string, caption string")
@@ -468,17 +485,51 @@ def generate_phash_corpus_df(spark, n: int, dup_every: int = 7,
     def gen(it):
         for pdf in it:
             rows = []
-            for i in pdf["id"]:
-                idx = int(i)
-                base_px = pattern_pixels_for(
-                    f"pimg{idx:09d}", W_CHOICES[idx % 3], H_CHOICES[idx % 3]
+            for idx in map(int, pdf["id"]):
+                base_px = _base_pixels(idx)
+                rows.extend(
+                    phash_corpus_row(idx, dup, v, _base_px=base_px)
+                    for dup, v in _corpus_variants(idx, dup_every, variants)
                 )
-                rows.append(phash_corpus_row(idx, dup=False, _base_px=base_px))
-                if idx % dup_every == 0:
-                    for v in range(variants):
-                        rows.append(phash_corpus_row(
-                            idx, dup=True, variant=v, _base_px=base_px
-                        ))
             yield pd.DataFrame(rows)
 
     return rng.mapInPandas(gen, schema=PHASH_CORPUS_SCHEMA)
+
+
+def generate_phash_signatures_df(spark, n: int, dup_every: int = 7,
+                                 partitions: int | None = None,
+                                 variants: int = 1):
+    """The 256-bit wide signatures (image_id, h0..h3) of exactly the corpus
+    generate_phash_corpus_df emits, in ONE mapInPandas: each row is
+    synthesized, encoded in its codec, decoded again and hashed in-process,
+    and only the signature words leave the Python worker. Equal row for
+    row to `dhash_wide_images(generate_phash_corpus_df(...))`: the codec
+    round trip is kept (the lossy codec changes pixels), so the words are
+    those of the bytes the two-stage path would have shipped.
+
+    Why fused: the two-stage path runs two Python evaluations per task and
+    moves every encoded image through Arrow between them (36 MB for 2.3k
+    images), where a signature row is ~45 bytes. Removing that
+    boundary between chained UDFs is the CIDR 2022 "Accelerating Python
+    UDFs in Vectorized Query Execution" move. Queries that read pixels or
+    bytes keep the bytes-emitting generator."""
+    import pandas as pd
+
+    from ..operators.images import DHASH_WIDE_SCHEMA, WIDE_WORDS, wide_signature
+    from ..shipping import ensure_shipped
+
+    ensure_shipped(spark)
+    rng = spark.range(0, n, 1, partitions or _gen_partitions(spark, n))
+
+    def gen(it):
+        for pdf in it:
+            rows = []
+            for idx in map(int, pdf["id"]):
+                base_px = _base_pixels(idx)
+                for dup, v in _corpus_variants(idx, dup_every, variants):
+                    image_id, fmt, px = _corpus_pixels(idx, dup, v, base_px)
+                    px = decode(encode(px, fmt), fmt)
+                    rows.append((image_id, *wide_signature(px)))
+            yield pd.DataFrame(rows, columns=["image_id", *WIDE_WORDS])
+
+    return rng.mapInPandas(gen, schema=DHASH_WIDE_SCHEMA)

@@ -34,6 +34,7 @@ from ..operators.images import (
     dhash_wide_images,
     wide_band_explode,
 )
+from ..sources.parquet_footers import parquet_rows, rowgroup_stats
 
 
 # --- filesystem access: plain os for local paths, Hadoop FS for URI paths
@@ -299,53 +300,6 @@ _MAX_PUSHDOWN_KEYS_CONF = "spark.osm2mp.store.maxPushdownKeys"
 _DEFAULT_MAX_PUSHDOWN_KEYS = 50_000
 
 
-def _store_rowgroup_stats(path: str) -> tuple[int, int] | None:
-    """(total_rows, max_rowgroup_rows) from parquet footers — driver-side,
-    no Spark job. None when the path scheme can't be footer-read."""
-    try:
-        import pyarrow.parquet as pq
-
-        if _is_uri(path):
-            from pyarrow import fs as pafs
-
-            fsys, inner = pafs.FileSystem.from_uri(path)
-            files = [
-                f.path
-                for f in fsys.get_file_info(pafs.FileSelector(inner))
-                if f.path.endswith(".parquet")
-            ]
-            opener = lambda f: pq.ParquetFile(f, filesystem=fsys)  # noqa: E731
-        else:
-            files = [
-                os.path.join(path, f)
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            ]
-            opener = pq.ParquetFile
-        total, biggest = 0, 1
-        for f in files:
-            md = opener(f).metadata
-            total += md.num_rows
-            for i in range(md.num_row_groups):
-                biggest = max(biggest, md.row_group(i).num_rows)
-        return total, biggest
-    except Exception:
-        return None
-
-
-def _parquet_rows(spark: SparkSession, dirs: list[str]) -> int:
-    """Total rows of parquet dirs, summed from their footers — driver-side,
-    no Spark job. Falls back to a Spark count only for a path scheme
-    pyarrow cannot footer-read."""
-    total = 0
-    for d in dirs:
-        stats = _store_rowgroup_stats(d)
-        if stats is None:
-            return spark.read.parquet(*dirs).count()
-        total += stats[0]
-    return total
-
-
 def pruned_store_scan(
     spark: SparkSession, comp_dir: str, keys: list,
     key_col: str = "bandkey",
@@ -374,7 +328,7 @@ def pruned_store_scan(
         )
     )
     if len(keys) > max_keys:
-        stats = _store_rowgroup_stats(comp_dir)
+        stats = rowgroup_stats(comp_dir)
         if stats is None or len(keys) * stats[1] >= stats[0]:
             return df  # predicted pruned read ≥ full scan — scan once
     # deliberately a lasting session-conf change (NOT try/finally-restored):
@@ -784,7 +738,7 @@ def start_incremental_dedup(
                 allb = allb.unionByName(
                     banded_signatures(spark.read.parquet(*tail))
                 )
-                tail_rows = 8 * _parquet_rows(spark, tail)
+                tail_rows = 8 * parquet_rows(spark, tail)
             if comp is not None:
                 pruned = pruned_store_scan(spark, comp, keys)
                 allb = allb.unionByName(pruned)
@@ -859,7 +813,7 @@ def start_incremental_dedup(
         # per-partition lineage + metrics). Same idempotent overwrite layout
         # as the data; written LAST so a metrics row certifies a completed
         # batch.
-        n_pairs = _parquet_rows(spark, [out])
+        n_pairs = parquet_rows(spark, [out])
         secs = time.time() - t0
         _metrics_row(spark, (
             int(batch_id), n_new, n_pairs, float(secs),

@@ -795,6 +795,44 @@ class TestAdaptiveComponentsCrossover:
             # label = component minimum: no label exceeds its vertex
             assert all(l <= v for v, l in drv)
 
+    def test_both_sides_of_the_bound(self, spark):
+        """With exactly driverMaxEdges edges the driver union-find runs,
+        in ONE Spark job (the bounded pull, which also fills the lazy
+        edge checkpoint); with driverMaxEdges + 1 the distributed fixpoint
+        runs. Both label exactly like the distributed path."""
+        import random
+
+        from osm2mp_spark.operators.chains import min_label_components
+
+        rng = random.Random(20261017)
+        edges = [(rng.randrange(50), rng.randrange(50)) for _ in range(30)]
+        edges = [(a, b) for a, b in edges if a != b]
+        df = spark.createDataFrame(edges, "src long, dst long")
+        sc = spark.sparkContext
+        conf = "spark.osm2mp.components.driverMaxEdges"
+
+        def run(bound: int, tag: str):
+            spark.conf.set(conf, str(bound))
+            sc.setJobGroup(tag, tag)
+            try:
+                out = min_label_components(df)
+            finally:
+                sc.setJobGroup("", "")
+                spark.conf.unset(conf)
+            jobs = len(sc.statusTracker().getJobIdsForGroup(tag))
+            labels = sorted(
+                (int(r.vertex), int(r.label)) for r in out.collect()
+            )
+            return labels, jobs
+
+        dist, _ = run(0, "mlc-bound-dist")
+        at, at_jobs = run(len(edges), "mlc-bound-at")
+        above, above_jobs = run(len(edges) - 1, "mlc-bound-above")
+        assert at == dist
+        assert above == dist
+        assert at_jobs == 1
+        assert above_jobs > 1  # pull + one convergence job per round
+
     def test_driver_path_preserves_key_type(self, spark):
         from osm2mp_spark.operators.chains import min_label_components
 

@@ -625,3 +625,49 @@ class TestWideSignatures:
         assert (a.image_id == b.image_id).all()
         assert (a.cluster_id == b.cluster_id).all()
         assert (a.keep == b.keep).all()
+
+
+class TestFusedSignatureGenerator:
+    """generate_phash_signatures_df generates, encodes, decodes and hashes
+    in one mapInPandas. Its rows must equal the two-stage path's
+    (dhash_wide_images over generate_phash_corpus_df) exactly — the codec
+    round trip is kept, so the lossy codec's pixels are the ones hashed."""
+
+    @pytest.mark.parametrize(
+        "n,variants,partitions",
+        [(23, 1, 1), (23, 1, 3), (30, 2, 1), (30, 2, 4)],
+    )
+    def test_matches_two_stage_path(self, spark, n, variants, partitions):
+        from osm2mp_spark.operators.images import dhash_wide_images
+        from osm2mp_spark.sources.images import (
+            generate_phash_corpus_df,
+            generate_phash_signatures_df,
+        )
+
+        assert n % 7  # a partial dup_every period at the end
+        fused = generate_phash_signatures_df(
+            spark, n, partitions=partitions, variants=variants
+        )
+        two_stage = dhash_wide_images(generate_phash_corpus_df(
+            spark, n, partitions=partitions, variants=variants
+        ))
+        assert fused.schema == two_stage.schema
+        got = sorted(tuple(r) for r in fused.collect())
+        want = sorted(tuple(r) for r in two_stage.collect())
+        assert got == want
+        assert len(got) == n + variants * len(range(0, n, 7))
+        # every codec is in play, the lossy one included
+        assert {i % 3 for i in range(n)} == {0, 1, 2}
+
+    def test_one_python_stage_no_bytes(self, spark):
+        """One MapInPandas and no `bytes` attribute anywhere in the plan:
+        the encoded images never leave the Python worker."""
+        from osm2mp_spark.metrics import python_eval_counts
+        from osm2mp_spark.sources.images import generate_phash_signatures_df
+
+        df = generate_phash_signatures_df(spark, 10)
+        counts = python_eval_counts(df)
+        assert counts["MapInPandas"] == 1
+        assert sum(counts.values()) == 1
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "bytes" not in plan

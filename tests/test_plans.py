@@ -223,3 +223,75 @@ class TestConditionalBroadcast:
         finally:
             spark.conf.unset(key)
             spark.conf.set(auto, old_auto)
+
+
+class TestPythonStagesAndDriverJobs:
+    """Python worker evaluations and driver-side jobs of the image and PIP
+    hot paths: each Python evaluation costs a worker task per partition,
+    each driver job a scheduling round trip."""
+
+    @pytest.mark.parametrize("name", ["pip_city", "image_spatial_join"])
+    def test_pip_udf_evaluated_once(self, spark, sf_dir, name):
+        """pip_join(how="smallest") filters out unmatched points. Were the
+        null filter pushed below the projection, the executed plan would
+        hold two ArrowEvalPython nodes over the same _resolve call."""
+        import __spark_entry__ as E
+        from osm2mp_spark.metrics import python_eval_counts
+
+        df = E.queries()[name](spark, sf_dir)
+        df.collect()
+        assert python_eval_counts(df)["ArrowEvalPython"] == 1
+
+    def test_n_for_reads_footers_without_a_job(self, spark, sf_dir, tmp_path):
+        from osm2mp_spark.queries.images_q import _n_for
+        from osm2mp_spark.sources.parquet_footers import parquet_rows
+
+        sc = spark.sparkContext
+        sc.setJobGroup("n-for-footers", "n-for-footers")
+        try:
+            n = _n_for(spark, sf_dir)
+        finally:
+            sc.setJobGroup("", "")
+        assert sc.statusTracker().getJobIdsForGroup("n-for-footers") == []
+        assert n == spark.read.parquet(f"{sf_dir}/customer.parquet").count()
+        # a partitioned (nested) dir is not footer-summed: Spark counts it
+        nested = str(tmp_path / "nested")
+        spark.range(10).selectExpr("id", "id % 3 AS p").write.partitionBy(
+            "p"
+        ).parquet(nested)
+        assert parquet_rows(spark, [nested]) == 10
+
+    def test_flagship_dedup_builder_and_plan(self, spark, sf_dir):
+        """The builder sizes the corpus from footers (no schema-inference
+        or count job) and pulls the pair graph once: its only jobs are the
+        two shuffle-map stages of the banded pair join (band equi-join,
+        distinct) and the bounded pull. The executed plan reads the
+        signature checkpoint, so its one Python evaluation is the spatial
+        kernel, and no `bytes` column appears anywhere."""
+        import __spark_entry__ as E
+        from osm2mp_spark.metrics import python_eval_counts
+
+        # the session's first build also builds the cached BSP tile tree
+        E.queries()["flagship_dedup"](spark, sf_dir)
+        sc = spark.sparkContext
+        st = sc.statusTracker()
+        sc.setJobGroup("flagship-dedup-build", "flagship-dedup-build")
+        try:
+            df = E.queries()["flagship_dedup"](spark, sf_dir)
+        finally:
+            sc.setJobGroup("", "")
+        jobs = st.getJobIdsForGroup("flagship-dedup-build")
+        names = [
+            st.getStageInfo(s).name
+            for j in jobs for s in st.getJobInfo(j).stageIds
+            if st.getStageInfo(s) is not None
+        ]
+        assert len(jobs) == 3, names
+        assert not [n for n in names if n.startswith(("parquet at", "count at"))]
+        assert sum("chains.py" in n for n in names) == 1  # the bounded pull
+        df.collect()
+        counts = python_eval_counts(df)
+        assert counts["ArrowEvalPython"] == 1
+        assert sum(counts.values()) == 1
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "bytes" not in plan

@@ -1,7 +1,11 @@
 """Dump .explain('formatted') for named registry queries to plans/r06/.
 
 Usage: python tools/dump_plans.py <suffix> [query ...]
-Writes plans/r06/<query>_<suffix>.txt for each query (default: a fixed hot set).
+Writes plans/r06/<query>_<suffix>.txt for each query (default: a fixed hot set)
+and prints, per query, how many Python-evaluation operators its physical
+plan holds (ArrowEvalPython, MapInPandas, BatchEvalPython,
+FlatMapGroupsInPandas): each is one Python worker evaluation per task, so
+a UDF evaluated twice or an unfused Python stage shows up in the dump.
 """
 
 from __future__ import annotations
@@ -39,6 +43,8 @@ def main():
     import __spark_entry__ as entry
     from pyspark.sql import SparkSession
 
+    from osm2mp_spark.metrics import python_eval_counts
+
     qs = entry.queries()
     spark = (
         SparkSession.builder.master("local[8]")
@@ -61,7 +67,10 @@ def main():
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(plan)
-        print(f"wrote {path} ({len(plan)} chars)")
+        evals = python_eval_counts(df)
+        summary = " ".join(f"{k}={v}" for k, v in evals.items())
+        print(f"wrote {path} ({len(plan)} chars); python evals "
+              f"{sum(evals.values())}: {summary}")
     spark.stop()
 
 
