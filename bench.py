@@ -403,8 +403,9 @@ def _synthetic_wide_sigs(spark, n: int, dup_every: int = 7):
 
 def bench_dedup_scale(ns=(20_000, 60_000, 180_000)) -> dict:
     """Dedup throughput CURVE (VERDICT r03 ask): image near-dup detection at
-    several corpus sizes for both signature widths — 64-bit/9-bit-band
-    (phash_hamming_pairs) and 256-bit/32-bit-band (wide_hamming_pairs).
+    several corpus sizes for both signature widths — 64-bit multi-probe
+    16-bit bands (phash_hamming_pairs) and 256-bit/32-bit-band
+    (wide_hamming_pairs).
     Each timing covers generate → decode → hash → banded join → popcount,
     best-of-2 per point. images/sec per config shows how candidate volume
     (the 64-bit path's bucket-collision growth) bends the curve while the
@@ -424,9 +425,20 @@ def bench_dedup_scale(ns=(20_000, 60_000, 180_000)) -> dict:
     ensure_shipped(spark)
     app_id = spark.sparkContext.applicationId
 
-    from pyspark.sql import functions as F
+    from osm2mp_spark.operators.hamming import hamming_bands, hamming_layout
+    from osm2mp_spark.operators.images import WIDE_BITS, WIDE_WORDS
 
-    from osm2mp_spark.operators.images import band_explode, wide_band_explode
+    def candidates(sigs, wide: bool) -> int:
+        """Band-equi-join rows before distinct/popcount, from the same
+        banding the pair join uses (probe side against exact keys)."""
+        words, bits, h = ((WIDE_WORDS, WIDE_BITS, 7) if wide
+                          else (("dhash",), 64, 6))
+        layout = hamming_layout(bits, h)
+        l = hamming_bands(sigs, "image_id", words, layout, probe=True)
+        r = hamming_bands(sigs, "image_id", words, layout)
+        return (l.selectExpr("image_id AS ia", "bandkey")
+                .join(r.selectExpr("image_id AS ib", "bandkey"), "bandkey")
+                .filter("ia < ib").count())
 
     def one(n: int, wide: bool) -> dict:
         # hash stage (generate+decode+signature), materialized once
@@ -436,14 +448,9 @@ def bench_dedup_scale(ns=(20_000, 60_000, 180_000)) -> dict:
         sigs = kern(corpus).localCheckpoint(eager=True)
         hash_sec = time.time() - t0
         # CANDIDATE VOLUME — the number that decides 10^12-sig viability:
-        # band-equi-join rows before distinct/popcount. 9-bit bands
-        # (narrow64) put ~n/512 sigs in each bucket → quadratic growth;
-        # 32-bit bands (wide256) keep buckets ~n/2^32.
-        e = (wide_band_explode if wide else
-             lambda s: band_explode(s, max_hamming=6))(sigs)
-        l = e.select(F.col("image_id").alias("ia"), "band", "key")
-        r = e.select(F.col("image_id").alias("ib"), "band", "key")
-        cand = l.join(r, ["band", "key"]).filter(F.col("ia") < F.col("ib")).count()
+        # 16-bit probed bands (narrow64) put ~n/65536 sigs in each bucket,
+        # 32-bit bands (wide256) ~n/2^32.
+        cand = candidates(sigs, wide)
         # join stage best-of-2 over the cached signatures, with per-join
         # shuffle/spill byte ledgers (VERDICT r04 ask #7: the linear-vs-
         # quadratic witness as a RESOURCE claim, not just a candidate count)
@@ -485,10 +492,7 @@ def bench_dedup_scale(ns=(20_000, 60_000, 180_000)) -> dict:
     # unrelated-pair distance distribution.
     n_syn = int(os.environ.get("SPARK_GRAFT_DEDUP_SYNTH_N", "5000000"))
     sigs = _synthetic_wide_sigs(spark, n_syn).localCheckpoint(eager=True)
-    e = wide_band_explode(sigs)
-    l = e.select(F.col("image_id").alias("ia"), "band", "key")
-    r = e.select(F.col("image_id").alias("ib"), "band", "key")
-    cand = l.join(r, ["band", "key"]).filter(F.col("ia") < F.col("ib")).count()
+    cand = candidates(sigs, wide=True)
     join_sec, pairs, res = float("inf"), 0, {}
     for _ in range(2):
         df = wide_hamming_pairs(sigs, max_hamming=7)
@@ -608,6 +612,7 @@ def bench_inc_ledger(n_batches: int = 14, batch_images: int = 2_000,
 
     from osm2mp_spark.sources.images import generate_phash_corpus_df
     from osm2mp_spark.streaming.dedup import (
+        STORE_LAYOUT,
         compact_store,
         read_batch_metrics,
         read_store_signatures,
@@ -687,8 +692,8 @@ def bench_inc_ledger(n_batches: int = 14, batch_images: int = 2_000,
             "read_mb": round(int(r.read_bytes) / 2**20, 1),
             "store_rows_scanned": int(r.store_rows_scanned),
             # banded store rows existing when this batch ran (what the old
-            # layout re-read in full): 8 bands × images landed before it
-            "store_banded_rows_before": int(8 * sum(
+            # layout re-read in full): bands × images landed before it
+            "store_banded_rows_before": int(len(STORE_LAYOUT.bands) * sum(
                 m.n_images[m.batch_id < r.batch_id]
             )),
         }

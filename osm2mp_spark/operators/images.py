@@ -20,9 +20,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 
 from ..sources.images import caption_for, decode, phash_for, pixels_for
+from .hamming import hamming_bands, hamming_layout, hamming_pairs
 
 VERIFY_SCHEMA = (
     "image_id string, fmt string, pixels_ok boolean, psnr double, "
@@ -220,21 +221,6 @@ def sample_frames(df: DataFrame, every_n: int = 10) -> DataFrame:
 DHASH_SCHEMA = "image_id string, dhash long"
 
 
-def hamming_band_layout(max_hamming: int, bits: int = 64) -> list[tuple[int, int]]:
-    """(offset, width) per band for the pigeonhole banding: `max_hamming + 1`
-    contiguous bands covering all bits. Any pair within Hamming distance
-    max_hamming differs in at most max_hamming bands, so at least one band
-    matches exactly — the band equi-join is LOSSLESS for the threshold
-    (the same argument as the simhash banding, queries/dedup.py)."""
-    nb = max_hamming + 1
-    widths = [bits // nb + (1 if i < bits % nb else 0) for i in range(nb)]
-    out, off = [], 0
-    for wd in widths:
-        out.append((off, wd))
-        off += wd
-    return out
-
-
 def dhash_images(df: DataFrame) -> DataFrame:
     """Pooled 64-bit difference hash over decoded pixels — the real
     perceptual hash behind the input_hint's `phash` column (the fact-table
@@ -329,6 +315,7 @@ WIDE_GEOMETRIES = (
 
 DHASH_WIDE_SCHEMA = "image_id string, h0 long, h1 long, h2 long, h3 long"
 WIDE_WORDS = ("h0", "h1", "h2", "h3")
+WIDE_BITS = 64 * len(WIDE_WORDS)
 
 
 def wide_signature(px: np.ndarray) -> tuple[int, int, int, int]:
@@ -368,162 +355,29 @@ def dhash_wide_images(df: DataFrame) -> DataFrame:
 
 def wide_band_explode(sigs: DataFrame) -> DataFrame:
     """(image_id, h0..h3) → 8 word-aligned 32-bit band rows
-    (image_id, h0..h3, band, key). Pigeonhole over 8 bands is lossless for
-    Hamming ≤ 7 across the 256 bits; each band key has 2^32 distinct
-    values, so per-band bucket population stays ~n/4.3e9 — at 10^12
-    signatures that is ~230 rows per bucket, keeping the band equi-join
-    near-linear where 64-bit/9-bit banding went bucket-quadratic."""
-    from pyspark.sql import functions as F
-
-    bands = []
-    for i in range(8):
-        word = WIDE_WORDS[i // 2]
-        key = (
-            F.shiftrightunsigned(word, 32)
-            if i % 2 == 0
-            else F.col(word).bitwiseAND(F.lit(0xFFFFFFFF))
-        )
-        bands.append(
-            F.struct(F.lit(i).alias("band"), key.alias("key"))
-        )
-    return sigs.select(
-        "image_id", *WIDE_WORDS, F.explode(F.array(*bands)).alias("b")
-    ).select("image_id", *WIDE_WORDS, "b.band", "b.key")
-
-
-def _wide_hamming_expr(a_prefix: str, b_prefix: str) -> str:
-    return " + ".join(
-        f"bit_count({a_prefix}{w} ^ {b_prefix}{w})" for w in WIDE_WORDS
+    (image_id, h0..h3, band, key): the (band, key) view of the operator's
+    `bandkey = band·2^32 + key` (operators.hamming). Each band key has 2^32
+    distinct values, so per-band bucket population stays ~n/4.3e9."""
+    layout = hamming_layout(WIDE_BITS, 7)
+    return hamming_bands(sigs, "image_id", WIDE_WORDS, layout).select(
+        "image_id", *WIDE_WORDS,
+        F.shiftright("bandkey", layout.key_bits).cast("int").alias("band"),
+        F.col("bandkey").bitwiseAND((1 << layout.key_bits) - 1).alias("key"),
     )
 
 
 def wide_hamming_pairs(sigs: DataFrame, max_hamming: int = 7) -> DataFrame:
-    """Near-duplicate pairs over 256-bit wide signatures: 32-bit-band
-    equi-join candidates → exact 4-word popcount filter. Lossless for
-    max_hamming ≤ 7 (8 bands). The at-scale configuration of the image
-    dedup family — the 64-bit path (phash_hamming_pairs) remains the
-    low-memory variant for small corpora."""
-    from pyspark.sql import functions as F
-
-    if max_hamming > 7:
-        raise ValueError("8-band pigeonhole is lossless only to Hamming 7")
-    e = wide_band_explode(sigs)
-    left = e.select(
-        F.col("image_id").alias("id_a"),
-        *[F.col(w).alias(f"a{w}") for w in WIDE_WORDS],
-        "band", "key",
-    )
-    right = e.select(
-        F.col("image_id").alias("id_b"),
-        *[F.col(w).alias(f"b{w}") for w in WIDE_WORDS],
-        "band", "key",
-    )
-    return (
-        left.join(right, ["band", "key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", *[f"a{w}" for w in WIDE_WORDS],
-                *[f"b{w}" for w in WIDE_WORDS])
-        .distinct()  # close pairs collide in several bands — emit once
-        .withColumn(
-            "hamming", F.expr(f"CAST({_wide_hamming_expr('a', 'b')} AS INT)")
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
-
-
-def band_explode(sigs: DataFrame, max_hamming: int) -> DataFrame:
-    """(image_id, dhash) → one row per pigeonhole band:
-    (image_id, dhash, band, key). The single source of the banding used by
-    every Hamming join (pairs, ANN top-k) — tuning the layout here keeps
-    all consumers lossless together."""
-    from pyspark.sql import functions as F
-
-    bands = [
-        F.struct(
-            F.lit(i).alias("band"),
-            F.shiftrightunsigned("dhash", off)
-            .bitwiseAND(F.lit((1 << wd) - 1))
-            .alias("key"),
-        )
-        for i, (off, wd) in enumerate(hamming_band_layout(max_hamming))
-    ]
-    return sigs.select(
-        "image_id", "dhash", F.explode(F.array(*bands)).alias("b")
-    ).select("image_id", "dhash", "b.band", "b.key")
-
-
-def probe_explode64(sigs: DataFrame, errors_per_band: int) -> DataFrame:
-    """(image_id, dhash) → multi-probe rows (image_id, dhash, band, key)
-    over 4 disjoint 16-bit bands: each band's exact key plus, when
-    errors_per_band == 1, the 16 single-bit flips of it (17 probes/band).
-    With errors_per_band == 0 this is the plain 4×16-bit exact banding
-    (4 rows/signature)."""
-    from pyspark.sql import functions as F
-
-    if errors_per_band not in (0, 1):
-        raise ValueError("probe_explode64 supports 0 or 1 errors per band")
-    structs = []
-    for b in range(4):
-        key = f"(shiftrightunsigned(dhash, {b * 16}) & 65535)"
-        probes = [key]
-        if errors_per_band == 1:
-            probes += [f"({key} ^ {1 << j})" for j in range(16)]
-        structs += [
-            f"named_struct('band', {b}, 'key', CAST({p} AS BIGINT))"
-            for p in probes
-        ]
-    return sigs.selectExpr(
-        "image_id", "dhash", f"explode(array({', '.join(structs)})) AS b"
-    ).selectExpr("image_id", "dhash", "b.band AS band", "b.key AS key")
+    """Near-duplicate pairs (id_a < id_b, hamming) over 256-bit wide
+    signatures — the at-scale configuration of the image dedup family.
+    Lossless for max_hamming ≤ 7; above it raises."""
+    return hamming_pairs(sigs, id_col="image_id", words=WIDE_WORDS,
+                         bits=WIDE_BITS, max_hamming=max_hamming)
 
 
 def phash_hamming_pairs(sigs: DataFrame, max_hamming: int = 6) -> DataFrame:
-    """Near-duplicate image pairs over 64-bit perceptual hashes — output
-    EQUALS the all-pairs Hamming join the DuckDB oracle runs.
-
-    For max_hamming ≤ 7 the candidate generator is a MULTI-PROBE equi-join
-    over 4 disjoint 16-bit bands: by pigeonhole a pair ≤ 7 bits apart has a
-    band with ≤ floor(max_hamming/4) ≤ 1 differing bits, so probing each
-    signature's 16 single-bit band flips (plus the exact key) against the
-    other side's exact 16-bit keys is LOSSLESS — and the 2^16 keys keep
-    per-band buckets ~n/65536, ~12× fewer candidate rows than the
-    max_hamming+1-band layout whose ~9-bit keys go bucket-quadratic
-    (measured 378M candidates at 206k sigs vs ~31M probed; BENCH §1a / r6).
-    Every candidate still passes the exact popcount ≤ max_hamming filter.
-
-    Thresholds above 7 fall back to the classic max_hamming+1 contiguous
-    banding (hamming_band_layout), which stays lossless for any
-    threshold."""
-    from pyspark.sql import functions as F
-
-    if max_hamming <= 7:
-        probes = probe_explode64(sigs, errors_per_band=max_hamming // 4)
-        exact = probe_explode64(sigs, errors_per_band=0)
-        left = probes.select(
-            F.col("image_id").alias("id_a"), F.col("dhash").alias("ha"),
-            "band", "key",
-        )
-        right = exact.select(
-            F.col("image_id").alias("id_b"), F.col("dhash").alias("hb"),
-            "band", "key",
-        )
-    else:
-        e = band_explode(sigs, max_hamming)
-        left = e.select(
-            F.col("image_id").alias("id_a"), F.col("dhash").alias("ha"),
-            "band", "key",
-        )
-        right = e.select(
-            F.col("image_id").alias("id_b"), F.col("dhash").alias("hb"),
-            "band", "key",
-        )
-    return (
-        left.join(right, ["band", "key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "ha", "hb")
-        .distinct()  # a close pair collides in several bands — emit once
-        .withColumn("hamming", F.expr("CAST(bit_count(ha ^ hb) AS INT)"))
-        .filter(F.col("hamming") <= max_hamming)
-        .drop("ha", "hb")
-    )
+    """Near-duplicate pairs (id_a < id_b, hamming) over 64-bit perceptual
+    hashes: multi-probe 4×16-bit banding for max_hamming ≤ 7, classic
+    max_hamming + 1 bands above. Output EQUALS the all-pairs Hamming join
+    the DuckDB oracle runs."""
+    return hamming_pairs(sigs, id_col="image_id", words=("dhash",), bits=64,
+                         max_hamming=max_hamming)

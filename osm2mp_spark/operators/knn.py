@@ -2,15 +2,9 @@
 reference's containment-only addressing (`lib/OsmAddress.pm:207-213`): points
 contained by no city get the nearest city instead.
 
-Two physical strategies:
-
-- `knn_bruteforce`: pure JVM — broadcast the (tiny) anchor table, cross-join,
-  `min_by` on the packed (distance, id) key. Zero Python; Catalyst turns it
-  into BroadcastNestedLoopJoin + a map-side-combinable aggregation. Right
-  choice while anchors ≤ a few thousand (our city layer).
-- `knn_celltree`: Arrow UDF descending a broadcast KD-tree (scipy-free,
-  numpy heap) — the scale path when the anchor set itself is large. Same
-  semantics; used by the flagship at bench scale.
+`knn_bruteforce` is a pure JVM expression argmin over a literal anchor
+set: zero Python, zero shuffle. It serves `knn_city` and the flagship
+(plans.flagship), whose anchors are the city layer.
 
 Distance: squared lat-corrected planar metric when `lat_correct=True`
 (reference metric osm2mp.pl:1151-1157); plain squared degrees otherwise —
@@ -20,8 +14,6 @@ across engines).
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 
@@ -37,7 +29,7 @@ def knn_bruteforce(
     array_min(array(struct(d2_i, id_i))) — struct ordering gives the
     (distance asc, id asc) tiebreak. Zero shuffle, zero Python, whole-stage
     codegen; profiled ~40× faster than crossJoin+min_by at 600k rows.
-    Right choice while anchors ≤ a few hundred; beyond that use knn_celltree."""
+    Right choice while anchors ≤ a few hundred."""
     structs = []
     for aid, ax, ay in anchors:
         d2 = (
@@ -51,117 +43,3 @@ def knn_bruteforce(
         F.col("__nn.aid").alias(out_id),
         F.col("__nn.d2").alias(out_dist),
     ).drop("__nn")
-
-
-class _KDTree:
-    """Minimal numpy KD-tree (build once on driver, broadcast, query in UDF)."""
-
-    def __init__(self, ids: list[str], xs: np.ndarray, ys: np.ndarray):
-        self.ids = np.asarray(ids, dtype=object)
-        self.pts = np.column_stack([np.asarray(xs, float), np.asarray(ys, float)])
-        n = len(self.ids)
-        self.idx = np.argsort(self.pts[:, 0], kind="stable").astype(np.int64)
-        # flat balanced KD-tree as an index array (median splits)
-        self.order = np.empty(n, dtype=np.int64)
-        self.axis = np.empty(n, dtype=np.int8)
-        self._pos = 0
-
-        def build(items: np.ndarray, depth: int):
-            if len(items) == 0:
-                return -1
-            ax = depth % 2
-            srt = items[np.argsort(self.pts[items, ax], kind="stable")]
-            mid = len(srt) // 2
-            my = self._pos
-            self._pos += 1
-            self.order[my] = srt[mid]
-            self.axis[my] = ax
-            left = build(srt[:mid], depth + 1)
-            right = build(srt[mid + 1 :], depth + 1)
-            return my, left, right
-
-        # store as nested tuples is fine (small); but keep arrays for pickle size
-        self.tree = build(np.arange(n, dtype=np.int64), 0)
-
-    def query(self, qx: np.ndarray, qy: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """1-NN ids + squared distances, ties by id (deterministic —
-        the result is min over anchors by (distance, id), so it matches
-        brute force exactly).
-
-        Fully VECTORIZED iterative branch-and-bound: an explicit stack of
-        (node, point-index-subset, far-side-bound) entries. Each pop
-        evaluates one tree node against its whole surviving point subset
-        in numpy; far-side entries re-filter their subset against the
-        CURRENT best bound at pop time (the stack discipline — far pushed
-        before near — guarantees the near subtree has already tightened
-        the bound). No per-point Python loop anywhere."""
-        qx = np.asarray(qx, dtype=np.float64)
-        qy = np.asarray(qy, dtype=np.float64)
-        n = len(qx)
-        pts = self.pts
-        ids = self.ids
-        best_d = np.full(n, np.inf)
-        best_i = np.zeros(n, dtype=np.int64)
-
-        stack: list[tuple] = [(self.tree, np.arange(n), None)]
-        while stack:
-            node, sel, bound = stack.pop()
-            if node == -1 or node is None or len(sel) == 0:
-                continue
-            if bound is not None:
-                keep = bound <= best_d[sel]
-                sel = sel[keep]
-                if len(sel) == 0:
-                    continue
-            my, left, right = node
-            i = int(self.order[my])
-            dx = qx[sel] - pts[i, 0]
-            dy = qy[sel] - pts[i, 1]
-            d = dx * dx + dy * dy
-            bd = best_d[sel]
-            upd = (d < bd) | ((d == bd) & (ids[i] < ids[best_i[sel]]))
-            us = sel[upd]
-            best_d[us] = d[upd]
-            best_i[us] = i
-            ax = int(self.axis[my])
-            delta = (qx[sel] if ax == 0 else qy[sel]) - pts[i, ax]
-            near_left = delta < 0
-            d2 = delta * delta
-            # far sides first (LIFO → processed after the near subtrees)
-            stack.append((right, sel[near_left], d2[near_left]))
-            stack.append((left, sel[~near_left], d2[~near_left]))
-            stack.append((left, sel[near_left], None))
-            stack.append((right, sel[~near_left], None))
-
-        return ids[best_i], best_d
-
-
-def knn_celltree(
-    df: DataFrame,
-    anchors: list[tuple[str, float, float]],
-    lon: str = "lon",
-    lat: str = "lat",
-    out_id: str = "nearest_id",
-    out_dist: str = "dist_sq",
-) -> DataFrame:
-    """1-NN via broadcast KD-tree in an Arrow UDF (scale path)."""
-    from ..shipping import ensure_shipped
-
-    ensure_shipped(df.sparkSession)
-    ids = [a[0] for a in anchors]
-    xs = np.array([a[1] for a in anchors])
-    ys = np.array([a[2] for a in anchors])
-    tree = _KDTree(ids, xs, ys)
-    btree = df.sparkSession.sparkContext.broadcast(tree)
-
-    @F.pandas_udf("nearest_id string, dist_sq double")
-    def _nn(lon_s: pd.Series, lat_s: pd.Series) -> pd.DataFrame:
-        nid, d = btree.value.query(lon_s.to_numpy(), lat_s.to_numpy())
-        return pd.DataFrame({"nearest_id": nid, "dist_sq": d})
-
-    res = df.withColumn("__nn", _nn(F.col(lon), F.col(lat)))
-    return (
-        res.withColumn(out_id, F.col("__nn.nearest_id"))
-        .withColumn(out_dist, F.col("__nn.dist_sq"))
-        .drop("__nn")
-    )

@@ -124,40 +124,6 @@ def assign_tiles_bsp(
     return df.withColumn(out_col, _tile(F.col(lon), F.col(lat)))
 
 
-def bsp_tile_expr(tree: BSPTileTree, lon: str, lat: str) -> str:
-    """The BSP descent compiled to a nested CASE expression — pure JVM
-    whole-stage codegen, no broadcast, no Python. Right lane while the tree
-    is small (≤ ~1000 nodes; depth ~log2(leaves) comparisons per row);
-    the Arrow descent (`assign_tiles_bsp`) remains for huge trees."""
-
-    def emit(i: int) -> str:
-        if tree.axis[i] < 0:
-            return str(int(tree.tile_id[i]))
-        coord = lon if tree.axis[i] == 0 else lat
-        return (
-            f"(CASE WHEN {coord} >= {float(tree.value[i])!r} "
-            f"THEN {emit(int(tree.right[i]))} ELSE {emit(int(tree.left[i]))} END)"
-        )
-
-    return emit(0)
-
-
-def assign_tiles_bsp_sql(
-    df: DataFrame,
-    tree: BSPTileTree,
-    lon: str = "lon",
-    lat: str = "lat",
-    out_col: str = "tile_id",
-    max_inline_nodes: int = 1024,
-) -> DataFrame:
-    """Planner: small tree → inline CASE expression; huge tree → Arrow UDF."""
-    if len(tree.axis) <= max_inline_nodes:
-        return df.withColumn(
-            out_col, F.expr(f"CAST({bsp_tile_expr(tree, lon, lat)} AS INT)")
-        )
-    return assign_tiles_bsp(df, tree, lon=lon, lat=lat, out_col=out_col)
-
-
 def assign_tiles_grid(
     df: DataFrame, lon: str = "lon", lat: str = "lat", nx: int = 16, ny: int = 16,
     out_col: str = "tile_id",

@@ -339,46 +339,23 @@ WHERE bit_count(CAST(xor(a.simhash, b.simhash) AS BIGINT)) <= 6
 def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs: 32-bit signatures, Hamming ≤ 6.
 
-    Scale shape — banded equi-join, NOT all-pairs: the 32 bits split into
-    7 bands (widths 5,5,5,5,4,4,4). By pigeonhole, two signatures ≤6 bits
-    apart have at least one band with ZERO differing bits, so the union of
-    per-band (band_no, band_bits) equi-joins is a LOSSLESS candidate set;
-    the exact popcount filter then reproduces the all-pairs result
-    bit-for-bit (the oracle stays the all-pairs SQL — the gate proves the
-    rewrite). Per-band buckets hold n/2^width docs, so the join never
-    degenerates into a cartesian product."""
-    sh = dedup_simhash(spark, sf_dir)
-    widths = [5, 5, 5, 5, 4, 4, 4]  # 7 bands > 6 max differing bits
-    offsets = [sum(widths[:i]) for i in range(len(widths))]
-    band_structs = ", ".join(
-        f"named_struct('band_no', {i}, 'band_val', "
-        f"shiftright(simhash, {off}) & {(1 << w) - 1})"
-        for i, (off, w) in enumerate(zip(offsets, widths))
+    Scale shape — banded equi-join, NOT all-pairs: operators.hamming picks
+    the classic 7-band layout (widths 5,5,5,5,4,4,4), lossless by
+    pigeonhole, and the exact popcount filter reproduces the all-pairs
+    result bit-for-bit (the oracle stays the all-pairs SQL — the gate
+    proves the rewrite). Per-band buckets hold n/2^width docs, so the join
+    never degenerates into a cartesian product."""
+    return _simhash_pairs(dedup_simhash(spark, sf_dir), bits=32)
+
+
+def _simhash_pairs(sh: DataFrame, bits: int) -> DataFrame:
+    from ..operators.hamming import hamming_pairs
+
+    return hamming_pairs(
+        sh, id_col="doc_id", words=("simhash",), bits=bits, max_hamming=6
+    ).select(
+        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"), "hamming"
     )
-    bd = sh.select(
-        "doc_id",
-        "simhash",
-        F.explode(F.expr(f"array({band_structs})")).alias("bv"),
-    ).select("doc_id", "simhash", "bv.band_no", "bv.band_val")
-    a = bd.alias("a")
-    b = bd.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_no") == F.col("b.band_no"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.expr("CAST(bit_count(a.simhash ^ b.simhash) AS INT)").alias(
-                "hamming"
-            ),
-        )
-        .distinct()  # a pair can collide in several bands
-    )
-    return cand.filter("hamming <= 6")
 
 
 # ---------------------------------------------------------------------------
@@ -427,35 +404,7 @@ def simhash_wide_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pigeonhole equi-join (widths 9,9,9,9,8,8,8 → per-band buckets hold
     n/2^8..n/2^9 docs). Oracle stays the all-pairs SQL, proving the
     banding rewrite at the wider signature too."""
-    sh = _simhash_df(_docs(spark, sf_dir), n_hex=15)
-    widths = [9, 9, 9, 9, 8, 8, 8]  # 7 bands > 6 max differing bits
-    offsets = [sum(widths[:i]) for i in range(len(widths))]
-    band_structs = ", ".join(
-        f"named_struct('band_no', {i}, 'band_val', "
-        f"shiftright(simhash, {off}) & {(1 << w) - 1})"
-        for i, (off, w) in enumerate(zip(offsets, widths))
-    )
-    bd = sh.select(
-        "doc_id", "simhash",
-        F.explode(F.expr(f"array({band_structs})")).alias("bv"),
-    ).select("doc_id", "simhash", "bv.band_no", "bv.band_val")
-    a = bd.alias("a")
-    b = bd.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_no") == F.col("b.band_no"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.expr("CAST(bit_count(a.simhash ^ b.simhash) AS INT)").alias("hamming"),
-        )
-        .distinct()
-        .filter("hamming <= 6")
-    )
+    return _simhash_pairs(_simhash_df(_docs(spark, sf_dir), n_hex=15), bits=60)
 
 
 # ---------------------------------------------------------------------------

@@ -389,40 +389,38 @@ def image_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Similarity search over the image payload: per-query top-k nearest
     images by perceptual-hash Hamming distance (k=3 within distance 6).
     The query set (every planted variant) broadcast-joins the corpus
-    through the pigeonhole bands — never a cartesian — then an exact
-    popcount + deterministic (hamming, neighbor_id) window rank. The
-    image-payload face of the ANN family (ann_cosine_topk et al.)."""
-    from pyspark.sql import Window
-
-    from ..operators.images import band_explode, dhash_images
+    through operators.hamming's multi-probe 16-bit bands — never a
+    cartesian — then an exact popcount + deterministic (hamming,
+    neighbor_id) window rank. The image-payload face of the ANN family
+    (ann_cosine_topk et al.)."""
+    from ..operators.images import dhash_images
     from ..sources.images import generate_phash_corpus_df
-
-    from ..plans.hints import maybe_broadcast
 
     n = _n_for(spark, sf_dir)
     corpus = generate_phash_corpus_df(spark, n, variants=2)
     sigs = dhash_images(corpus).localCheckpoint(eager=False)
+    return _hamming_topk(sigs, n, ("dhash",), bits=64, max_hamming=6)
 
-    e = band_explode(sigs, max_hamming=6)
-    qs = e.filter("image_id LIKE '%d' OR image_id LIKE '%e'").select(
-        F.col("image_id").alias("query_id"), F.col("dhash").alias("qh"),
-        "band", "key",
-    )
-    # The query side is corpus-derived (~2/7 of images × 7 band rows), so
-    # the broadcast must be size-gated: est rows = 2n upper bound.
-    cand = (
-        maybe_broadcast(qs, est_rows=2 * n).join(
-            e.select(
-                F.col("image_id").alias("neighbor_id"),
-                F.col("dhash").alias("nh"), "band", "key",
-            ),
-            ["band", "key"],
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", "qh", "nh")
-        .distinct()
-        .withColumn("hamming", F.expr("CAST(bit_count(qh ^ nh) AS INT)"))
-        .filter(F.col("hamming") <= 6)
+
+def _hamming_topk(sigs: DataFrame, n: int, words, bits: int,
+                  max_hamming: int) -> DataFrame:
+    """Per-query top-3 neighbors within `max_hamming`: the query set (every
+    planted variant, ids ending in d/e) is the probe side of a directed
+    banded join, broadcast under a size gate — never a cartesian — then
+    ranked by (hamming, neighbor_id). Queries are the 2 variants of every
+    7th original: at most 2·ceil(n/7) signatures."""
+    from pyspark.sql import Window
+
+    from ..operators.hamming import hamming_pairs
+
+    qs = sigs.filter("image_id LIKE '%d' OR image_id LIKE '%e'")
+    cand = hamming_pairs(
+        qs, sigs, id_col="image_id", words=words, bits=bits,
+        max_hamming=max_hamming, rule="directed",
+        broadcast_left_sigs=2 * ((n + 6) // 7),
+    ).select(
+        F.col("id_a").alias("query_id"), F.col("id_b").alias("neighbor_id"),
+        "hamming",
     )
     w = Window.partitionBy("query_id").orderBy("hamming", "neighbor_id")
     return (
@@ -532,48 +530,14 @@ def image_ann_topk_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance 7): size-gated broadcast of the banded query side, 32-bit-band
     equi-join (never cartesian), exact 4-word popcount, deterministic
     (hamming, neighbor_id) window rank. The at-scale ANN configuration."""
-    from pyspark.sql import Window
-
-    from ..operators.images import WIDE_WORDS, wide_band_explode
-    from ..plans.hints import maybe_broadcast
+    from ..operators.images import WIDE_BITS, WIDE_WORDS
     from ..sources.images import generate_phash_signatures_df
 
     n = _n_for(spark, sf_dir)
     sigs = generate_phash_signatures_df(
         spark, n, variants=2
     ).localCheckpoint(eager=False)
-
-    e = wide_band_explode(sigs)
-    qs = e.filter("image_id LIKE '%d' OR image_id LIKE '%e'").select(
-        F.col("image_id").alias("query_id"),
-        *[F.col(w).alias(f"q{w}") for w in WIDE_WORDS],
-        "band", "key",
-    )
-    ham = " + ".join(f"bit_count(q{w} ^ n{w})" for w in WIDE_WORDS)
-    # query side is corpus-derived (~2/7 of images × 8 band rows) → gated
-    cand = (
-        maybe_broadcast(qs, est_rows=3 * n).join(
-            e.select(
-                F.col("image_id").alias("neighbor_id"),
-                *[F.col(w).alias(f"n{w}") for w in WIDE_WORDS],
-                "band", "key",
-            ),
-            ["band", "key"],
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id",
-                *[f"q{w}" for w in WIDE_WORDS],
-                *[f"n{w}" for w in WIDE_WORDS])
-        .distinct()
-        .withColumn("hamming", F.expr(f"CAST({ham} AS INT)"))
-        .filter(F.col("hamming") <= 7)
-    )
-    w = Window.partitionBy("query_id").orderBy("hamming", "neighbor_id")
-    return (
-        cand.withColumn("rnk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rnk") <= 3)
-        .select("query_id", "neighbor_id", "hamming", "rnk")
-    )
+    return _hamming_topk(sigs, n, WIDE_WORDS, bits=WIDE_BITS, max_hamming=7)
 
 
 def _wide_clusters_oracle(max_hamming: int = 7) -> str | None:

@@ -124,7 +124,11 @@ def update_clusters(
     )
 
     _SPARK_FOR_FS[0] = spark
-    kdf = pairs.selectExpr(f"{key_expr_a} AS ka", f"{key_expr_b} AS kb")
+    # a self-loop links nothing: drop it before the guard so both paths
+    # below see the same edges (the spanning-edge path cannot carry one)
+    kdf = pairs.selectExpr(
+        f"{key_expr_a} AS ka", f"{key_expr_b} AS kb"
+    ).filter("ka != kb")
     max_edges = int(
         spark.conf.get(_DRIVER_EDGES_CONF, str(_DEFAULT_DRIVER_EDGES))
     )

@@ -28,13 +28,20 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..operators.hamming import hamming_bands, hamming_join, hamming_layout
 from ..operators.images import (
     DHASH_WIDE_SCHEMA,
+    WIDE_BITS,
     WIDE_WORDS,
     dhash_wide_images,
-    wide_band_explode,
 )
 from ..sources.parquet_footers import parquet_rows, rowgroup_stats
+
+# The compacted store's banded layout: one row per (signature, band) with
+# operators.hamming's `bandkey = band·2^32 + key` (8 word-aligned bands,
+# bandkey < 2^35). The 256-bit layout is the same at every threshold ≤ 7,
+# so one compacted store serves any stream threshold.
+STORE_LAYOUT = hamming_layout(WIDE_BITS, 7)
 
 
 # --- filesystem access: plain os for local paths, Hadoop FS for URI paths
@@ -226,7 +233,7 @@ def _store_dirs(root: str, below: int | None = None) -> list[str]:
     batches, so a (re)processed batch id can sit AT the horizon (n ==
     below + 1: certified-but-uncommitted crash window — safe, because the
     replayed batch's signatures appearing both fresh and inside the
-    compacted dir collapse in pairs_touching's canonical distinct) but
+    compacted dir collapse in the store join's canonical distinct) but
     never BELOW it; n > below + 1 means the store was compacted while the
     stream ran, which WOULD silently change join inputs — refuse."""
     comp, n = _compacted_dir(root)
@@ -246,15 +253,12 @@ def _store_dirs(root: str, below: int | None = None) -> list[str]:
 
 
 def banded_signatures(sigs: DataFrame) -> DataFrame:
-    """Signature rows → the banded store layout: one row per (signature,
-    band) with `bandkey = band·2^32 + key` packed into a single int64 (band
-    0-7, key unsigned 32-bit ⇒ bandkey < 2^35), so ONE sorted column
+    """Signature rows → the banded store layout (STORE_LAYOUT), bandkey
+    first as compacted stores hold it on disk, so ONE sorted column
     carries the whole band-join key and parquet row-group min/max stats on
     it line up with band buckets."""
-    return wide_band_explode(sigs).select(
-        (F.col("band").cast("long") * F.lit(1 << 32) + F.col("key"))
-        .alias("bandkey"),
-        "image_id", *WIDE_WORDS,
+    return hamming_bands(sigs, "image_id", WIDE_WORDS, STORE_LAYOUT).select(
+        "bandkey", "image_id", *WIDE_WORDS
     )
 
 
@@ -269,7 +273,7 @@ def read_store_signatures(spark: SparkSession, root: str) -> DataFrame:
     if comp is not None:
         parts.append(
             spark.read.parquet(comp)
-            .filter(F.col("bandkey") < F.lit(1 << 32))
+            .filter(F.col("bandkey") < F.lit(1 << STORE_LAYOUT.key_bits))
             .select(*cols)
         )
     tail = [
@@ -306,10 +310,11 @@ def pruned_store_scan(
 ) -> DataFrame:
     """Scan of a compacted store bounded by a point-key set: the store is
     range-sorted by `key_col` (compact_store / compact_topk_state), so
-    pushing the ≤ 8·|batch| point keys as parquet In filters prunes to the
-    row groups whose [min,max] contain a key — per-batch bytes read is
-    O(|batch| · row_group_size), independent of store size (the r4 verdict
-    weak item: the previous layout re-read the WHOLE store every batch).
+    pushing the batch's point keys (8 per signature) as parquet In filters
+    prunes to the row groups whose [min,max] contain a key — per-batch
+    bytes read is O(|batch| · row_group_size), independent of store size
+    (the r4 verdict weak item: the previous layout re-read the WHOLE store
+    every batch).
     Measured via /proc rchar: 800 keys against an 80M-row store read 70 MB
     vs 2,582 MB for the full scan, flat as the store grows.
 
@@ -497,59 +502,6 @@ def compact_store(
     return horizon
 
 
-def pairs_touching(new_sigs: DataFrame, all_sigs: DataFrame,
-                   max_hamming: int = 7) -> DataFrame:
-    """Wide-banded Hamming pairs with at least one side in `new_sigs`
-    (all_sigs ⊇ new_sigs) — signature-layout convenience wrapper around
-    pairs_touching_banded."""
-    return pairs_touching_banded(
-        banded_signatures(new_sigs), banded_signatures(all_sigs), max_hamming
-    )
-
-
-def pairs_touching_banded(new_banded: DataFrame, all_banded: DataFrame,
-                          max_hamming: int = 7) -> DataFrame:
-    """Wide-banded Hamming pairs with at least one side in `new_banded`
-    (all_banded ⊇ new_banded, both in the banded store layout). Canonical
-    (least, greatest) id ordering so a same-batch pair found from both
-    sides dedupes to one row."""
-    ln = new_banded.select(
-        F.col("image_id").alias("nid"),
-        *[F.col(w).alias(f"n{w}") for w in WIDE_WORDS],
-        "bandkey",
-    )
-    ra = all_banded.select(
-        F.col("image_id").alias("aid"),
-        *[F.col(w).alias(f"a{w}") for w in WIDE_WORDS],
-        "bandkey",
-    )
-    ham = " + ".join(f"bit_count(x{w} ^ y{w})" for w in WIDE_WORDS)
-    lo = F.col("nid") < F.col("aid")
-    return (
-        ln.join(ra, ["bandkey"])
-        .filter(F.col("nid") != F.col("aid"))
-        # canonicalize the word columns WITH the id ordering: a same-batch
-        # pair is found from both directions, and without this the swapped
-        # word columns defeat the distinct (two identical output rows)
-        .select(
-            F.least("nid", "aid").alias("id_a"),
-            F.greatest("nid", "aid").alias("id_b"),
-            *[
-                F.when(lo, F.col(f"n{w}")).otherwise(F.col(f"a{w}")).alias(f"x{w}")
-                for w in WIDE_WORDS
-            ],
-            *[
-                F.when(lo, F.col(f"a{w}")).otherwise(F.col(f"n{w}")).alias(f"y{w}")
-                for w in WIDE_WORDS
-            ],
-        )
-        .distinct()
-        .withColumn("hamming", F.expr(f"CAST({ham} AS INT)"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
-
-
 def _jvm_read_bytes() -> int:
     """Cumulative bytes read (/proc rchar) by the local-mode JVM — driver
     and executor threads share one process, so the per-batch delta is an
@@ -661,15 +613,16 @@ def start_incremental_dedup(
 
     Store-side cost is bounded per batch: the compacted prefix is scanned
     via pruned_store_scan (parquet row-group pruning on the micro-batch's
-    ≤ 8·|batch| band keys — O(batch) bytes, not O(store)); only the small
-    uncompacted batch tail is read in full. The per-batch metrics row
+    band keys, STORE_LAYOUT's 8 per signature — O(batch) bytes, not
+    O(store)); only the small uncompacted batch tail is read in full. The
+    per-batch metrics row
     records store_rows_scanned and the JVM's actual read_bytes so the
     boundedness is measurable from the ledger (BENCH.md §1b).
 
     The ledger costs the batch almost no extra Spark work:
       - n_images: the batch's band keys are collected once (8 per
         signature, no distinct shuffle) for the pruned scan; their count
-        / 8 is the image count;
+        / 8 (bands per signature) is the image count;
       - n_pairs: parquet footer row counts of the batch's pairs dir;
       - store_rows_scanned: 8 × the uncompacted tail's footer row count,
         plus ONE count of the pruned compacted scan, run only once a
@@ -686,12 +639,15 @@ def start_incremental_dedup(
     dirs between our listing and the read — the store read retries once on
     a FileNotFound-class failure, picking up the new compacted layout
     (contents are equivalent by construction; duplicated rows across the
-    crash-window horizon collapse in pairs_touching's canonical distinct).
+    crash-window horizon collapse in the store join's canonical distinct).
 
     `on_batch_complete(batch_id)` (test hook) runs after each batch's
     metrics row lands — e.g. to trigger a mid-stream compaction."""
 
     _SPARK_FOR_FS[0] = spark
+    # the store's banding is lossless only to Hamming 7: a larger
+    # threshold raises here, not as silently missing pairs
+    hamming_layout(WIDE_BITS, max_hamming)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         import time
@@ -707,11 +663,11 @@ def start_incremental_dedup(
         new = spark.read.parquet(sig_dir)
         newb = banded_signatures(new)
         # one row per (signature, band): the batch's band keys, deduplicated
-        # on the driver (no distinct shuffle), and at 8 bands per signature
-        # its image count
+        # on the driver (no distinct shuffle), and at one row per band its
+        # image count
         band_rows = [r[0] for r in newb.select("bandkey").collect()]
         keys = list(set(band_rows))
-        n_new = len(band_rows) // 8
+        n_new = len(band_rows) // len(STORE_LAYOUT.bands)
         out = _join(pairs_path, f"batch={batch_id:09d}")
 
         def build_allb() -> tuple[DataFrame, int, DataFrame | None]:
@@ -738,7 +694,9 @@ def start_incremental_dedup(
                 allb = allb.unionByName(
                     banded_signatures(spark.read.parquet(*tail))
                 )
-                tail_rows = 8 * parquet_rows(spark, tail)
+                tail_rows = len(STORE_LAYOUT.bands) * parquet_rows(
+                    spark, tail
+                )
             if comp is not None:
                 pruned = pruned_store_scan(spark, comp, keys)
                 allb = allb.unionByName(pruned)
@@ -754,9 +712,10 @@ def start_incremental_dedup(
             for attempt in (0, 1):
                 try:
                     allb, n_store, pruned = build_allb()
-                    pairs_touching_banded(newb, allb, max_hamming).write.mode(
-                        "overwrite"
-                    ).parquet(out)
+                    hamming_join(
+                        newb, allb, "image_id", WIDE_WORDS, STORE_LAYOUT,
+                        max_hamming, rule="canonical",
+                    ).write.mode("overwrite").parquet(out)
                     count_bytes = 0
                     if pruned is not None:
                         r = _jvm_read_bytes()
@@ -876,8 +835,8 @@ def read_batch_metrics(spark: SparkSession, store_path: str) -> DataFrame:
 
 
 __all__ = [
-    "start_incremental_dedup", "read_pairs", "pairs_touching",
-    "pairs_touching_banded", "banded_signatures", "pruned_store_scan",
+    "start_incremental_dedup", "read_pairs", "banded_signatures",
+    "pruned_store_scan",
     "read_store_signatures", "read_batch_metrics", "compact_store",
     "compact_pairs",
 ]

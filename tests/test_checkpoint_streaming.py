@@ -783,17 +783,18 @@ class TestIncrementalDedupStream:
         assert read_pairs(spark, pairs).count() == 2
 
     def test_union_invariant_over_arbitrary_batch_splits(self, spark):
-        """The incremental math itself (pairs_touching over a growing
-        store), independent of streaming machinery: for ANY partition of a
-        corpus into ordered batches, the union of per-batch emissions
-        equals the one-shot batch join — no batch boundary placement can
-        lose or duplicate a pair."""
+        """The incremental math itself (the canonical-rule banded join over
+        a growing store), independent of streaming machinery: for ANY
+        partition of a corpus into ordered batches, the union of per-batch
+        emissions equals the one-shot batch join — no batch boundary
+        placement can lose or duplicate a pair."""
+        from osm2mp_spark.operators.hamming import hamming_pairs
         from osm2mp_spark.operators.images import (
+            WIDE_WORDS,
             dhash_wide_images,
             wide_hamming_pairs,
         )
         from osm2mp_spark.sources.images import generate_phash_corpus_df
-        from osm2mp_spark.streaming.dedup import pairs_touching
 
         sigs = dhash_wide_images(
             generate_phash_corpus_df(spark, 21, dup_every=7)
@@ -815,7 +816,10 @@ class TestIncrementalDedupStream:
                 allv = spark.createDataFrame(store + batch, schema)
                 got |= {
                     (r.id_a, r.id_b, r.hamming)
-                    for r in pairs_touching(new, allv, max_hamming=7).collect()
+                    for r in hamming_pairs(
+                        new, allv, id_col="image_id", words=WIDE_WORDS,
+                        bits=256, max_hamming=7, rule="canonical",
+                    ).collect()
                 }
                 store += batch
             assert got == expected, f"split {cuts[:3]}... diverged"
@@ -1603,6 +1607,44 @@ class TestIncrementalClusters:
             assert got == self._batch_uf(clique + [(50, 100)])
         finally:
             spark.conf.unset("spark.osm2mp.components.driverMaxEdges")
+
+    def test_self_loop_same_on_both_guard_paths(self, spark, tmp_path):
+        """A self-loop pair links nothing: the raw-collect path (edges ≤
+        driverMaxEdges) and the spanning-edge guard path (above it) must
+        return the same fold and write the same labels/ and forward/
+        rows."""
+        import pandas as pd
+
+        from osm2mp_spark.streaming.clusters import update_clusters
+
+        edges = [(7, 7), (3, 9), (9, 12)]
+        out = {}
+        for max_edges in (1, 10):  # guard path, raw-collect path
+            spark.conf.set(
+                "spark.osm2mp.components.driverMaxEdges", str(max_edges)
+            )
+            try:
+                root = str(tmp_path / f"clusters{max_edges}")
+                fold = update_clusters(
+                    spark, root, 0,
+                    spark.createDataFrame(
+                        pd.DataFrame(edges, columns=["id_a", "id_b"])
+                    ),
+                    "CAST(id_a AS BIGINT)", "CAST(id_b AS BIGINT)",
+                )
+            finally:
+                spark.conf.unset("spark.osm2mp.components.driverMaxEdges")
+            written = {
+                d: sorted(
+                    map(tuple, spark.read.parquet(
+                        f"{root}/{d}/batch=000000000"
+                    ).collect())
+                )
+                for d in ("labels", "forward")
+            }
+            out[max_edges] = (fold, written)
+        assert out[1] == out[10]
+        assert 7 not in out[10][0]["touched"]
 
     def test_forwarding_holds_roots_only_and_compaction_resolves(
         self, spark, tmp_path

@@ -276,7 +276,7 @@ class TestPhashDedup:
     """Perceptual-hash near-dup detection (image_dhash / image_dedup_phash)."""
 
     def test_band_layout_covers_all_bits(self):
-        from osm2mp_spark.operators.images import hamming_band_layout
+        from osm2mp_spark.operators.hamming import hamming_band_layout
 
         for k in (2, 6, 10):
             layout = hamming_band_layout(k)
@@ -292,7 +292,7 @@ class TestPhashDedup:
         """Any pair within Hamming <= k must share at least one band key —
         the property that makes the banded equi-join equal the all-pairs
         join. Fuzzed over random signatures and random <=k bit flips."""
-        from osm2mp_spark.operators.images import hamming_band_layout
+        from osm2mp_spark.operators.hamming import hamming_band_layout
 
         k = 6
         layout = hamming_band_layout(k)
@@ -311,47 +311,106 @@ class TestPhashDedup:
             assert any(ka == kb for ka, kb in zip(keys(a), keys(b)))
 
     def test_multiprobe_lossless_vs_bruteforce(self, spark):
-        """The 4×16-bit multi-probe candidate generator (r6 rewrite of
-        phash_hamming_pairs for thresholds ≤ 7) must EQUAL the brute-force
-        all-pairs join: fuzzed over random signatures with planted variants
-        at distances 0..8, thresholds straddling both probe configs
-        (errors_per_band 0 and 1) and the >7 classic-banding fallback."""
+        """operators.hamming must EQUAL the brute-force all-pairs join under
+        every layout and id rule, fuzzed over random signatures with
+        planted variants at distances 0..8:
+          - 64-bit multi-probe (h ≤ 7: 0 and 1 flips per band) and the
+            classic fallback above 7;
+          - 256-bit word-aligned bands, with planted flips straddling word
+            and band boundaries;
+          - non-negative 32- and 60-bit signatures (classic simhash bands);
+        each under the ordered, directed and canonical rules, with
+        duplicate (id, words) rows on the store side (a crash-window
+        replay) and identical words under two ids."""
         import itertools
         import random
 
-        from osm2mp_spark.operators.images import phash_hamming_pairs
+        from osm2mp_spark.operators.hamming import hamming_pairs
 
         rnd = random.Random(7)
+        # bits → (thresholds, signed words); boundary bits of words and of
+        # 16/32-bit bands, so planted flips straddle them
+        cases = {64: ((0, 3, 4, 6, 7, 9), True),
+                 256: ((0, 5, 7), True),
+                 32: ((6,), False), 60: ((6,), False)}
+        edges = [15, 16, 31, 32, 47, 48, 63, 64, 95, 96, 127, 128, 191, 192]
 
-        def to_signed(u):
-            return u - (1 << 64) if u >= (1 << 63) else u
+        def words_of(u, bits, signed):
+            if not signed:
+                return (u,)
+            out = []
+            for i in range(bits // 64):
+                w = (u >> (64 * i)) & ((1 << 64) - 1)
+                out.append(w - (1 << 64) if w >= (1 << 63) else w)
+            return tuple(out)
 
-        rows, base = [], []
-        for i in range(250):
-            u = rnd.getrandbits(64)
-            base.append(u)
-            rows.append((f"id{i:06d}", to_signed(u)))
-        for j in range(80):
-            src = rnd.randrange(250)
-            u = base[src]
-            for b in rnd.sample(range(64), rnd.choice(range(9))):
-                u ^= 1 << b
-            rows.append((f"id{src:06d}v{j}", to_signed(u)))
-        df = spark.createDataFrame(rows, "image_id string, dhash long")
-        for h in (0, 3, 4, 6, 7, 9):
-            got = {
-                (r.id_a, r.id_b, r.hamming)
-                for r in phash_hamming_pairs(df, max_hamming=h).collect()
-            }
-            want = {
-                (ia, ib, d)
-                for (ia, ha), (ib, hb) in itertools.combinations(
-                    sorted(rows), 2
-                )
-                for d in [bin((ha ^ hb) & ((1 << 64) - 1)).count("1")]
-                if d <= h
-            }
-            assert got == want, f"h={h}: {len(got)} vs {len(want)}"
+        def ham(x, y):
+            return sum(bin((a ^ b) & ((1 << 64) - 1)).count("1")
+                       for a, b in zip(x, y))
+
+        for bits, (thresholds, signed) in cases.items():
+            words = tuple(f"w{i}" for i in range(max(1, bits // 64)))
+            schema = "id string, " + ", ".join(f"{w} long" for w in words)
+            rows, base = [], []
+            for i in range(150):
+                u = rnd.getrandbits(bits)
+                base.append(u)
+                rows.append((f"id{i:04d}", *words_of(u, bits, signed)))
+            for j in range(60):
+                src = rnd.randrange(150)
+                u = base[src]
+                near = [e for e in edges if e < bits]
+                k = rnd.choice(range(9))
+                pool = near if j % 2 and k <= len(near) else range(bits)
+                for b in rnd.sample(pool, k):
+                    u ^= 1 << b
+                rows.append((f"id{src:04d}v{j}", *words_of(u, bits, signed)))
+            rows.append(("twin", *rows[0][1:]))  # same words, second id
+            sig = {r[0]: r[1:] for r in rows}
+            new = [r for k, r in enumerate(rows) if k % 3 == 0]
+            new_ids = {r[0] for r in new}
+            df = spark.createDataFrame(rows, schema)
+            dfn = spark.createDataFrame(new, schema)
+            # the store holds the batch's own rows twice (replay)
+            store = spark.createDataFrame(rows + new, schema)
+            for h in thresholds:
+                def close(x, y):
+                    return x != y and ham(sig[x], sig[y]) <= h
+
+                want = {
+                    "ordered": {
+                        (x, y, ham(sig[x], sig[y]))
+                        for x, y in itertools.combinations(sorted(sig), 2)
+                        if close(x, y)
+                    },
+                    "directed": {
+                        (x, y, ham(sig[x], sig[y]))
+                        for x in new_ids for y in sig if close(x, y)
+                    },
+                    "canonical": {
+                        (min(x, y), max(x, y), ham(sig[x], sig[y]))
+                        for x in new_ids for y in sig if close(x, y)
+                    },
+                }
+                runs = {
+                    "ordered": (store, None),
+                    "directed": (dfn, df),
+                    "canonical": (dfn, store),
+                }
+                for rule, (left, right) in runs.items():
+                    got = hamming_pairs(
+                        left, right, id_col="id", words=words, bits=bits,
+                        max_hamming=h, rule=rule,
+                    ).collect()
+                    assert len(got) == len(set(got)), (bits, h, rule)
+                    assert {tuple(r) for r in got} == want[rule], (
+                        f"bits={bits} h={h} rule={rule}: "
+                        f"{len(got)} vs {len(want[rule])}"
+                    )
+            if bits == 256:
+                with pytest.raises(ValueError):
+                    hamming_pairs(df, id_col="id", words=words, bits=256,
+                                  max_hamming=8)
 
     def test_corpus_neardup_separation(self):
         """Planted near-dups sit within the threshold; unrelated pattern
@@ -611,6 +670,25 @@ class TestWideSignatures:
             v = (hi << 32) | lo
             v -= (v & (1 << 63)) << 1
             assert v == int(grp[f"h{word}"].iloc[0])
+        # the operator's single-column key is band·2^32 + key on every row,
+        # the packing compacted stores already hold on disk, so stores
+        # written before the operator existed stay joinable
+        from osm2mp_spark.operators.hamming import hamming_bands, hamming_layout
+        from osm2mp_spark.operators.images import WIDE_WORDS
+
+        hb = hamming_bands(
+            sigs, "image_id", WIDE_WORDS, hamming_layout(256, 7)
+        ).toPandas()
+        got = sorted(zip(hb.image_id, hb.bandkey))
+        want = sorted(
+            zip(pdf.image_id, pdf.band.astype("int64") * (1 << 32) + pdf.key)
+        )
+        assert got == want
+        for r in hb.itertuples():
+            band = int(r.bandkey) >> 32
+            u = int(getattr(r, WIDE_WORDS[band // 2])) & ((1 << 64) - 1)
+            half = u >> 32 if band % 2 == 0 else u & 0xFFFFFFFF
+            assert int(r.bandkey) == (band << 32) + half
 
     def test_wide_clusters_match_narrow_decision(self, spark):
         """At small n the 64-bit and 256-bit cluster decisions agree

@@ -168,39 +168,3 @@ class TestClipChainParts:
 
     def test_on_edge_counts_inside(self):
         assert clip_chain_parts([-1, 0, 1, 0, -1]) == [(0, 4)]
-
-
-class TestKDTreeVectorized:
-    def test_matches_bruteforce_min_by_dist_id(self):
-        import numpy as np
-
-        from osm2mp_spark.operators.knn import _KDTree
-
-        rng = np.random.default_rng(7)
-        m = 400
-        ax, ay = rng.uniform(-50, 50, m), rng.uniform(-30, 30, m)
-        ids = [f"a{i:04d}" for i in range(m)]
-        # duplicated anchor positions force the (dist, id) tiebreak
-        ax[10], ay[10] = ax[11], ay[11]
-        tree = _KDTree(ids, ax, ay)
-        qx, qy = rng.uniform(-55, 55, 3000), rng.uniform(-35, 35, 3000)
-        nid, nd = tree.query(qx, qy)
-        d2 = (qx[:, None] - ax[None, :]) ** 2 + (qy[:, None] - ay[None, :]) ** 2
-        # brute force: min by (distance, id)
-        for k in rng.integers(0, 3000, 50):
-            row = d2[k]
-            best = min(range(m), key=lambda i: (row[i], ids[i]))
-            assert nid[k] == ids[best]
-            assert nd[k] == row[best]
-
-    def test_query_on_query_points_is_zero(self):
-        import numpy as np
-
-        from osm2mp_spark.operators.knn import _KDTree
-
-        xs = np.array([0.0, 1.0, 5.0])
-        ys = np.array([0.0, 1.0, 5.0])
-        tree = _KDTree(["x", "y", "z"], xs, ys)
-        nid, nd = tree.query(xs, ys)
-        assert list(nid) == ["x", "y", "z"]
-        assert list(nd) == [0.0, 0.0, 0.0]

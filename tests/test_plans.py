@@ -81,7 +81,7 @@ class TestPlanShapes:
         import __spark_entry__ as E
 
         keys = {
-            "simhash_pairs": "band_no",
+            "simhash_pairs": "bandkey",
             "dedup_embedding_cosine": "band_no",
             "ngram_jaccard": "shingle",
         }
@@ -163,16 +163,34 @@ class TestRound3PlanShapes:
 class TestLateRound3PlanShapes:
     """Pin the plan shapes of the session's new operator families."""
 
-    def test_image_ann_topk_banded_broadcast_no_cartesian(self, spark, sf_dir):
-        """The query set reaches the corpus only through the (band, key)
+    def test_image_ann_topk_banded_broadcast_no_cartesian(
+        self, spark, sf_dir, monkeypatch
+    ):
+        """The query set reaches the corpus only through the bandkey
         broadcast equi-join — an inequality-only pair join would plan as a
-        cartesian/nested loop over corpus x corpus."""
+        cartesian/nested loop over corpus x corpus. The broadcast side's
+        est_rows must bound the band rows it really holds after the
+        explode (probes included), or the size gate is meaningless."""
         import __spark_entry__ as E
+        import osm2mp_spark.plans.hints as hints
 
-        p = plan_of(E.queries()["image_ann_topk"](spark, sf_dir))
-        assert "CartesianProduct" not in p
-        assert "BroadcastNestedLoopJoin" not in p
-        assert p.count("BroadcastHashJoin") == 1
+        for name in ("image_ann_topk", "image_ann_topk_wide"):
+            gated = []
+            orig = hints.maybe_broadcast
+
+            def spy(df, est_rows):
+                gated.append((df, est_rows))
+                return orig(df, est_rows=est_rows)
+
+            monkeypatch.setattr(hints, "maybe_broadcast", spy)
+            p = plan_of(E.queries()[name](spark, sf_dir))
+            monkeypatch.setattr(hints, "maybe_broadcast", orig)
+            assert "CartesianProduct" not in p, name
+            assert "BroadcastNestedLoopJoin" not in p, name
+            assert p.count("BroadcastHashJoin") == 1, name
+            assert len(gated) == 1, name
+            df, est = gated[0]
+            assert 0 < df.count() <= est, name
 
     def test_cell_rollup_one_pass_all_levels(self, spark, sf_dir):
         """All four resolution levels come from ONE shuffle: grouping-set

@@ -78,24 +78,29 @@ class TestCitysideJ4:
 class TestBandJoinSkew:
     """Adversarial skew for the wide-signature band join (VERDICT r04 ask
     #5): a planted corpus where ONE band bucket holds ~every signature
-    (constant-content images share the h0 word → bands 0 and 1 collide
+    (every image shares the high half of h0 → band 0 collides
     corpus-wide). The join must neither lose correctness nor serialize
     into a single straggler task."""
 
     N = 2000
 
     def _planted_sigs(self, spark):
-        """N signatures sharing h0 (adversarial constant band) with h1-h3
-        spread far apart (i*2^13 steps ⇒ unrelated pairs differ by tens of
-        bits), plus 3 planted near-dup pairs (last-bit flips)."""
+        """N signatures sharing h0's high half (one adversarial constant
+        band) with h0's low half and h1-h3 spread over all their bits
+        (multiplicative hashing ⇒ unrelated pairs differ by tens of bits,
+        and no other band is constant), plus 3 planted near-dup pairs
+        (last-bit flips). One hot bucket is skewed wherever the shuffle
+        hash places it; two equally hot buckets are skewed only when
+        they hash to the same partition."""
         import pandas as pd
 
         rows = []
         for i in range(self.N):
-            h1 = (i * 0x2001) & 0x7FFFFFFFFFFFFFFF
-            h2 = (i * 0x40009) & 0x7FFFFFFFFFFFFFFF
-            h3 = (i * 0x800011) & 0x7FFFFFFFFFFFFFFF
-            rows.append(("skew%06d" % i, 0x1234567890ABCDEF, h1, h2, h3))
+            h0 = (0x12345678 << 32) | ((i * 0x9E3779B1) & 0xFFFFFFFF)
+            h1 = (i * 0x9E3779B97F4A7C15) & 0x7FFFFFFFFFFFFFFF
+            h2 = (i * 0xC2B2AE3D27D4EB4F) & 0x7FFFFFFFFFFFFFFF
+            h3 = (i * 0x165667B19E3779F9) & 0x7FFFFFFFFFFFFFFF
+            rows.append(("skew%06d" % i, h0, h1, h2, h3))
         for j in range(3):  # near-dups of the first three
             b = rows[j]
             rows.append((b[0] + "x", b[1], b[2] ^ 1, b[3], b[4]))

@@ -6,10 +6,14 @@ and prints, per query, how many Python-evaluation operators its physical
 plan holds (ArrowEvalPython, MapInPandas, BatchEvalPython,
 FlatMapGroupsInPandas): each is one Python worker evaluation per task, so
 a UDF evaluated twice or an unfused Python stage shows up in the dump.
+For each banded Hamming join a query builds, it also prints the layout
+operators.hamming chose (kind, band count, key bits, probes per band) and
+the join's id rule.
 """
 
 from __future__ import annotations
 
+import logging
 import os
 import sys
 
@@ -18,9 +22,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 DEFAULT = [
+    "simhash_pairs",
+    "simhash_wide_pairs",
     "image_dedup_phash",
     "image_dedup_wide",
     "image_dedup_clusters",
+    "image_dedup_clusters_wide",
     "flagship_dedup",
     "image_ann_topk",
     "image_ann_topk_wide",
@@ -31,6 +38,17 @@ DEFAULT = [
     "clip_chains",
     "cell_rollup",
 ]
+
+
+class _Lines(logging.Handler):
+    """Keeps the messages of the records it is handed."""
+
+    def __init__(self):
+        super().__init__(logging.INFO)
+        self.lines: list[str] = []
+
+    def emit(self, record):
+        self.lines.append(record.getMessage())
 
 
 def main():
@@ -56,10 +74,15 @@ def main():
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
+    joins = _Lines()
+    hamming_log = logging.getLogger("osm2mp_spark.operators.hamming")
+    hamming_log.setLevel(logging.INFO)
+    hamming_log.addHandler(joins)
     for name in names:
         if name not in qs:
             print(f"skip {name}: not in registry")
             continue
+        joins.lines.clear()
         df = qs[name](spark, SF_DIR)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
@@ -71,6 +94,8 @@ def main():
         summary = " ".join(f"{k}={v}" for k, v in evals.items())
         print(f"wrote {path} ({len(plan)} chars); python evals "
               f"{sum(evals.values())}: {summary}")
+        for line in joins.lines:
+            print(f"  {line}")
     spark.stop()
 
 
