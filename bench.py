@@ -630,6 +630,13 @@ def bench_inc_ledger(n_batches: int = 14, batch_images: int = 2_000,
     n_total = n_batches * batch_images
     corpus = generate_phash_corpus_df(spark, n_total)
     corpus.repartition(n_batches).write.mode("overwrite").parquet(land)
+    # the stream takes files in mtime order: distinct mtimes in file-name
+    # order pin the file -> batch assignment, so two runs' ledgers compare
+    # batch by batch
+    parts = sorted(f for f in os.listdir(land) if f.endswith(".parquet"))
+    first = time.time() - len(parts)
+    for i, f in enumerate(parts):
+        os.utime(f"{land}/{f}", (first + i, first + i))
     schema = spark.read.parquet(land).schema
     store = f"{base}/store"
     compact_secs = []

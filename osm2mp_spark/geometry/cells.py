@@ -139,9 +139,20 @@ def with_cell_column(df, out_col: str, lon_col: str, lat_col: str,
     warm build+plan+run on cell_rollup, plan text 24.8 kB → 3.4 kB.
     CollapseProject keeps the stages separate (each step references a
     non-cheap producer twice), and whole-stage codegen still fuses them
-    into one compute stage with local variables. Bit-identical output."""
-    base = [f"`{c}`" for c in df.columns]
+    into one compute stage with local variables. Bit-identical output.
+    Raises ValueError when a staging column name is already taken."""
+
+    def q(name: str) -> str:
+        return "`" + name.replace("`", "``") + "`"
+
+    base = [q(c) for c in df.columns]
     ix, iy = f"__{out_col}_ix", f"__{out_col}_iy"
+    taken = sorted({ix, iy} & set(df.columns))
+    if taken:
+        raise ValueError(
+            f"with_cell_column: staging column(s) {taken} already in df"
+        )
+    ix, iy = q(ix), q(iy)
     n = 1 << level
     df = df.selectExpr(
         *base,
@@ -159,7 +170,7 @@ def with_cell_column(df, out_col: str, lon_col: str, lat_col: str,
     return df.selectExpr(
         *base,
         f"((CAST({level} AS BIGINT) << 58) | {ix} | ({iy} << 1)) "
-        f"AS `{out_col}`",
+        f"AS {q(out_col)}",
     )
 
 

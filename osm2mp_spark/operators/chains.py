@@ -390,8 +390,13 @@ def min_label_components(
     max_edges = int(
         spark.conf.get(_DRIVER_EDGES_CONF, str(_DEFAULT_DRIVER_EDGES))
     )
+    # a null endpoint names no vertex: drop its edge on both paths (the
+    # Arrow pull would turn it into a NaN vertex, the fixpoint into a null
+    # label)
     one = edges.select(
         F.col(src).alias("a"), F.col(dst).alias("b")
+    ).filter(
+        F.col("a").isNotNull() & F.col("b").isNotNull()
     ).localCheckpoint(eager=False)
     # Arrow toPandas + .tolist() (python-native values, same semantics
     # as Row indexing) measured ~2× faster than toLocalIterator for the

@@ -18,31 +18,20 @@ Per-batch cost is O(batch), not O(#queries): each `state/batch=<id>` delta
 holds top-k rows ONLY for queries touched by that batch, and the merge reads
 previous state through the same pruned-scan machinery as the signature store
 — the compacted state is range-sorted by query_id, and the batch's touched
-query ids are pushed as parquet In filters (streaming.dedup.pruned_store_scan),
+query ids are pushed as parquet In filters (streaming.store.pruned_store_scan),
 so row-group pruning skips the untouched part of the state. The delta tail
 is bounded by compaction (compact_topk_state), exactly like the dedup store.
 
-Crash/replay safety mirrors the dedup store: deltas are idempotent
-mode=overwrite recomputes from state strictly below the batch id, and
-compaction only merges deltas whose batch the dedup metrics ledger certifies
-(the metrics row is written after the state delta in process()).
+The state is a streaming.store batch-directory store: deltas are idempotent
+per-batch overwrites computed from state strictly below the batch id, and
+layout, certification, replay horizon and commit order are stated there.
 """
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from .dedup import (
-    _SPARK_FOR_FS,
-    _batch_dirs,
-    _commit_compacted,
-    _compacted_dir,
-    _join,
-    _rmtree,
-    pruned_store_scan,
-)
+from .store import _batch_dir, _compact, _live, pruned_store_scan
 
 TOPK_SCHEMA = (
     "query_id string, neighbor_id string, hamming int, rnk int, "
@@ -89,14 +78,7 @@ def _read_state(
     """Current top-k state restricted to `touched` query ids (None = all):
     pruned scan of the compacted prefix + full read of the (bounded) delta
     tail, newest delta winning per query."""
-    _SPARK_FOR_FS[0] = spark
-    comp, n = _compacted_dir(state_root)
-    if below is not None and n > below + 1:
-        raise RuntimeError(
-            f"ANN state compacted through batch {n} but batch {below} is "
-            f"being (re)processed — a replay can sit at most ONE batch "
-            f"behind the horizon"
-        )
+    comp, tail = _live(spark, state_root, below)
     parts = []
     if comp is not None:
         if touched is None:
@@ -105,10 +87,6 @@ def _read_state(
             parts.append(
                 pruned_store_scan(spark, comp, touched, key_col="query_id")
             )
-    tail = [
-        d for d in _batch_dirs(state_root, below)
-        if int(re.search(r"batch=(\d+)$", d).group(1)) >= n
-    ]
     if tail:
         parts.append(spark.read.parquet(*tail))
     if not parts:
@@ -142,7 +120,6 @@ def update_topk_state(
     (queries with no new candidates keep their previous rows — latest
     delta wins on read). Idempotent overwrite; a replayed batch recomputes
     byte-identical deltas from the state below it."""
-    _SPARK_FOR_FS[0] = spark
     cand = _oriented_candidates(pairs, query_pred)
     touched = [r[0] for r in cand.select("query_id").distinct().collect()]
     if not touched:
@@ -165,7 +142,7 @@ def update_topk_state(
         .filter(F.col("rnk") <= k)
         .withColumn("state_batch", F.lit(int(batch_id)).cast("long"))
         .write.mode("overwrite")
-        .parquet(_join(state_root, f"batch={batch_id:09d}"))
+        .parquet(_batch_dir(state_root, batch_id))
     )
 
 
@@ -190,48 +167,23 @@ def compact_topk_state(
     `compacted=<N>` dir range-sorted by query_id, bounding both the delta-
     dir listing growth and (via pruned_store_scan row-group pruning on
     query_id) per-batch state read bytes. Certification comes from the
-    dedup store's metrics ledger at `store_path` — a delta whose batch has
-    no metrics row may be replayed and must stay out of the merge (same
-    crash-window argument as streaming.dedup.compact_store)."""
-    _SPARK_FOR_FS[0] = spark
-    comp, comp_n = _compacted_dir(state_root)
-    certified = {
-        int(re.search(r"batch=(\d+)$", d).group(1))
-        for d in _batch_dirs(_join(store_path, "metrics"))
-    }
-    mcomp, mcomp_n = _compacted_dir(_join(store_path, "metrics"))
-    deltas = [
-        d for d in _batch_dirs(state_root)
-        if int(re.search(r"batch=(\d+)$", d).group(1)) in certified
-        or int(re.search(r"batch=(\d+)$", d).group(1)) < mcomp_n
-    ]
-    if not deltas:
-        return comp_n
-    ids = [int(re.search(r"batch=(\d+)$", d).group(1)) for d in deltas]
-    horizon = max(ids) + 1
-    tail = [d for d, i in zip(deltas, ids) if i >= comp_n]
-    if not tail:
-        for d in deltas:
-            _rmtree(d)
-        return comp_n
-    merged = spark.read.parquet(*tail)
-    if comp:
-        merged = spark.read.parquet(comp).unionByName(merged)
+    dedup store's metrics ledger at `store_path`."""
     n_parts = num_files or spark.sparkContext.defaultParallelism
-    _commit_compacted(
-        state_root, horizon,
-        lambda tmp: (
+
+    def write(tmp, comp, tail):
+        merged = spark.read.parquet(*tail)
+        if comp:
+            merged = spark.read.parquet(comp).unionByName(merged)
+        (
             _latest_per_query(merged)
             .repartitionByRange(n_parts, "query_id")
             .sortWithinPartitions("query_id")
             .write.mode("overwrite")
             .option("parquet.block.size", block_bytes)
             .parquet(tmp)
-        ),
-        sources=[d for d, i in zip(deltas, ids) if i < horizon],
-        old_comp=comp,
-    )
-    return horizon
+        )
+
+    return _compact(spark, state_root, store_path, write)
 
 
 __all__ = [

@@ -24,30 +24,27 @@ the batch min-label components over the union of all pairs seen — which is
 how the gate checks it (same recursive-CTE DuckDB oracle as the one-shot).
 
 Per-batch cost is O(batch): the batch's pair graph + the CURRENT labels of
-its touched vertices (pruned row-group scan of the vertex-sorted compacted
-labels store — streaming.dedup.pruned_store_scan) + the forwarding tail
-(bounded by compaction cadence) feed a driver union-find sized by the
+its touched vertices (chunked-In point lookup on the vertex-sorted
+compacted labels store — streaming.store._point_lookup) + the forwarding
+tail (bounded by compaction cadence) feed a driver union-find sized by the
 BATCH, never the store. compact_labels resolves every chain and rewrites
 the labels store sorted by vertex with an empty forwarding tail, bounding
-both chain length and tail reads; it only merges batches certified by the
-dedup metrics ledger (same crash-window rules as the other stores).
+both chain length and tail reads. Both subtrees are streaming.store
+batch-directory stores (layout, certification, replay horizon and commit
+order are stated there).
 """
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .dedup import (
-    _SPARK_FOR_FS,
+from .store import (
+    _batch_dir,
     _batch_dirs,
-    _chunked_in_scan,
-    _commit_compacted,
-    _compacted_dir,
+    _compact,
     _join,
-    _rmtree,
-    _tail_dirs,
+    _point_lookup,
+    _read_live,
 )
 
 LABELS_SCHEMA = "vertex long, label long"
@@ -60,7 +57,7 @@ def _forward_map(spark: SparkSession, forward_root: str,
     tail holds one row per cluster MERGE since the last compaction —
     bounded by compaction cadence, so the collect is bounded (and empty
     right after a compaction)."""
-    dirs = _batch_dirs(forward_root, below)
+    dirs = _batch_dirs(spark, forward_root, below)
     if not dirs:
         return {}
     fwd = {
@@ -87,13 +84,10 @@ def _labels_for(
     below: int | None = None,
 ) -> dict[int, int]:
     """Stored (vertex → label-at-write-time) for the given vertex set:
-    chunked-In point lookup (_chunked_in_scan — row-group pruning on the
-    vertex-sorted compacted prefix, and the filter also bounds the driver
-    collect) over compacted prefix + delta tail, one collect job."""
-    comp, n = _compacted_dir(labels_root)
-    scan = _chunked_in_scan(
-        spark, comp, _tail_dirs(labels_root, n, below), vertices, "vertex"
-    )
+    chunked-In point lookup (row-group pruning on the vertex-sorted
+    compacted prefix, and the filter also bounds the driver collect) over
+    compacted prefix + delta tail, one collect job."""
+    scan = _point_lookup(spark, labels_root, vertices, "vertex", below)
     if scan is None:
         return {}
     return {int(r.vertex): int(r.label) for r in scan.collect()}
@@ -123,26 +117,27 @@ def update_clusters(
         min_label_components,
     )
 
-    _SPARK_FOR_FS[0] = spark
     # a self-loop links nothing: drop it before the guard so both paths
-    # below see the same edges (the spanning-edge path cannot carry one)
+    # below see the same edges (the spanning-edge path cannot carry one).
+    # The lazy checkpoint makes `pairs` evaluate once, whichever path runs.
     kdf = pairs.selectExpr(
         f"{key_expr_a} AS ka", f"{key_expr_b} AS kb"
-    ).filter("ka != kb")
+    ).filter("ka != kb").localCheckpoint(eager=False)
     max_edges = int(
         spark.conf.get(_DRIVER_EDGES_CONF, str(_DEFAULT_DRIVER_EDGES))
     )
     # GUARD (the r5 verdict's one perf-weak item): a hot micro-batch (near-
     # identical-signature flood) emits O(n²) pairs — collecting them raw
-    # would put the whole quadratic graph on the driver. Count first (the
-    # batch pairs are an already-written parquet dir, so this is a cheap
-    # metadata-ish scan); above the same crossover min_label_components
-    # uses, pre-collapse the batch graph DISTRIBUTIVELY and collect only a
-    # spanning edge per non-root vertex — O(batch vertices), connectivity-
-    # equivalent, so the union-find below (and every output: labels,
-    # forwarding, fold summary) is unchanged.
-    if kdf.count() <= max_edges:
-        edges = [(int(r.ka), int(r.kb)) for r in kdf.collect()]
+    # would put the whole quadratic graph on the driver. One pull of at
+    # most max_edges + 1 edges (the crossover min_label_components uses)
+    # both decides the path and, within the bound, is the edge list. Above
+    # it, pre-collapse the batch graph DISTRIBUTIVELY over the filled
+    # checkpoint and collect only a spanning edge per non-root vertex —
+    # O(batch vertices), connectivity-equivalent, so the union-find below
+    # (and every output: labels, forwarding, fold summary) is unchanged.
+    pdf = kdf.limit(max_edges + 1).toPandas()
+    if len(pdf) <= max_edges:
+        edges = list(zip(pdf["ka"].tolist(), pdf["kb"].tolist()))
     else:
         lab = min_label_components(kdf, src="ka", dst="kb")
         edges = [
@@ -156,10 +151,10 @@ def update_clusters(
         # still write empty deltas so the layout stays per-batch uniform
         spark.createDataFrame([], LABELS_SCHEMA).write.mode(
             "overwrite"
-        ).parquet(_join(labels_dir, f"batch={batch_id:09d}"))
+        ).parquet(_batch_dir(labels_dir, batch_id))
         spark.createDataFrame([], FORWARD_SCHEMA).write.mode(
             "overwrite"
-        ).parquet(_join(forward_dir, f"batch={batch_id:09d}"))
+        ).parquet(_batch_dir(forward_dir, batch_id))
         return {"touched": [], "old_root": {}, "new_root": {}}
     touched = sorted({v for e in edges for v in e})
     stored = _labels_for(spark, labels_dir, touched, below=batch_id)
@@ -216,14 +211,10 @@ def update_clusters(
     merges = sorted(merges)
     spark.createDataFrame(new_labels or [], LABELS_SCHEMA).coalesce(
         1
-    ).write.mode("overwrite").parquet(
-        _join(labels_dir, f"batch={batch_id:09d}")
-    )
+    ).write.mode("overwrite").parquet(_batch_dir(labels_dir, batch_id))
     spark.createDataFrame(merges or [], FORWARD_SCHEMA).coalesce(
         1
-    ).write.mode("overwrite").parquet(
-        _join(forward_dir, f"batch={batch_id:09d}")
-    )
+    ).write.mode("overwrite").parquet(_batch_dir(forward_dir, batch_id))
     return {
         "touched": touched,
         "old_root": old_root,
@@ -233,19 +224,12 @@ def update_clusters(
     }
 
 
-def read_labels(spark: SparkSession, labels_root: str) -> DataFrame:
-    """Fully-resolved (vertex, label) over everything processed so far:
-    stored labels mapped through the (driver-bounded) forwarding map."""
-    _SPARK_FOR_FS[0] = spark
-    labels_dir = _join(labels_root, "labels")
-    comp, n = _compacted_dir(labels_dir)
-    dirs = ([comp] if comp else []) + _tail_dirs(labels_dir, n)
-    if not dirs:
-        return spark.createDataFrame([], LABELS_SCHEMA)
-    lab = spark.read.parquet(*dirs)
-    fwd = _forward_map(spark, _join(labels_root, "forward"))
+def _resolve(spark: SparkSession, lab: DataFrame, forward_root: str):
+    """Stored (vertex, label) rows with each label mapped through the
+    forwarding map to its current root."""
+    fwd = _forward_map(spark, forward_root)
     if not fwd:
-        return lab.select("vertex", "label")
+        return lab
     mapping = spark.createDataFrame(
         [(k, v) for k, v in fwd.items()], FORWARD_SCHEMA
     )
@@ -253,6 +237,15 @@ def read_labels(spark: SparkSession, labels_root: str) -> DataFrame:
         lab.join(F.broadcast(mapping),
                  lab.label == mapping.from_label, "left")
         .select("vertex", F.coalesce("to_label", "label").alias("label"))
+    )
+
+
+def read_labels(spark: SparkSession, labels_root: str) -> DataFrame:
+    """Fully-resolved (vertex, label) over everything processed so far:
+    stored labels mapped through the (driver-bounded) forwarding map."""
+    lab = _read_live(spark, _join(labels_root, "labels"), LABELS_SCHEMA)
+    return _resolve(spark, lab, _join(labels_root, "forward")).select(
+        "vertex", "label"
     )
 
 
@@ -267,70 +260,27 @@ def compact_labels(
     them as one `labels/compacted=<N>` dir range-sorted by vertex (the
     layout pruned per-batch reads need), dropping the merged label deltas
     and the forwarding rows they absorbed. Only batches certified by the
-    dedup metrics ledger merge (crash-window replay safety, as in
-    compact_store)."""
-    _SPARK_FOR_FS[0] = spark
-    labels_dir = _join(labels_root, "labels")
+    dedup metrics ledger merge."""
     forward_dir = _join(labels_root, "forward")
-    comp, comp_n = _compacted_dir(labels_dir)
-    certified = {
-        int(re.search(r"batch=(\d+)$", d).group(1))
-        for d in _batch_dirs(_join(store_path, "metrics"))
-    }
-    mcomp, mcomp_n = _compacted_dir(_join(store_path, "metrics"))
-
-    def ok(d: str) -> bool:
-        i = int(re.search(r"batch=(\d+)$", d).group(1))
-        return i in certified or i < mcomp_n
-
-    lab_batches = [d for d in _batch_dirs(labels_dir) if ok(d)]
-    fwd_batches = [d for d in _batch_dirs(forward_dir) if ok(d)]
-    if not lab_batches and not fwd_batches:
-        return comp_n
-    ids = [
-        int(re.search(r"batch=(\d+)$", d).group(1))
-        for d in lab_batches + fwd_batches
-    ]
-    horizon = max(ids) + 1
-    if horizon <= comp_n:
-        # every input is a sub-horizon crash-window replay dir — degenerate
-        # (empty) by construction, since a replay of a batch the compacted
-        # labels already resolve folds to a no-op. Dropping them is the
-        # whole job; recommitting at the unchanged horizon would only open
-        # a crash window where the store's one compacted copy is mid-swap.
-        for d in lab_batches + fwd_batches:
-            _rmtree(d)
-        return comp_n
-    lab_tail = [
-        d for d in lab_batches
-        if int(re.search(r"batch=(\d+)$", d).group(1)) >= comp_n
-    ]
-    srcs = ([comp] if comp else []) + lab_tail
-    lab = spark.read.parquet(*srcs)
-    fwd = _forward_map(spark, forward_dir)
-    if fwd:
-        mapping = spark.createDataFrame(
-            [(k, v) for k, v in fwd.items()], FORWARD_SCHEMA
-        )
-        lab = (
-            lab.join(F.broadcast(mapping),
-                     lab.label == mapping.from_label, "left")
-            .select("vertex", F.coalesce("to_label", "label").alias("label"))
-        )
     n_parts = num_files or spark.sparkContext.defaultParallelism
-    _commit_compacted(
-        labels_dir, horizon,
-        lambda tmp: (
-            lab.repartitionByRange(n_parts, "vertex")
+
+    def write(tmp, comp, tail):
+        lab = spark.read.parquet(*([comp] if comp else []), *tail)
+        (
+            _resolve(spark, lab, forward_dir)
+            .repartitionByRange(n_parts, "vertex")
             .sortWithinPartitions("vertex")
             .write.mode("overwrite")
             .option("parquet.block.size", block_bytes)
             .parquet(tmp)
-        ),
-        sources=lab_batches + fwd_batches,
-        old_comp=comp,
+        )
+
+    # the forwarding rows a merge resolves are deleted with the labels it
+    # consumed: the compacted labels carry resolved roots
+    return _compact(
+        spark, _join(labels_root, "labels"), store_path, write,
+        also=(forward_dir,),
     )
-    return horizon
 
 
 __all__ = [

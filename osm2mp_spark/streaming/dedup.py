@@ -13,18 +13,16 @@ checks it, via the same DuckDB all-pairs oracle.
 
 Exactly-once across restarts: the streaming checkpoint pins the file→batch
 assignment, and every per-batch output (signatures into the store, pairs
-into the pairs dir) goes to a `batch=<id>` directory written with
-mode=overwrite — a re-executed batch recomputes byte-identical content
-(deterministic kernel) over the same store prefix (store = batches < id),
-so replays are idempotent. Store paths may be plain local paths or URIs
-(file://, hdfs://, s3a://): Spark's reads/writes are scheme-transparent,
-and the listing/delete/rename helpers below route URIs through Hadoop FS.
+into the pairs dir, the certifying metrics row) follows the batch-directory
+protocol of streaming.store — layout, certification, replay horizon and
+commit order are stated there once. A re-executed batch recomputes
+byte-identical content (deterministic kernel) over the same store prefix
+(store = batches < id), so replays are idempotent.
 """
 
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -35,221 +33,25 @@ from ..operators.images import (
     WIDE_WORDS,
     dhash_wide_images,
 )
-from ..sources.parquet_footers import parquet_rows, rowgroup_stats
+from ..sources.parquet_footers import parquet_rows
+from .store import (
+    _batch_dir,
+    _batch_dirs,
+    _certified,
+    _commit_compacted,
+    _compact,
+    _compacted_dir,
+    _live,
+    _metrics_root,
+    _read_live,
+    pruned_store_scan,
+)
 
 # The compacted store's banded layout: one row per (signature, band) with
 # operators.hamming's `bandkey = band·2^32 + key` (8 word-aligned bands,
 # bandkey < 2^35). The 256-bit layout is the same at every threshold ≤ 7,
 # so one compacted store serves any stream threshold.
 STORE_LAYOUT = hamming_layout(WIDE_BITS, 7)
-
-
-# --- filesystem access: plain os for local paths, Hadoop FS for URI paths
-# (hdfs://, s3a://, file://, ...) so the store works on cluster storage.
-# Spark's own reads/writes are scheme-transparent already; only the
-# listing / delete / rename below are os-level.
-
-_SPARK_FOR_FS: list[SparkSession | None] = [None]
-
-
-def _is_uri(p: str) -> bool:
-    return "://" in p
-
-
-def _hadoop_fs(p: str):
-    spark = _SPARK_FOR_FS[0] or SparkSession.getActiveSession()
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(p)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jvm
-
-
-def _listdir(root: str) -> list[str]:
-    if not _is_uri(root):
-        return sorted(os.listdir(root)) if os.path.isdir(root) else []
-    fs, jvm = _hadoop_fs(root)
-    jpath = jvm.org.apache.hadoop.fs.Path(root)
-    if not fs.exists(jpath):
-        return []
-    return sorted(st.getPath().getName() for st in fs.listStatus(jpath))
-
-
-def _rmtree(p: str) -> None:
-    if not _is_uri(p):
-        import shutil
-
-        shutil.rmtree(p, ignore_errors=True)
-        return
-    fs, jvm = _hadoop_fs(p)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(p), True)
-
-
-def _rename(src: str, dst: str) -> None:
-    if not _is_uri(src):
-        os.rename(src, dst)
-        return
-    fs, jvm = _hadoop_fs(src)
-    P = jvm.org.apache.hadoop.fs.Path
-    # Hadoop FileSystem.rename reports failure by RETURNING False (it only
-    # throws for some error classes); on object stores the "rename" may
-    # even be a partial copy. Raise so callers never proceed to destructive
-    # cleanup on a store whose committed dir never materialized.
-    if not fs.rename(P(src), P(dst)):
-        raise IOError(f"Hadoop FS rename failed: {src} -> {dst}")
-
-
-def _exists(p: str) -> bool:
-    if not _is_uri(p):
-        return os.path.exists(p)
-    fs, jvm = _hadoop_fs(p)
-    return fs.exists(jvm.org.apache.hadoop.fs.Path(p))
-
-
-def _join(root: str, name: str) -> str:
-    return root.rstrip("/") + "/" + name
-
-
-def _batch_dirs(root: str, below: int | None = None) -> list[str]:
-    out = []
-    for d in _listdir(root):
-        m = re.fullmatch(r"batch=(\d+)", d)
-        if m and (below is None or int(m.group(1)) < below):
-            out.append(_join(root, d))
-    return out
-
-
-def _compacted_dir(root: str) -> tuple[str | None, int]:
-    """Newest `compacted=<N>` dir (signatures of every batch id < N merged
-    into one directory) and its N; (None, 0) when the store has never been
-    compacted."""
-    best, best_n = None, 0
-    for d in _listdir(root):
-        m = re.fullmatch(r"compacted=(\d+)", d)
-        if m and int(m.group(1)) > best_n:
-            best, best_n = _join(root, d), int(m.group(1))
-    return best, best_n
-
-
-def _tail_dirs(root: str, n: int, below: int | None = None) -> list[str]:
-    """batch=<id> dirs with n <= id (< below) — the uncompacted tail."""
-    return [
-        d for d in _batch_dirs(root, below)
-        if int(re.search(r"batch=(\d+)$", d).group(1)) >= n
-    ]
-
-
-def _commit_compacted(
-    root: str, horizon: int, write, sources: list[str],
-    old_comp: str | None = None, strict: bool = True,
-) -> bool:
-    """The shared atomic-replace protocol every store compaction commits
-    through: write the merged content to `compacted=<horizon>.tmp` via
-    `write(tmp_path)`, rename into place, and VERIFY the final dir exists
-    before any destructive step — Hadoop FS rename reports failure by
-    returning False (_rename raises on it) but object stores can also lie,
-    so existence is checked explicitly. Only then are the merged `sources`,
-    the previous compacted dir and a dir moved aside from the target path
-    deleted; a failed commit moves that dir back. strict=False returns False
-    instead of raising when the committed dir never materialized (callers
-    whose sources are safe to leave behind)."""
-    tmp = _join(root, f"compacted={horizon}.tmp")
-    final = _join(root, f"compacted={horizon}")
-    # a rerun at an UNCHANGED horizon re-commits to the path the old
-    # compacted dir occupies (reachable for labels/rollup, whose callers
-    # have no empty-tail early return): move the old dir aside rather than
-    # deleting it, so a failed rename can put the store's only compacted
-    # state back
-    bak = _join(root, f"compacted={horizon}.bak")
-    _rmtree(tmp)
-    write(tmp)
-    _rmtree(bak)
-    aside = _exists(final)
-    if aside:
-        _rename(final, bak)
-    try:
-        _rename(tmp, final)
-        if not _exists(final):
-            raise IOError(
-                f"compacted {final} missing after rename — refusing to "
-                f"delete merged sources"
-            )
-    except IOError:
-        if aside:
-            _rmtree(final)
-            _rename(bak, final)
-        # strict=False callers (the lenient metrics rollup) treat a failed
-        # commit as deferred listing-growth debt, safe to leave behind
-        if strict:
-            raise
-        return False
-    _rmtree(bak)
-    for d in sources:
-        _rmtree(d)
-    if old_comp and old_comp != final:
-        _rmtree(old_comp)
-    return True
-
-
-def _chunked_in_scan(
-    spark: SparkSession, comp: str | None, tail: list[str], keys: list,
-    col: str,
-):
-    """Point-lookup scan for a bounded key set: chunked In filters over
-    the key-sorted compacted prefix (row-group pruning) AND the batch
-    tail — ALWAYS filtered, never the pruned_store_scan cost-crossover
-    fallback, because callers collect() every returned row to the driver
-    and the filter is what bounds that collect. All chunk branches are
-    unioned into ONE DataFrame so the caller's collect is a single job
-    (each In filter still pushes down per-branch); returns None when
-    there is nothing to scan."""
-    srcs = []
-    if comp is not None:
-        srcs.append(spark.read.parquet(comp))
-    if tail:
-        srcs.append(spark.read.parquet(*tail))
-    if not srcs or not keys:
-        return None
-    spark.conf.set(
-        "spark.sql.parquet.pushdown.inFilterThreshold",
-        str(_PUSHDOWN_CHUNK + 1),
-    )
-    out = None
-    for s in srcs:
-        for i in range(0, len(keys), _PUSHDOWN_CHUNK):
-            part = s.filter(F.col(col).isin(keys[i:i + _PUSHDOWN_CHUNK]))
-            out = part if out is None else out.unionByName(part)
-    return out
-
-
-def _store_dirs(root: str, below: int | None = None) -> list[str]:
-    """Directories whose union is the signatures of all batches < `below`:
-    the newest compacted prefix plus the uncompacted batch tail. NOTE the
-    two layouts differ: `batch=<id>` dirs hold signature rows, the
-    `compacted=<N>` dir holds BANDED rows (8 per signature, sorted by
-    bandkey — see compact_store); use read_store_signatures for a uniform
-    one-row-per-signature view.
-
-    Horizon check: the streaming checkpoint only ever replays the single
-    in-flight batch, and compact_store only covers metrics-certified
-    batches, so a (re)processed batch id can sit AT the horizon (n ==
-    below + 1: certified-but-uncommitted crash window — safe, because the
-    replayed batch's signatures appearing both fresh and inside the
-    compacted dir collapse in the store join's canonical distinct) but
-    never BELOW it; n > below + 1 means the store was compacted while the
-    stream ran, which WOULD silently change join inputs — refuse."""
-    comp, n = _compacted_dir(root)
-    if comp is None:
-        return _batch_dirs(root, below)
-    if below is not None and n > below + 1:
-        raise RuntimeError(
-            f"store compacted through batch {n} but batch {below} is being "
-            f"(re)processed — compact_store must only run between stream "
-            f"runs"
-        )
-    tail = [
-        d for d in _batch_dirs(root, below)
-        if int(re.search(r"batch=(\d+)$", d).group(1)) >= n
-    ]
-    return [comp, *tail]
 
 
 def banded_signatures(sigs: DataFrame) -> DataFrame:
@@ -266,8 +68,7 @@ def read_store_signatures(spark: SparkSession, root: str) -> DataFrame:
     """Uniform one-row-per-signature view of the store regardless of
     layout: band-0 rows of the compacted dir (exactly one per signature)
     plus the raw signature rows of the uncompacted batch tail."""
-    _SPARK_FOR_FS[0] = spark
-    comp, n = _compacted_dir(root)
+    comp, tail = _live(spark, root)
     cols = ["image_id", *WIDE_WORDS]
     parts = []
     if comp is not None:
@@ -276,10 +77,6 @@ def read_store_signatures(spark: SparkSession, root: str) -> DataFrame:
             .filter(F.col("bandkey") < F.lit(1 << STORE_LAYOUT.key_bits))
             .select(*cols)
         )
-    tail = [
-        d for d in _batch_dirs(root)
-        if int(re.search(r"batch=(\d+)$", d).group(1)) >= n
-    ]
     if tail:
         parts.append(spark.read.parquet(*tail).select(*cols))
     if not parts:
@@ -290,69 +87,6 @@ def read_store_signatures(spark: SparkSession, root: str) -> DataFrame:
     return out
 
 
-# In-list chunk size pushed into each parquet scan of the compacted store.
-# Spark lowers an In of ≤ inFilterThreshold values to a recursive OR chain
-# of parquet predicates; measured on this Spark build the chain blows the
-# JVM stack somewhere between 800 and 1500 values, so scans take ≤ 512
-# keys each and the batch's key set is split across several scans.
-_PUSHDOWN_CHUNK = 512
-# In-list plan-size ceiling (literal count, not a bytes-read concern: the
-# pruned read itself is O(keys) regardless). Past it the giant literal list
-# costs more in planning than pruning saves only once the predicted pruned
-# read approaches the full scan — see the crossover test below.
-_MAX_PUSHDOWN_KEYS_CONF = "spark.osm2mp.store.maxPushdownKeys"
-_DEFAULT_MAX_PUSHDOWN_KEYS = 50_000
-
-
-def pruned_store_scan(
-    spark: SparkSession, comp_dir: str, keys: list,
-    key_col: str = "bandkey",
-) -> DataFrame:
-    """Scan of a compacted store bounded by a point-key set: the store is
-    range-sorted by `key_col` (compact_store / compact_topk_state), so
-    pushing the batch's point keys (8 per signature) as parquet In filters
-    prunes to the row groups whose [min,max] contain a key — per-batch
-    bytes read is O(|batch| · row_group_size), independent of store size
-    (the r4 verdict weak item: the previous layout re-read the WHOLE store
-    every batch).
-    Measured via /proc rchar: 800 keys against an 80M-row store read 70 MB
-    vs 2,582 MB for the full scan, flat as the store grows.
-
-    For very large key sets the decision is a COST CROSSOVER, not a fixed
-    cliff: predicted pruned read ≈ |keys| × max_rowgroup_rows (each point
-    key can touch at most one row group plus a boundary); when that
-    reaches the store's total rows — or footer stats are unavailable and
-    the key count exceeds the plan-size ceiling — the full scan is
-    genuinely cheaper and we take it deliberately."""
-    df = spark.read.parquet(comp_dir)
-    if not keys:
-        return df.limit(0)
-    max_keys = int(
-        spark.conf.get(
-            _MAX_PUSHDOWN_KEYS_CONF, str(_DEFAULT_MAX_PUSHDOWN_KEYS)
-        )
-    )
-    if len(keys) > max_keys:
-        stats = rowgroup_stats(comp_dir)
-        if stats is None or len(keys) * stats[1] >= stats[0]:
-            return df  # predicted pruned read ≥ full scan — scan once
-    # deliberately a lasting session-conf change (NOT try/finally-restored):
-    # the scan is lazy, so the threshold must still be raised when the
-    # action finally plans it. 513 keeps other queries' In pushdowns far
-    # under the ~800-1500-literal OR-chain stack limit measured on this
-    # build, so the session-wide effect is benign.
-    spark.conf.set(
-        "spark.sql.parquet.pushdown.inFilterThreshold",
-        str(_PUSHDOWN_CHUNK + 1),
-    )
-    ks = sorted(keys)
-    out = None
-    for i in range(0, len(ks), _PUSHDOWN_CHUNK):
-        scan = df.filter(F.col(key_col).isin(ks[i:i + _PUSHDOWN_CHUNK]))
-        out = scan if out is None else out.unionByName(scan)
-    return out
-
-
 def compact_pairs(
     spark: SparkSession, pairs_path: str, store_path: str,
     num_files: int | None = None,
@@ -360,43 +94,18 @@ def compact_pairs(
     """Roll certified per-batch pair dirs into one `compacted=<N>` dir —
     the pairs subtree otherwise grows one directory per micro-batch
     forever, the same unbounded-listing problem compact_store bounds for
-    signatures. Certification (a metrics row in the dedup store) keeps a
-    crash-window batch's pairs dir out of the merge so its replay stays
-    idempotent. read_pairs unions the compacted prefix with the batch
+    signatures. read_pairs unions the compacted prefix with the batch
     tail."""
-    _SPARK_FOR_FS[0] = spark
-    comp, comp_n = _compacted_dir(pairs_path)
-    certified = {
-        int(re.search(r"batch=(\d+)$", d).group(1))
-        for d in _batch_dirs(_join(store_path, "metrics"))
-    }
-    mcomp, mcomp_n = _compacted_dir(_join(store_path, "metrics"))
-    batches = [
-        d for d in _batch_dirs(pairs_path)
-        if int(re.search(r"batch=(\d+)$", d).group(1)) in certified
-        or int(re.search(r"batch=(\d+)$", d).group(1)) < mcomp_n
-    ]
-    if not batches:
-        return comp_n
-    ids = [int(re.search(r"batch=(\d+)$", d).group(1)) for d in batches]
-    horizon = max(ids) + 1
-    tail = [d for d, i in zip(batches, ids) if i >= comp_n]
-    if not tail:
-        for d in batches:
-            _rmtree(d)
-        return comp_n
-    merged = spark.read.parquet(*tail).select("id_a", "id_b", "hamming")
-    if comp:
-        merged = spark.read.parquet(comp).unionByName(merged)
-    _commit_compacted(
-        pairs_path, horizon,
-        lambda tmp: merged.coalesce(
+
+    def write(tmp, comp, tail):
+        merged = spark.read.parquet(*tail).select("id_a", "id_b", "hamming")
+        if comp:
+            merged = spark.read.parquet(comp).unionByName(merged)
+        merged.coalesce(
             num_files or spark.sparkContext.defaultParallelism
-        ).write.mode("overwrite").parquet(tmp),
-        sources=[d for d, i in zip(batches, ids) if i < horizon],
-        old_comp=comp,
-    )
-    return horizon
+        ).write.mode("overwrite").parquet(tmp)
+
+    return _compact(spark, pairs_path, store_path, write)
 
 
 def compact_store(
@@ -406,12 +115,13 @@ def compact_store(
     num_files: int | None = None,
 ) -> int:
     """Merge the accumulated signature store (compacted prefix + every
-    COMPLETED `batch=<id>` dir) into a single `compacted=<max_id+1>` dir
-    and drop the merged inputs. Run BETWEEN stream runs (never while the
-    query is active): at one dir per micro-batch a long-lived ingest
-    accumulates unbounded directory listings; compaction bounds store reads
-    to one merged dir + the tail since the last compaction. Atomic via
-    write-to-tmp + rename; returns the new horizon N (0 = nothing to do).
+    CERTIFIED `batch=<id>` dir) into a single `compacted=<max_id+1>` dir
+    and drop the merged inputs; returns the new horizon N (0 = nothing to
+    do). At one dir per micro-batch a long-lived ingest accumulates
+    unbounded directory listings; compaction bounds store reads to one
+    merged dir + the tail since the last compaction. Runs between stream
+    runs or from a completed batch's hook (streaming.store states the
+    certification and replay-horizon rules that make both safe).
 
     The compacted dir is written in the BANDED layout, range-sorted by
     bandkey with `parquet.block.size = block_bytes` row groups, so that
@@ -420,83 +130,40 @@ def compact_store(
     to O(batch) instead of O(store). Smaller block_bytes = finer pruning
     granularity at the cost of more footer metadata.
 
-    Only batches CERTIFIED by a metrics row are eligible: a crash can leave
-    store/batch=b written but the streaming checkpoint uncommitted, and the
-    restarted stream will REPLAY batch b — if compaction had swallowed it,
-    _store_dirs' horizon guard would refuse the replay forever. The metrics
-    row is written last in process(), so its presence proves the batch's
-    store+pairs output is complete (the checkpoint commit may still be
-    missing, but a replay over a compacted horizon N == b is then
-    indistinguishable from the committed run: same store prefix, same
-    idempotent overwrite outputs). Certified per-batch metrics rows below
-    the horizon are themselves rolled into `metrics/compacted=<N>` so the
-    one-dir-per-batch listing growth is bounded in the metrics subtree too.
-
-    Every destructive step is ordered AFTER the committed dir is verified
-    to exist (Hadoop FS rename reports failure by returning False — _rename
-    raises on it — but object stores can also lie, so existence is checked
-    explicitly before any source is deleted)."""
-    _SPARK_FOR_FS[0] = spark
-    comp, comp_n = _compacted_dir(store_path)
-    metrics_root = _join(store_path, "metrics")
-    metric_dirs = _batch_dirs(metrics_root)
-    certified = {
-        int(re.search(r"batch=(\d+)$", d).group(1)) for d in metric_dirs
-    }
-    mcomp0, mcomp0_n = _compacted_dir(metrics_root)
-    batches = [
-        d for d in _batch_dirs(store_path)
-        if int(re.search(r"batch=(\d+)$", d).group(1)) in certified
-        # below the metrics horizon = certified before that compaction
-        # (its per-batch metrics dir was rolled up); treat replayed store
-        # dirs there as certified so they get cleaned up
-        or int(re.search(r"batch=(\d+)$", d).group(1)) < mcomp0_n
-    ]
-    if not batches:
-        return comp_n
-    ids = [int(re.search(r"batch=(\d+)$", d).group(1)) for d in batches]
-    horizon = max(ids) + 1
-    tail_sigs = [d for d, i in zip(batches, ids) if i >= comp_n]
-    if not tail_sigs:
-        # only sub-horizon replays (their content is already in the
-        # compacted dir — deterministic recompute) — just drop them
-        for d in batches:
-            _rmtree(d)
-        return comp_n
-    merged = banded_signatures(spark.read.parquet(*tail_sigs))
-    if comp:
-        merged = spark.read.parquet(comp).unionByName(merged)
+    Certified per-batch metrics rows are then rolled into
+    `metrics/compacted=<N>` so the one-dir-per-batch listing growth is
+    bounded in the metrics subtree too."""
     n_parts = num_files or spark.sparkContext.defaultParallelism
-    _commit_compacted(
-        store_path, horizon,
-        lambda tmp: (
+
+    def write(tmp, comp, tail):
+        merged = banded_signatures(spark.read.parquet(*tail))
+        if comp:
+            merged = spark.read.parquet(comp).unionByName(merged)
+        (
             merged.repartitionByRange(n_parts, "bandkey")
             .sortWithinPartitions("bandkey")
             .write.mode("overwrite")
             .option("parquet.block.size", block_bytes)
             .parquet(tmp)
-        ),
-        sources=[d for d, i in zip(batches, ids) if i < horizon],
-        old_comp=comp,
-    )
-    # ---- roll certified metrics rows below the horizon into one file too.
-    # Metric batch dirs BELOW the previous metrics horizon are crash-window
-    # replays whose rows the previous compacted file already holds —
-    # including them would bake a duplicate row in permanently. Lenient
-    # commit (strict=False): the store commit above already succeeded, and
-    # uncompacted metric dirs are merely a listing-growth debt, safe to
-    # leave for the next compaction.
-    mcomp, mcomp_n = _compacted_dir(metrics_root)
-    msrcs = ([mcomp] if mcomp else []) + [
-        d for d in metric_dirs
-        if int(re.search(r"batch=(\d+)$", d).group(1)) >= mcomp_n
-    ]
+        )
+
+    before = _compacted_dir(spark, store_path)[1]
+    horizon = _compact(spark, store_path, store_path, write)
+    if horizon == before:
+        return horizon
+    # The metrics roll-up merges the ledger's live view: metric batch dirs
+    # BELOW its previous horizon are crash-window replays whose rows the
+    # previous compacted file already holds — including them would bake a
+    # duplicate row in permanently. Lenient commit (strict=False): the
+    # store commit above already succeeded, and uncompacted metric dirs are
+    # merely a listing-growth debt, safe to leave for the next compaction.
+    mroot = _metrics_root(store_path)
     _commit_compacted(
-        metrics_root, horizon,
-        lambda tmp: spark.read.parquet(*msrcs).coalesce(1)
-        .write.mode("overwrite").parquet(tmp),
-        sources=metric_dirs,
-        old_comp=mcomp,
+        spark, mroot, horizon,
+        lambda tmp: _read_live(spark, mroot, BATCH_METRICS_SCHEMA)
+        .coalesce(1).write.mode("overwrite").parquet(tmp),
+        sources=_batch_dirs(spark, mroot),
+        old_comp=_compacted_dir(spark, mroot)[0],
         strict=False,
     )
     return horizon
@@ -644,7 +311,6 @@ def start_incremental_dedup(
     `on_batch_complete(batch_id)` (test hook) runs after each batch's
     metrics row lands — e.g. to trigger a mid-stream compaction."""
 
-    _SPARK_FOR_FS[0] = spark
     # the store's banding is lossless only to Hamming 7: a larger
     # threshold raises here, not as silently missing pairs
     hamming_layout(WIDE_BITS, max_hamming)
@@ -654,7 +320,7 @@ def start_incremental_dedup(
 
         t0 = time.time()
         r0 = _jvm_read_bytes()
-        sig_dir = _join(store_path, f"batch={batch_id:09d}")
+        sig_dir = _batch_dir(store_path, batch_id)
         (
             dhash_wide_images(batch_df)
             .write.mode("overwrite")
@@ -668,7 +334,7 @@ def start_incremental_dedup(
         band_rows = [r[0] for r in newb.select("bandkey").collect()]
         keys = list(set(band_rows))
         n_new = len(band_rows) // len(STORE_LAYOUT.bands)
-        out = _join(pairs_path, f"batch={batch_id:09d}")
+        out = _batch_dir(pairs_path, batch_id)
 
         def build_allb() -> tuple[DataFrame, int, DataFrame | None]:
             """Banded view of everything the batch joins against: its own
@@ -677,18 +343,7 @@ def start_incremental_dedup(
             picks up the new layout. Also returns the tail's banded row
             count (8 × its footer row count) and the pruned scan, the two
             parts of store_rows_scanned."""
-            comp, n = _compacted_dir(store_path)
-            if comp is not None and n > batch_id + 1:
-                raise RuntimeError(
-                    f"store compacted through batch {n} but batch "
-                    f"{batch_id} is being (re)processed — a replay can "
-                    f"sit at most ONE batch behind the horizon"
-                )
-            tail = [
-                d for d in _batch_dirs(store_path, below=batch_id)
-                if int(re.search(r"batch=(\d+)$", d).group(1)) >= n
-                and d != sig_dir
-            ]
+            comp, tail = _live(spark, store_path, below=batch_id)
             allb, tail_rows, pruned = newb, 0, None
             if tail:
                 allb = allb.unionByName(
@@ -756,12 +411,7 @@ def start_incremental_dedup(
                 # deltas/batch dir. Certification is written AFTER the
                 # rollup, so it proves those outputs exist and are correct
                 # — keep them and skip the recompute.
-                mroot = _join(store_path, "metrics")
-                certified = (
-                    _compacted_dir(mroot)[1] > int(batch_id)
-                    or _exists(_join(mroot, f"batch={batch_id:09d}"))
-                )
-                if not certified:
+                if not _certified(spark, store_path)(batch_id):
                     update_rollup(
                         spark, rollup_root, int(batch_id), new,
                         rollup_key_expr, fold, rollup_assign,
@@ -779,7 +429,7 @@ def start_incremental_dedup(
             float(n_new / secs) if secs > 0 else 0.0,
             int(n_store), int(read_bytes),
         )).write.mode("overwrite").parquet(
-            _join(_join(store_path, "metrics"), f"batch={batch_id:09d}")
+            _batch_dir(_metrics_root(store_path), batch_id)
         )
         if on_batch_complete is not None:
             on_batch_complete(int(batch_id))
@@ -797,22 +447,12 @@ def start_incremental_dedup(
 
 
 def read_pairs(spark: SparkSession, pairs_path: str) -> DataFrame:
-    """Accumulated pair set across every processed micro-batch: the
-    compacted prefix (compact_pairs) plus batch dirs at or above its
-    horizon. Sub-horizon batch dirs are skipped — they only exist as
-    crash-window replays whose (byte-identical) content the compacted dir
-    already holds, so including them would duplicate rows."""
-    _SPARK_FOR_FS[0] = spark
-    comp, n = _compacted_dir(pairs_path)
-    dirs = ([comp] if comp else []) + [
-        d for d in _batch_dirs(pairs_path)
-        if int(re.search(r"batch=(\d+)$", d).group(1)) >= n
-    ]
-    if not dirs:
-        return spark.createDataFrame(
-            [], "id_a string, id_b string, hamming int"
-        )
-    return spark.read.parquet(*dirs).select("id_a", "id_b", "hamming")
+    """Accumulated pair set across every processed micro-batch: the live
+    view of the pairs subtree (compact_pairs' prefix plus the batch dirs
+    at or above its horizon)."""
+    return _read_live(
+        spark, pairs_path, "id_a string, id_b string, hamming int"
+    ).select("id_a", "id_b", "hamming")
 
 
 def read_batch_metrics(spark: SparkSession, store_path: str) -> DataFrame:
@@ -820,18 +460,7 @@ def read_batch_metrics(spark: SparkSession, store_path: str) -> DataFrame:
     secs, images_per_sec) — the mid-run resume ledger: a batch with a
     metrics row is complete; absent rows re-run from the streaming
     checkpoint."""
-    _SPARK_FOR_FS[0] = spark
-    metrics_root = _join(store_path, "metrics")
-    mcomp, n = _compacted_dir(metrics_root)
-    # skip sub-horizon batch dirs: they only exist as crash-window replays
-    # whose (byte-identical) rows the compacted file already holds
-    dirs = ([mcomp] if mcomp else []) + [
-        d for d in _batch_dirs(metrics_root)
-        if int(re.search(r"batch=(\d+)$", d).group(1)) >= n
-    ]
-    if not dirs:
-        return spark.createDataFrame([], BATCH_METRICS_SCHEMA)
-    return spark.read.parquet(*dirs)
+    return _read_live(spark, _metrics_root(store_path), BATCH_METRICS_SCHEMA)
 
 
 __all__ = [

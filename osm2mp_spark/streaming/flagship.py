@@ -39,33 +39,22 @@ anti-joined distributed and assigned in the same pass.
 Exactness: by induction each batch's deltas transform the log's sums from
 the pre-batch rollup to the post-batch rollup, so the final sums equal the
 one-shot `flagship_dedup` — the gate (streaming_incremental_flagship)
-checks this with the SAME composed DuckDB oracle. Replays are idempotent:
-every lookup is bounded strictly below the replayed batch id, outputs are
-idempotent per-batch overwrites, and read/compact skip sub-horizon replay
-dirs exactly like streaming.dedup.read_pairs. Unlike the state-idempotent
-labels store, deltas are INCREMENTS — so a replay of an already-CERTIFIED
-batch (whose fold could read post-batch cluster state once the labels
-store compacts through it) must not recompute: process() skips
-update_rollup when the batch's metrics row exists, keeping the original
-(correct) delta dir in place.
+checks this with the SAME composed DuckDB oracle. Both subtrees are
+streaming.store batch-directory stores (layout, certification, replay
+horizon and commit order are stated there): every lookup is bounded
+strictly below the replayed batch id and outputs are idempotent per-batch
+overwrites. Unlike the state-idempotent labels store, deltas are
+INCREMENTS — so a replay of an already-CERTIFIED batch (whose fold could
+read post-batch cluster state once the labels store compacts through it)
+must not recompute: process() skips update_rollup for certified batches,
+keeping the original (correct) delta dir in place.
 """
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .dedup import (
-    _SPARK_FOR_FS,
-    _batch_dirs,
-    _chunked_in_scan,
-    _commit_compacted,
-    _compacted_dir,
-    _join,
-    _rmtree,
-    _tail_dirs,
-)
+from .store import _batch_dir, _compact, _join, _point_lookup, _read_live
 
 DELTAS_SCHEMA = "city_id string, tile_id int, dk long, di long"
 SIZES_SCHEMA = "root long, size long, b long"
@@ -78,16 +67,12 @@ def _sizes_for(
     """Latest stored size per root for the given root set (absent →
     singleton, size 1 — only multi-member clusters are stored). Chunked-In
     point lookup (row-group pruning on the root-sorted compacted prefix;
-    the filter also bounds the driver collect). `below` bounds the TAIL
-    only — the compacted prefix needs no bound because its horizon can
-    never pass an uncertified batch (compact_rollup merges certified
-    batches only), and a replay of a CERTIFIED batch never reaches this
-    lookup (the process() certification guard skips update_rollup), so
-    every read here sees state strictly below the batch being folded."""
-    comp, n = _compacted_dir(sizes_root)
-    scan = _chunked_in_scan(
-        spark, comp, _tail_dirs(sizes_root, n, below), roots, "root"
-    )
+    the filter also bounds the driver collect). `below` bounds the tail
+    and guards the compacted horizon; a replay of a CERTIFIED batch never
+    reaches this lookup (the process() certification guard skips
+    update_rollup), so every read here sees state strictly below the batch
+    being folded."""
+    scan = _point_lookup(spark, sizes_root, roots, "root", below)
     best: dict[int, tuple[int, int]] = {}
     if scan is not None:
         for r in scan.collect():
@@ -113,9 +98,8 @@ def update_rollup(
     DataFrame to (point_id, city_id, tile_id) — the pure spatial kernel
     (positions derive from the key, so a cluster's row placement follows
     its root). Idempotent overwrite per batch."""
-    _SPARK_FOR_FS[0] = spark
     sizes_root = _join(rollup_root, "sizes")
-    deltas_dir = _join(rollup_root, f"deltas/batch={batch_id:09d}")
+    deltas_dir = _batch_dir(_join(rollup_root, "deltas"), batch_id)
 
     arrivals = batch_sigs.selectExpr(f"{key_expr} AS point_id")
     touched = fold["touched"]
@@ -188,9 +172,7 @@ def update_rollup(
     out.write.mode("overwrite").parquet(deltas_dir)
     spark.createDataFrame(size_rows or [], SIZES_SCHEMA).coalesce(
         1
-    ).write.mode("overwrite").parquet(
-        _join(sizes_root, f"batch={batch_id:09d}")
-    )
+    ).write.mode("overwrite").parquet(_batch_dir(sizes_root, batch_id))
 
 
 def read_rollup(spark: SparkSession, rollup_root: str) -> DataFrame:
@@ -199,14 +181,7 @@ def read_rollup(spark: SparkSession, rollup_root: str) -> DataFrame:
     replays whose contribution the compacted file already holds). Rows
     whose net keeper count is zero are clusters fully retracted from that
     cell — absent from the batch rollup, so dropped here."""
-    _SPARK_FOR_FS[0] = spark
-    deltas_root = _join(rollup_root, "deltas")
-    comp, n = _compacted_dir(deltas_root)
-    dirs = ([comp] if comp else []) + _tail_dirs(deltas_root, n)
-    log = (
-        spark.read.parquet(*dirs) if dirs
-        else spark.createDataFrame([], DELTAS_SCHEMA)
-    )
+    log = _read_live(spark, _join(rollup_root, "deltas"), DELTAS_SCHEMA)
     return (
         log.groupBy("city_id", "tile_id")
         .agg(F.sum("dk").alias("n_keepers"), F.sum("di").alias("n_images"))
@@ -221,89 +196,35 @@ def compact_rollup(
     """Roll certified delta batches into one net `deltas/compacted=<N>`
     (zero-net cells dropped) and the sizes store into a root-sorted
     `sizes/compacted=<N>` holding only the latest row per root — bounding
-    both the listing growth and the point-lookup read paths, same
-    crash-window certification rules as compact_store."""
-    _SPARK_FOR_FS[0] = spark
-    certified = {
-        int(re.search(r"batch=(\d+)$", d).group(1))
-        for d in _batch_dirs(_join(store_path, "metrics"))
-    }
-    _, mcomp_n = _compacted_dir(_join(store_path, "metrics"))
+    both the listing growth and the point-lookup read paths. Only batches
+    certified by the dedup metrics ledger merge."""
+    n_parts = num_files or spark.sparkContext.defaultParallelism
 
-    def ok(d: str) -> bool:
-        i = int(re.search(r"batch=(\d+)$", d).group(1))
-        return i in certified or i < mcomp_n
-
-    deltas_root = _join(rollup_root, "deltas")
-    sizes_root = _join(rollup_root, "sizes")
-    d_batches = [d for d in _batch_dirs(deltas_root) if ok(d)]
-    s_batches = [d for d in _batch_dirs(sizes_root) if ok(d)]
-    if not d_batches and not s_batches:
-        return _compacted_dir(deltas_root)[1]
-    ids = [
-        int(re.search(r"batch=(\d+)$", d).group(1))
-        for d in d_batches + s_batches
-    ]
-    horizon = max(ids) + 1
-
-    # ---- deltas: net per cell
-    comp, comp_n = _compacted_dir(deltas_root)
-    tail = [
-        d for d in d_batches
-        if int(re.search(r"batch=(\d+)$", d).group(1)) >= comp_n
-    ]
-    if not tail:
-        # only sub-horizon replay dirs (already represented in the
-        # compacted net, or never written thanks to the certification
-        # guard) — drop them, never recommit at an unchanged horizon
-        for d in d_batches:
-            _rmtree(d)
-    else:
-        srcs = ([comp] if comp else []) + tail
-        net = (
-            spark.read.parquet(*srcs)
+    def write_net(tmp, comp, tail):
+        (
+            spark.read.parquet(*([comp] if comp else []), *tail)
             .groupBy("city_id", "tile_id")
             .agg(F.sum("dk").alias("dk"), F.sum("di").alias("di"))
             .filter("dk != 0 OR di != 0")
-        )
-        _commit_compacted(
-            deltas_root, horizon,
-            lambda tmp: net.coalesce(
-                num_files or spark.sparkContext.defaultParallelism
-            ).write.mode("overwrite").parquet(tmp),
-            sources=d_batches,
-            old_comp=comp,
+            .coalesce(n_parts).write.mode("overwrite").parquet(tmp)
         )
 
-    # ---- sizes: latest row per root, root-sorted for the pruned lookups
-    scomp, scomp_n = _compacted_dir(sizes_root)
-    stail = [
-        d for d in s_batches
-        if int(re.search(r"batch=(\d+)$", d).group(1)) >= scomp_n
-    ]
-    if not stail:
-        for d in s_batches:
-            _rmtree(d)
-    else:
-        ssrcs = ([scomp] if scomp else []) + stail
-        latest = (
-            spark.read.parquet(*ssrcs)
+    def write_latest(tmp, comp, tail):
+        (
+            spark.read.parquet(*([comp] if comp else []), *tail)
             .groupBy("root")
             .agg(F.max(F.struct("b", "size")).alias("m"))
             .select("root", F.col("m.size").alias("size"),
                     F.col("m.b").alias("b"))
+            .repartitionByRange(n_parts, "root")
+            .sortWithinPartitions("root")
+            .write.mode("overwrite").parquet(tmp)
         )
-        n_parts = num_files or spark.sparkContext.defaultParallelism
-        _commit_compacted(
-            sizes_root, horizon,
-            lambda tmp: (
-                latest.repartitionByRange(n_parts, "root")
-                .sortWithinPartitions("root")
-                .write.mode("overwrite").parquet(tmp)
-            ),
-            sources=s_batches,
-            old_comp=scomp,
-        )
+
+    horizon = _compact(
+        spark, _join(rollup_root, "deltas"), store_path, write_net
+    )
+    _compact(spark, _join(rollup_root, "sizes"), store_path, write_latest)
     return horizon
 
 

@@ -42,6 +42,40 @@ class TestCells:
             assert -180.0 <= b[0] and b[2] <= 180.0
 
 
+class TestWithCellColumn:
+    """with_cell_column's staged projections name two temp columns after
+    `out_col`: a taken temp name raises instead of producing ambiguous
+    columns, and any out_col spelling is quoted."""
+
+    def test_taken_staging_name_raises(self, spark):
+        import pytest
+
+        from osm2mp_spark.geometry.cells import with_cell_column
+
+        df = spark.createDataFrame(
+            [(1.0, 2.0, 5)], "lon double, lat double, __cell_iy long"
+        )
+        with pytest.raises(ValueError, match="__cell_iy"):
+            with_cell_column(df, "cell", "lon", "lat", 7)
+
+    def test_out_col_needing_backquotes(self, spark):
+        from osm2mp_spark.geometry.cells import with_cell_column
+
+        lons = rng.uniform(-180, 180, 50)
+        lats = rng.uniform(-90, 90, 50)
+        df = spark.createDataFrame(
+            [(i, float(a), float(b))
+             for i, (a, b) in enumerate(zip(lons, lats))],
+            "i int, lon double, lat double",
+        )
+        want = [int(c) for c in cell_of(lons, lats, level=7)]
+        for name in ("cell id", "cell`id", "cell-id"):
+            out = with_cell_column(df, name, "lon", "lat", 7)
+            assert out.columns == ["i", "lon", "lat", name]
+            got = [r[name] for r in out.orderBy("i").collect()]
+            assert got == want, name
+
+
 class TestPolygonIndex:
     def _polys(self):
         city = Polygon("city_a", [[(0, 0), (8, 0), (8, 8), (0, 8), (0, 0)]])

@@ -682,11 +682,11 @@ class TestIncrementalDedupStream:
             wide_hamming_pairs,
         )
         from osm2mp_spark.streaming.dedup import (
-            _store_dirs,
             compact_store,
             read_pairs,
             start_incremental_dedup,
         )
+        from osm2mp_spark.streaming.store import _live
 
         land = tmp_path / "landing"
         land.mkdir()
@@ -712,7 +712,8 @@ class TestIncrementalDedupStream:
         horizon = compact_store(spark, store)
         assert horizon == 2  # batches 0 and 1 merged
         # store now reads ONE compacted dir (no batch tail yet)
-        dirs = _store_dirs(store, below=2)
+        comp, tail = _live(spark, store, below=2)
+        dirs = [comp, *tail]
         assert len(dirs) == 1 and dirs[0].endswith("compacted=2")
         # a second compaction with no new batches is a no-op at horizon 2
         assert compact_store(spark, store) == 2
@@ -729,7 +730,8 @@ class TestIncrementalDedupStream:
         assert (a.id_a == b.id_a).all() and (a.id_b == b.id_b).all()
         assert not got.duplicated(["id_a", "id_b"]).any()
         # post-restart store = compacted prefix + the new batch dir
-        dirs = _store_dirs(store)
+        comp, tail = _live(spark, store)
+        dirs = [comp, *tail]
         assert any(d.endswith("compacted=2") for d in dirs)
         assert sum(os.path.basename(d).startswith("batch=") for d in dirs) == 1
 
@@ -742,11 +744,11 @@ class TestIncrementalDedupStream:
         import shutil
 
         from osm2mp_spark.streaming.dedup import (
-            _store_dirs,
             compact_store,
             read_pairs,
             start_incremental_dedup,
         )
+        from osm2mp_spark.streaming.store import _live
 
         land = tmp_path / "landing"
         land.mkdir()
@@ -769,7 +771,8 @@ class TestIncrementalDedupStream:
         shutil.rmtree(os.path.join(store, "metrics", "batch=000000001"))
         horizon = compact_store(spark, store)
         assert horizon == 1  # only certified batch 0 merged
-        dirs = _store_dirs(store)
+        comp, tail = _live(spark, store)
+        dirs = [comp, *tail]
         assert any(d.endswith("compacted=1") for d in dirs)
         # batch 1's signature dir survives for the replay
         assert any(d.endswith("batch=000000001") for d in dirs)
@@ -825,49 +828,99 @@ class TestIncrementalDedupStream:
             assert got == expected, f"split {cuts[:3]}... diverged"
 
     def test_uri_store_paths_via_hadoop_fs(self, spark, tmp_path):
-        """Store/pairs/checkpoint given as file:// URIs exercise the
-        Hadoop-FS listing/delete/rename lane (the same code path an
-        hdfs:// or s3a:// store takes on a cluster) end-to-end, including
-        compaction."""
+        """Every store root given as a file:// URI exercises the Hadoop-FS
+        listing/delete/rename lane (the same code path an hdfs:// or s3a://
+        store takes on a cluster) end-to-end for the whole family —
+        signatures, pairs, ANN state, cluster labels and the rollup — with
+        every store compacted mid-stream and again after it."""
         from osm2mp_spark.operators.images import (
             dhash_wide_images,
             wide_hamming_pairs,
         )
+        from osm2mp_spark.queries.images_q import _img_key
+        from osm2mp_spark.streaming.ann import compact_topk_state
+        from osm2mp_spark.streaming.clusters import compact_labels, read_labels
         from osm2mp_spark.streaming.dedup import (
-            _store_dirs,
+            compact_pairs,
             compact_store,
             read_pairs,
             start_incremental_dedup,
         )
+        from osm2mp_spark.streaming.flagship import compact_rollup
+        from osm2mp_spark.streaming.store import _live
 
         land = tmp_path / "landing"
         land.mkdir()
-        self._land(spark, land, 0, 14)
+        self._land(spark, land, 0, 7)
+        self._land(spark, land, 7, 14)
         schema = spark.read.parquet(str(land)).schema
-        store = f"file://{tmp_path}/store"
-        pairs = f"file://{tmp_path}/pairs"
-        ckpt = f"file://{tmp_path}/ckpt"
+        base = f"file://{tmp_path}"
+        store = f"{base}/store"
+        pairs = f"{base}/pairs"
+        ckpt = f"{base}/ckpt"
+        state, clusters, rollup = (
+            f"{base}/state", f"{base}/clusters", f"{base}/rollup"
+        )
+
+        def compact_all():
+            horizon = compact_store(spark, store)
+            compact_pairs(spark, pairs, store)
+            compact_topk_state(spark, state, store)
+            compact_labels(spark, clusters, store)
+            compact_rollup(spark, rollup, store)
+            return horizon
+
         q = start_incremental_dedup(
             spark, str(land), schema, store, pairs, ckpt,
             max_hamming=7, max_files_per_trigger=1,
+            on_batch_complete=lambda b: compact_all() if b == 0 else None,
+            ann_state_path=state, ann_query_pred=TestIncrementalANN.PRED,
+            clusters_root=clusters,
+            cluster_key_exprs=(_img_key("id_a"), _img_key("id_b")),
+            rollup_root=rollup, rollup_key_expr=_img_key("image_id"),
+            rollup_assign=TestIncrementalFlagshipRollup._assign,
         )
         try:
             q.awaitTermination()
         finally:
             q.stop()
         got = read_pairs(spark, pairs).toPandas()
-        batch = wide_hamming_pairs(
-            dhash_wide_images(spark.read.parquet(str(land))), max_hamming=7
-        ).toPandas()
+        sigs = dhash_wide_images(spark.read.parquet(str(land)))
+        batch = wide_hamming_pairs(sigs, max_hamming=7).toPandas()
         assert len(got) == len(batch) == 2
-        horizon = compact_store(spark, store)
+        horizon = compact_all()
         assert horizon >= 1
-        dirs = _store_dirs(store)
+        comp, tail = _live(spark, store)
+        dirs = [comp, *tail]
         assert dirs and dirs[0].startswith("file://")
         from osm2mp_spark.streaming.dedup import read_store_signatures
 
         n = read_store_signatures(spark, store).count()
         assert n == 16
+        # the family's stores: all compacted through both batches, each
+        # equal to its one-shot form
+        for sub in (
+            f"{pairs}", f"{state}", f"{clusters}/labels",
+            f"{rollup}/deltas", f"{rollup}/sizes",
+        ):
+            assert _live(spark, sub) == (f"{sub}/compacted=2", [])
+        TestIncrementalANN()._check(spark, land, base)
+        arrived = [
+            r.k for r in sigs.selectExpr(f"{_img_key('image_id')} AS k")
+            .collect()
+        ]
+        edges = [
+            (r.ka, r.kb) for r in wide_hamming_pairs(sigs, max_hamming=7)
+            .selectExpr(f"{_img_key('id_a')} AS ka",
+                        f"{_img_key('id_b')} AS kb").collect()
+        ]
+        assert {
+            int(r.vertex): int(r.label)
+            for r in read_labels(spark, clusters).collect()
+        } == TestIncrementalClusters()._batch_uf(edges)
+        assert TestIncrementalFlagshipRollup._read(spark, rollup) == (
+            TestIncrementalFlagshipRollup._truth(arrived, edges)
+        )
 
     def test_ledger_counts_exact_across_compaction(self, spark, tmp_path):
         """Every metrics field against an explicit Spark count, on the shape
@@ -1016,39 +1069,41 @@ class TestIncrementalDedupStream:
         before raising."""
         import os
 
-        from osm2mp_spark.streaming import dedup
+        from osm2mp_spark.streaming import store
 
         root = str(tmp_path / "metrics")
         old = f"{root}/compacted=2"
         spark.range(3).write.parquet(old)
-        real = dedup._rename
+        real = store._rename
 
-        def failing(src, dst):
+        def failing(spark, src, dst):
             if src.endswith(".tmp"):
                 raise IOError(f"injected rename failure: {src} -> {dst}")
-            real(src, dst)
+            real(spark, src, dst)
 
-        monkeypatch.setattr(dedup, "_rename", failing)
+        monkeypatch.setattr(store, "_rename", failing)
 
         def write(tmp):
             spark.range(5).write.parquet(tmp)
 
-        assert dedup._commit_compacted(
-            root, 2, write, sources=[], old_comp=old, strict=False,
+        assert store._commit_compacted(
+            spark, root, 2, write, sources=[], old_comp=old, strict=False,
         ) is False
-        assert dedup._compacted_dir(root) == (old, 2)
+        assert store._compacted_dir(spark, root) == (old, 2)
         assert spark.read.parquet(old).count() == 3
         with pytest.raises(IOError, match="injected"):
-            dedup._commit_compacted(root, 2, write, sources=[], old_comp=old)
-        assert dedup._compacted_dir(root) == (old, 2)
+            store._commit_compacted(
+                spark, root, 2, write, sources=[], old_comp=old
+            )
+        assert store._compacted_dir(spark, root) == (old, 2)
         assert spark.read.parquet(old).count() == 3
         assert sorted(os.listdir(root)) == [
             "compacted=2", "compacted=2.tmp",
         ]
         # with the rename working again the recommit replaces the content
-        monkeypatch.setattr(dedup, "_rename", real)
-        assert dedup._commit_compacted(
-            root, 2, write, sources=[], old_comp=old, strict=False,
+        monkeypatch.setattr(store, "_rename", real)
+        assert store._commit_compacted(
+            spark, root, 2, write, sources=[], old_comp=old, strict=False,
         ) is True
         assert spark.read.parquet(old).count() == 5
         assert sorted(os.listdir(root)) == ["compacted=2"]
@@ -1646,6 +1701,41 @@ class TestIncrementalClusters:
         assert out[1] == out[10]
         assert 7 not in out[10][0]["touched"]
 
+    def test_unmaterialized_pairs_evaluated_once(self, spark, tmp_path):
+        """update_clusters accepts any DataFrame: an unmaterialized `pairs`
+        is evaluated once per fold on both guard paths, counted by an
+        accumulator in a UDF (nondeterministic, so Spark evaluates it
+        exactly once per row per pass)."""
+        from pyspark.sql import functions as F
+
+        from osm2mp_spark.streaming.clusters import update_clusters
+
+        edges = [(3, 9), (9, 12), (20, 21), (7, 7)]
+        for max_edges in (1, 10):  # guard path, raw-collect path
+            acc = spark.sparkContext.accumulator(0)
+
+            def tap(v, acc=acc):
+                acc.add(1)
+                return v
+
+            pairs = spark.createDataFrame(
+                edges, "id_a long, id_b long"
+            ).withColumn(
+                "id_a", F.udf(tap, "long").asNondeterministic()("id_a")
+            )
+            spark.conf.set(
+                "spark.osm2mp.components.driverMaxEdges", str(max_edges)
+            )
+            try:
+                fold = update_clusters(
+                    spark, str(tmp_path / f"clusters{max_edges}"), 0, pairs,
+                    "CAST(id_a AS BIGINT)", "CAST(id_b AS BIGINT)",
+                )
+            finally:
+                spark.conf.unset("spark.osm2mp.components.driverMaxEdges")
+            assert fold["touched"] == [3, 9, 12, 20, 21]
+            assert acc.value == len(edges), f"max_edges {max_edges}"
+
     def test_forwarding_holds_roots_only_and_compaction_resolves(
         self, spark, tmp_path
     ):
@@ -2069,6 +2159,85 @@ class TestIncrementalFlagshipRollup:
         assert self._read(spark, rroot) == self._truth(
             [1, 2, 3, 4, 8, 9], [(1, 2), (3, 4), (2, 3), (9, 8)]
         )
+
+
+class TestReplayHorizonGuard:
+    """Every store reader bounded by a batch id shares one replay-horizon
+    rule: a compacted horizon of batch + 1 (the certified-but-uncommitted
+    crash window) is read, a horizon of batch + 2 raises."""
+
+    def test_every_reader_guards_the_horizon(self, spark, tmp_path):
+        from pyspark.errors import StreamingQueryException
+
+        from osm2mp_spark.operators.images import dhash_wide_images
+        from osm2mp_spark.sources.images import phash_corpus_row
+        from osm2mp_spark.streaming.ann import TOPK_SCHEMA, _read_state
+        from osm2mp_spark.streaming.clusters import (
+            LABELS_SCHEMA,
+            _labels_for,
+        )
+        from osm2mp_spark.streaming.dedup import (
+            banded_signatures,
+            read_pairs,
+            start_incremental_dedup,
+        )
+        from osm2mp_spark.streaming.flagship import SIZES_SCHEMA, _sizes_for
+
+        def compacted(root, horizon, rows, schema):
+            spark.createDataFrame(rows, schema).write.mode(
+                "overwrite"
+            ).parquet(f"{root}/compacted={horizon}")
+            return root
+
+        readers = {
+            "ann": lambda root, b: _read_state(
+                spark, root, ["q"], below=b
+            ).count(),
+            "labels": lambda root, b: _labels_for(spark, root, [1], below=b),
+            "sizes": lambda root, b: _sizes_for(spark, root, [1], below=b),
+        }
+        data = {
+            "ann": ([("q", "n", 1, 1, 0)], TOPK_SCHEMA, 1),
+            "labels": ([(1, 1)], LABELS_SCHEMA, {1: 1}),
+            "sizes": ([(1, 2, 0)], SIZES_SCHEMA, {1: 2}),
+        }
+        for name, read in readers.items():
+            rows, schema, want = data[name]
+            root = compacted(str(tmp_path / name), 3, rows, schema)
+            assert read(root, 2) == want, name
+            with pytest.raises(RuntimeError, match="compacted through"):
+                read(root, 1)
+
+        # the signature-store join: a fresh stream processes batch 0
+        # against a store already compacted through batch 0 (accepted)
+        # or through batch 1 (refused)
+        land = tmp_path / "landing"
+        rows = [phash_corpus_row(i, dup=False) for i in range(3)]
+        spark.createDataFrame(pd.DataFrame(rows)).coalesce(1).write.parquet(
+            str(land)
+        )
+        schema = spark.read.parquet(str(land)).schema
+        prefix = banded_signatures(dhash_wide_images(spark.createDataFrame(
+            pd.DataFrame([phash_corpus_row(0, dup=True)])
+        )))
+        for horizon in (1, 2):
+            base = tmp_path / f"h{horizon}"
+            prefix.write.parquet(f"{base}/store/compacted={horizon}")
+            q = start_incremental_dedup(
+                spark, str(land), schema, f"{base}/store", f"{base}/pairs",
+                f"{base}/ckpt", max_hamming=7,
+            )
+            try:
+                if horizon == 1:
+                    q.awaitTermination()
+                    assert read_pairs(spark, f"{base}/pairs").count() == 1
+                else:
+                    with pytest.raises(
+                        StreamingQueryException, match="compacted through"
+                    ):
+                        q.awaitTermination()
+            finally:
+                q.stop()
 
 
 class TestPrunedScanCrossover:

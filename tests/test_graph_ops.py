@@ -833,6 +833,33 @@ class TestAdaptiveComponentsCrossover:
         assert at_jobs == 1
         assert above_jobs > 1  # pull + one convergence job per round
 
+    def test_null_endpoints_dropped_on_both_paths(self, spark):
+        """An edge with a null endpoint names no vertex: on both sides of
+        driverMaxEdges the labels equal those of the null-free edge list
+        (the Arrow pull would otherwise carry a NaN vertex and the fixpoint
+        a null label)."""
+        from osm2mp_spark.operators.chains import min_label_components
+
+        clean = [(1, 2), (2, 3), (7, 8), (5, 3)]
+        dirty = clean + [(3, None), (None, 9), (None, None)]
+        conf = "spark.osm2mp.components.driverMaxEdges"
+        for bound in (len(clean), 0):  # driver union-find, distributed
+            spark.conf.set(conf, str(bound))
+            try:
+                got = [
+                    sorted(
+                        (r.vertex, r.label) for r in min_label_components(
+                            spark.createDataFrame(e, "src long, dst long")
+                        ).collect()
+                    )
+                    for e in (clean, dirty)
+                ]
+            finally:
+                spark.conf.unset(conf)
+            assert got[1] == got[0] == [
+                (1, 1), (2, 1), (3, 1), (5, 1), (7, 7), (8, 7)
+            ], f"bound {bound}"
+
     def test_driver_path_preserves_key_type(self, spark):
         from osm2mp_spark.operators.chains import min_label_components
 
