@@ -8,9 +8,10 @@ We use a quadtree Z-order cell id over the lon/lat plane:
     cell id = L << 58 | morton(ix, iy)   (level tag keeps ids unique per level)
 
 Everything is pure int64 numpy — exact, portable, vectorized, and therefore
-safe to reproduce inside Spark SQL expressions when we want the encode to run
-JVM-side (see operators/pip_join.py which does exactly that for the coarse
-phase, keeping Python entirely out of the hot path).
+safe to reproduce inside Spark SQL expressions when the encode should run
+JVM-side (`spark_cell_expr`, `with_cell_column`: the cell rollups). The PIP
+kernel (spatial/index.py) maps points to cells with `cell_ixiy`, the same
+formula its cell cover uses, so boundary points land in the covered cell.
 """
 
 from __future__ import annotations

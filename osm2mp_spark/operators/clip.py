@@ -5,9 +5,9 @@ runs, keeping ONE outside vertex at each crossing end (osm2mp.pl:1821-1838,
 `is_inside_bounds` :1197-1202; on-edge counts as inside). A single outside
 vertex between two runs is kept by BOTH parts.
 
-Spark-first design: per-vertex containment is a Column predicate for
-rectangular boundaries (pure whole-stage codegen; the general polygon
-boundary uses the pip_join refine kernel), and the run segmentation is a
+Spark-first design: per-vertex containment is a Column predicate — a bbox
+test, or the ray-cast parity predicate `ring_inside_expr` for a general
+ring (pure whole-stage codegen either way) — and the run segmentation is a
 classic gaps-and-islands window over (chain_id ORDER BY seq):
 
     flag      = vertex inside/on-edge
@@ -43,7 +43,7 @@ def ring_inside_expr(lon: str, lat: str, ring, holes=()) -> str:
     ring (CONCAVE supported) minus holes — pure arithmetic, valid verbatim
     in Spark SQL and DuckDB, so the oracle twin is the same text. One CASE
     term per edge; keep rings small enough for the 64KB codegen limit
-    (≲60 edges — beyond that use the Arrow pip kernel)."""
+    (≲60 edges — beyond that use `pip_resolve`, the Arrow PIP kernel)."""
 
     def crossings(r) -> str:
         pts = [tuple(map(float, p)) for p in r]

@@ -1,14 +1,13 @@
 """Flagship pipeline — the minimum end-to-end slice (SURVEY §7.1.3):
 
-    points → JVM cell-encode → broadcast PIP join (city, holes, canonical
-    overlap rule) → kNN nearest-city fallback for uncontained points →
-    BSP tile assignment → per-tile stats
+    points → smallest-wins PIP resolve (city, holes, canonical overlap
+    rule) → kNN nearest-city fallback for uncontained points → BSP tile
+    assignment → per-tile stats
 
-This exercises scan, whole-stage-codegen cell encode, broadcast hash join,
-Arrow refine UDF, broadcast KD/min_by kNN, broadcast BSP descent, and one
-aggregation — the full skeleton of the 100 TB job. The only wide shuffles
-are the smallest-wins aggregation and the final per-tile count, both
-map-side combinable.
+This exercises scan, the Arrow PIP kernel over a broadcast PolygonIndex,
+expression kNN, broadcast BSP descent, and one aggregation — the full
+skeleton of the 100 TB job. The only wide shuffle is the final per-tile
+count, map-side combinable.
 """
 
 from __future__ import annotations
@@ -59,14 +58,16 @@ def flagship_assign(pts: DataFrame) -> DataFrame:
     with expression-kNN nearest-city fallback, plus broadcast BSP tile
     descent — all carried columns flow through; adds (city_id, tile_id).
     Zero shuffles."""
-    from ..operators.fused import pip_bsp_fused
+    from ..operators.pip_join import pip_resolve
 
-    idx = _city_index_cached()
-    # ONE Arrow pass does PIP smallest-wins + BSP tile descent (operator
-    # fusion at the UDF level — halves Python round-trips vs two stages);
-    # the kNN fallback is a pure JVM expression coalesced on top.
-    both = pip_bsp_fused(
-        pts, idx, _bsp_tree_cached(pts.sparkSession), area_col="__pip_city"
+    # Catalyst batches the two scalar pandas UDFs (PIP smallest-wins, BSP
+    # tile descent) into ONE ArrowEvalPython pass; the kNN fallback is a
+    # pure JVM expression coalesced on top.
+    both = assign_tiles_bsp(
+        pip_resolve(
+            pts, _city_index_cached(), area_col="__pip_city", keep_unmatched=True
+        ),
+        _bsp_tree_cached(pts.sparkSession),
     )
     anchors = [(c["area_id"], c["center"][0], c["center"][1]) for c in CITIES]
     with_nn = knn_bruteforce(both, anchors, out_id="__nn_city").drop("dist_sq")

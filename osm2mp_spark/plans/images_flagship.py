@@ -3,8 +3,9 @@
     Iceberg/parquet scan of images(image_id, bytes, w, h, fmt, caption,
     phash, lon, lat)
       → ONE fused Arrow kernel per batch:
-           decode payload → pixel features → PIP city resolve (bitmask
-           grids, smallest-wins) → BSP tile descent
+           decode payload → pixel features → PIP city resolve
+           (PolygonIndex.smallest: mask-grid kernel, smallest-wins) →
+           kNN fallback → BSP tile descent
       → per-(city, tile) aggregation
 
 Design for 10^12 rows: a single linear pipeline — no join ships `bytes`
@@ -21,7 +22,6 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.fused import _resolve_masks, dense_mask_grids
 from ..sources.images import decode
 from ..sources.layers import CITIES
 from .flagship import _bsp_tree_cached, _city_index_cached
@@ -39,20 +39,19 @@ def flagship_images(spark: SparkSession, images_path: str) -> DataFrame:
     ensure_shipped(spark)
     idx = _city_index_cached()
     tree = _bsp_tree_cached(spark)
-    grids = dense_mask_grids(idx)
-    b = spark.sparkContext.broadcast((idx, grids, tree))
+    b = spark.sparkContext.broadcast((idx, tree))
     anchors = [(c["area_id"], c["center"][0], c["center"][1]) for c in CITIES]
     banchors = spark.sparkContext.broadcast(anchors)
 
     def kernel(it):
         import numpy as np
 
-        idx_b, (cgrid, fgrid, aids, level), tree_b = b.value
+        idx_b, tree_b = b.value
         anc = banchors.value
         for pdf in it:
             lons = pdf["lon"].to_numpy(dtype=float)
             lats = pdf["lat"].to_numpy(dtype=float)
-            city = _resolve_masks(idx_b, cgrid, fgrid, aids, level, lons, lats)
+            city = idx_b.smallest(lons, lats)
             # kNN fallback for uncontained points (vectorized argmin)
             miss = np.array([c is None for c in city])
             if miss.any():

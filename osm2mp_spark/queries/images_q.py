@@ -49,14 +49,13 @@ def image_spatial_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     feature sum. SINGLE lineage: the r2 version branched the generated-image
     DAG into a feature arm and a position arm joined back on image_id, which
     executed generation twice and added a join."""
-    from ..operators.pip_join import pip_join
+    from ..operators.pip_join import pip_resolve
     from ..sources.layers import city_polygons
     from ..spatial.index import PolygonIndex
 
     imgs = generate_images_df(spark, _n_for(spark, sf_dir))
     feats = extract_features(imgs, carry=["lon", "lat"])
-    hits = pip_join(feats, PolygonIndex(city_polygons()), how="smallest",
-                    area_col="city_id")
+    hits = pip_resolve(feats, PolygonIndex(city_polygons()), area_col="city_id")
     return (
         hits.groupBy("city_id")
         .agg(
@@ -762,11 +761,11 @@ def caption_exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def flagship_image_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-image flagship spatial assignment: every dedup-corpus image gets
     a derived position (point_id = packed image key) and runs the flagship
-    kernel — fused PIP smallest-wins + BSP tile descent in one Arrow pass,
-    expression-kNN nearest-city fallback. Golden-gated; the spatial kernels
-    themselves are independently hash-verified (pip_city, knn_city,
-    bsp_tiles). This golden is the spatial leg of flagship_dedup's composed
-    oracle."""
+    kernel — PIP smallest-wins + BSP tile descent batched into one
+    ArrowEvalPython pass, expression-kNN nearest-city fallback.
+    Golden-gated; the spatial kernels themselves are independently
+    hash-verified (pip_city, knn_city, bsp_tiles). This golden is the
+    spatial leg of flagship_dedup's composed oracle."""
     from ..plans.flagship import flagship_assign
     from ..sources.images import generate_phash_corpus_df
     from ..sources.points import with_derived_position
@@ -831,11 +830,11 @@ GROUP BY g.city_id, g.tile_id
 def flagship_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship × wide dedup end-to-end: image corpus → 256-bit wide
     signatures → banded Hamming pairs → min-label clusters → keeper
-    decision → keepers get derived positions → fused PIP+BSP assignment
+    decision → keepers get derived positions → one-pass PIP+BSP assignment
     with kNN fallback → per-(city, tile) keeper counts and total
     represented images (keeper + its dropped duplicates). One pipeline
     from raw images to the spatial rollup a 100-TB ingest would publish —
-    the banded pair join and the fused Arrow spatial kernel are the only
+    the banded pair join and the one-pass Arrow spatial stage are the only
     heavyweight stages, both the at-scale configurations.
 
     Job and worker shape (4 cores): the corpus is generated, encoded,

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..operators.clip import clip_chains_to_bbox, clip_oracle_sql
 from ..operators.knn import knn_bruteforce
-from ..operators.pip_join import pip_flags_or, pip_join
+from ..operators.pip_join import pip_flags_or, pip_resolve
 from ..operators.tiles import assign_tiles_grid, chain_tile_closure, grid_tile_expr
 from ..sources.layers import (
     ACCESS_AREAS,
@@ -149,10 +149,10 @@ SELECT point_id, city_id FROM ranked WHERE rn = 1
 """,
 )
 def pip_city(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J2 — two-phase PIP join (cell broadcast + Arrow refine), hole
-    subtraction, canonical smallest-area overlap rule."""
+    """J2 — zero-shuffle Arrow PIP resolve (mask-grid filter + exact
+    refine), hole subtraction, canonical smallest-area overlap rule."""
     pts = customer_points(spark, sf_dir)
-    return pip_join(pts, _city_index(), how="smallest", area_col="city_id").select(
+    return pip_resolve(pts, _city_index(), area_col="city_id").select(
         "point_id", "city_id"
     )
 
@@ -199,8 +199,6 @@ def pip_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     146-163). No joins at all: Catalyst batches the three scalar pandas
     UDFs into one ArrowEvalPython pass (the earlier formulation ran three
     point_id-keyed left joins — three shuffles of the full point set)."""
-    from ..operators.pip_join import pip_resolve
-
     pts = customer_points(spark, sf_dir)
     out = pip_resolve(pts, _city_index(), area_col="city_id",
                       keep_unmatched=True)
@@ -246,8 +244,6 @@ def knn_city(spark: SparkSession, sf_dir: str) -> DataFrame:
     smallest-wins non-null), then the expression kNN — the whole query has
     no join and no exchange before the driver collect (the earlier
     anti-join formulation shuffled the full point set once)."""
-    from ..operators.pip_join import pip_resolve
-
     pts = customer_points(spark, sf_dir)
     resolved = pip_resolve(
         pts, _city_index(), area_col="__c", keep_unmatched=True
@@ -358,14 +354,11 @@ def cityside_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vkey",
     )
     pts = with_derived_position(samp, "vkey").drop("vkey")
-    hits = (
-        pip_join(pts, _city_index(), how="all").select("point_id").distinct()
-        .withColumn("__inc", F.lit(True))
-    )
+    # contained by any city ⇔ the smallest-wins resolve is non-null
     return (
-        pts.join(hits, "point_id", "left")
+        pip_resolve(pts, _city_index(), area_col="__c", keep_unmatched=True)
         .groupBy("chain_id")
-        .agg(F.bool_and(F.coalesce("__inc", F.lit(False))).alias("inside_city"))
+        .agg(F.bool_and(F.col("__c").isNotNull()).alias("inside_city"))
     )
 
 
@@ -660,9 +653,9 @@ FROM pts
 """,
 )
 def pip_concave_city(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J2 over a CONCAVE polygon with a hole: the same two-phase PIP
-    machinery (cell cover + Arrow ray-cast refine — PolygonIndex already
-    ray-casts, so concavity is native); the oracle is the pure-SQL
+    """J2 over a CONCAVE polygon with a hole: the same PIP kernel (mask-grid
+    filter + Arrow ray-cast refine — PolygonIndex already ray-casts, so
+    concavity is native); the oracle is the pure-SQL
     ray-cast parity predicate. Output: every point with its containment
     bit (on-edge counts inside per is_inside_bounds)."""
     from ..spatial.index import Polygon
@@ -671,14 +664,8 @@ def pip_concave_city(spark: SparkSession, sf_dir: str) -> DataFrame:
         [Polygon("ucity", [_CONCAVE_CITY_OUTER], [_CONCAVE_CITY_HOLE])]
     )
     pts = customer_points(spark, sf_dir)
-    hits = (
-        pip_join(pts, idx, how="all")
-        .select("point_id")
-        .distinct()
-        .withColumn("__in", F.lit(True))
-    )
-    return pts.join(hits, "point_id", "left").select(
-        "point_id", F.coalesce("__in", F.lit(False)).alias("inside")
+    return pip_resolve(pts, idx, area_col="__c", keep_unmatched=True).select(
+        "point_id", F.col("__c").isNotNull().alias("inside")
     )
 
 

@@ -1,18 +1,20 @@
-"""Broadcastable polygon index for the filter-refine PIP join.
+"""Broadcastable polygon index — the one point-in-polygon (PIP) kernel.
 
 Replaces the reference's per-process R-tree (`lib/AreaTree.pm:28-44`,
 Tree::R of bbox → polygon) with a structure designed for Spark:
 
-  coarse phase:  cell id (Z-order, geometry/cells.py) → candidate polygon ids,
-                 materialized as a small (cell, polygon_id) DataFrame that
-                 Catalyst broadcast-joins against the cell-encoded points;
-  refine phase:  exact three-state ray-casting PIP (geometry/kernels.py)
-                 inside an Arrow-vectorized pandas UDF, reading ring data
-                 from a sparkContext.broadcast of this index.
+  filter phase:  a dense grid over the Z-order cells (geometry/cells.py) of
+                 the index level; each grid cell holds two bitmasks over the
+                 polygons in canonical (area, area_id) rank order — the
+                 candidates whose cover touches the cell, and the polygons
+                 that contain the cell entirely;
+  refine phase:  exact three-state ray-casting PIP (geometry/kernels.py) for
+                 the candidates of cells that are not full.
 
-Cells fully inside a polygon are tagged so the refine UDF can skip the exact
-test for them (the reference's rough-containment early accept,
-osm2mp.pl:1711-1720).
+Cells fully inside a polygon skip the exact test (the reference's
+rough-containment early accept, osm2mp.pl:1711-1720). The index is small
+dimension data: operators broadcast it and call `smallest` / `containing`
+inside one Arrow-vectorized pandas UDF.
 """
 
 from __future__ import annotations
@@ -32,7 +34,11 @@ from ..geometry.cells import (
     CELL_LEVEL_DEFAULT,
     cell_bounds,
     cell_cover_bbox,
+    cell_ixiy,
 )
+
+# bitmask width of the grids: one int64 bit per polygon
+MAX_POLYGONS = 64
 
 
 @dataclass
@@ -57,17 +63,26 @@ class Polygon:
 
 
 class PolygonIndex:
-    """Cell-cover index over a set of polygons.
+    """Cell-cover index over at most MAX_POLYGONS polygons.
 
-    `entries()` yields (cell_id, area_id, full) rows — `full=True` when the
-    cell is entirely inside the polygon (exact test skippable). The whole
-    object is small (dimension data) and broadcast to executors for the
-    refine UDF.
+    `entries()` lists (cell_id, area_id, full) rows — `full=True` when the
+    cell is entirely inside the polygon (exact test skippable). `ranked_ids`
+    is the canonical (area, area_id) order: bit r of the grid masks and of
+    `containing`'s result is polygon `ranked_ids[r]`.
     """
 
     def __init__(self, polygons: list[Polygon], level: int = CELL_LEVEL_DEFAULT):
         self.level = level
         self.polygons: dict[str, Polygon] = {p.area_id: p for p in polygons}
+        if len(self.polygons) > MAX_POLYGONS:
+            raise NotImplementedError(
+                f"PolygonIndex supports at most {MAX_POLYGONS} polygons, "
+                f"got {len(self.polygons)}"
+            )
+        self.ranked_ids = [
+            p.area_id
+            for p in sorted(self.polygons.values(), key=lambda p: (p.area, p.area_id))
+        ]
         self._entries: list[tuple[int, str, bool]] = []
         for p in polygons:
             seen: set[int] = set()
@@ -82,6 +97,22 @@ class PolygonIndex:
                     if cls == "outside":
                         continue
                     self._entries.append((cid, p.area_id, cls == "full"))
+        self._build_grids()
+
+    def _build_grids(self):
+        """Dense (2^level)² candidate/full bitmask grids, indexed iy·n + ix:
+        a point's candidates are then two numpy gathers."""
+        n = 1 << self.level
+        rank = {aid: r for r, aid in enumerate(self.ranked_ids)}
+        b = np.array([cell_bounds(cid) for cid, _, _ in self._entries]).reshape(-1, 4)
+        ix, iy = cell_ixiy((b[:, 0] + b[:, 2]) / 2, (b[:, 1] + b[:, 3]) / 2, self.level)
+        pos = iy * n + ix
+        bits = np.int64(1) << np.array([rank[a] for _, a, _ in self._entries], np.int64)
+        full = np.array([f for _, _, f in self._entries], dtype=bool)
+        self._cgrid = np.zeros(n * n, dtype=np.int64)
+        self._fgrid = np.zeros(n * n, dtype=np.int64)
+        np.bitwise_or.at(self._cgrid, pos, bits)
+        np.bitwise_or.at(self._fgrid, pos[full], bits[full])
 
     @staticmethod
     def _classify_cell(cell_id: int, p: Polygon) -> str:
@@ -115,12 +146,55 @@ class PolygonIndex:
     def entries(self) -> list[tuple[int, str, bool]]:
         return list(self._entries)
 
-    def candidates_for_cell(self, cell_id: int) -> list[tuple[str, bool]]:
-        return [(aid, full) for cid, aid, full in self._entries if cid == cell_id]
-
     def refine(self, px: np.ndarray, py: np.ndarray, area_id: str) -> np.ndarray:
         """Exact containment for a batch of points against one polygon."""
         return self.polygons[area_id].contains(px, py)
+
+    def _hits(self, lons, lats, first_only: bool):
+        """The kernel loop: yields (area_id, rank bit, inside) per polygon in
+        rank order, `inside` a boolean array over the points. Points with a
+        non-finite coordinate have no candidates. With `first_only` a point
+        leaves the loop at its first (smallest) container; the loop ends
+        once no point has a candidate left."""
+        lons = np.asarray(lons, dtype=np.float64)
+        lats = np.asarray(lats, dtype=np.float64)
+        ok = np.isfinite(lons) & np.isfinite(lats)
+        ix, iy = cell_ixiy(np.where(ok, lons, 0.0), np.where(ok, lats, 0.0), self.level)
+        pos = iy * (1 << self.level) + ix
+        cmask = np.where(ok, self._cgrid[pos], 0)
+        fmask = self._fgrid[pos]
+        for r, aid in enumerate(self.ranked_ids):
+            if not cmask.any():
+                return
+            bit = np.int64(1) << np.int64(r)
+            has = (cmask & bit) != 0
+            if not has.any():
+                continue
+            inside = has & ((fmask & bit) != 0)
+            rest = np.flatnonzero(has & ~inside)
+            if len(rest):
+                inside[rest[self.refine(lons[rest], lats[rest], aid) >= 0]] = True
+            yield aid, bit, inside
+            if first_only:
+                cmask[inside] = 0
+            else:
+                cmask[has] &= ~bit
+
+    def containing(self, lons, lats) -> np.ndarray:
+        """int64 bitmask per point: bit r set ⇔ the point is inside (or on
+        the boundary of) polygon `ranked_ids[r]`."""
+        out = np.zeros(np.shape(lons), dtype=np.int64)
+        for _aid, bit, inside in self._hits(lons, lats, first_only=False):
+            out[inside] |= bit
+        return out
+
+    def smallest(self, lons, lats) -> np.ndarray:
+        """Object array: per point, the area_id of its smallest-area
+        container (ties by area_id), or None."""
+        out = np.full(np.shape(lons), None, dtype=object)
+        for aid, _bit, inside in self._hits(lons, lats, first_only=True):
+            out[inside] = aid
+        return out
 
     def find_smallest_containing(self, px: np.ndarray, py: np.ndarray) -> np.ndarray:
         """Single-node oracle path: for each point, the containing polygon of

@@ -31,7 +31,7 @@ Per-batch cost is O(batch): the fold (which clusters changed, and how)
 comes from update_clusters' returned union-find summary — sized by the
 batch's pair graph — old sizes are point-looked-up from the sizes store,
 and only the CHANGED clusters produce delta rows; the spatial assignment
-(`assign_fn`: derived position → fused PIP + BSP tile descent) runs on
+(`assign_fn`: derived position → one-pass PIP + BSP tile descent) runs on
 those O(batch) delta rows only. Unchanged clusters are never touched,
 read, or rewritten. Singleton arrivals never reach the driver: they are
 anti-joined distributed and assigned in the same pass.

@@ -1,6 +1,7 @@
 """Unit tests for cell encoding, polygon index, and the BSP tile tree."""
 
 import numpy as np
+import pytest
 
 from osm2mp_spark.geometry.cells import (
     cell_bounds,
@@ -76,6 +77,33 @@ class TestWithCellColumn:
             assert got == want, name
 
 
+# find_smallest_containing is the reference: a per-polygon loop that never
+# touches the mask grids. `smallest` and `containing` are the grid kernel.
+METHODS = ["find_smallest_containing", "smallest", "containing"]
+
+
+def _claims(idx, method, lons, lats) -> dict:
+    """area_id → boolean array: the points `method` places in that area."""
+    if method == "containing":
+        bits = idx.containing(lons, lats)
+        return {
+            aid: ((bits >> r) & 1).astype(bool)
+            for r, aid in enumerate(idx.ranked_ids)
+        }
+    got = getattr(idx, method)(lons, lats)
+    return {aid: got == aid for aid in idx.polygons}
+
+
+def _assert_kernel_exact(idx, lons, lats):
+    """`smallest` equals the reference; `containing` equals every
+    Polygon.contains."""
+    ref = idx.find_smallest_containing(lons, lats)
+    assert list(idx.smallest(lons, lats)) == list(ref)
+    claims = _claims(idx, "containing", lons, lats)
+    for aid, p in idx.polygons.items():
+        assert np.array_equal(claims[aid], p.contains(lons, lats) >= 0), aid
+
+
 class TestPolygonIndex:
     def _polys(self):
         city = Polygon("city_a", [[(0, 0), (8, 0), (8, 8), (0, 8), (0, 0)]])
@@ -86,32 +114,115 @@ class TestPolygonIndex:
         )
         return [city, donut]
 
-    def test_index_matches_bruteforce(self):
+    @pytest.mark.parametrize("method", METHODS)
+    def test_index_matches_bruteforce(self, method):
         idx = PolygonIndex(self._polys(), level=7)
         lons = rng.uniform(-10, 50, 2000)
         lats = rng.uniform(-10, 50, 2000)
-        got = idx.find_smallest_containing(lons, lats)
+        claims = _claims(idx, method, lons, lats)
         for p in self._polys():
             exact = p.contains(lons, lats) >= 0
-            claimed = got == p.area_id
+            claimed = claims[p.area_id]
             # every point claimed for p must be exactly inside
             assert not np.any(claimed & ~exact)
+            if method == "containing":
+                assert np.array_equal(claimed, exact)
         # every point inside exactly one polygon must be claimed
         a, b = self._polys()
         only_a = (a.contains(lons, lats) >= 0) & (b.contains(lons, lats) < 0)
-        assert np.all(got[only_a] == "city_a")
+        assert np.all(claims["city_a"][only_a])
 
-    def test_hole_not_contained(self):
+    @pytest.mark.parametrize("method", METHODS)
+    def test_hole_not_contained(self, method):
         idx = PolygonIndex(self._polys(), level=7)
-        got = idx.find_smallest_containing(np.array([30.0]), np.array([30.0]))
-        assert got[0] is None
+        claims = _claims(idx, method, np.array([30.0]), np.array([30.0]))
+        assert not any(c[0] for c in claims.values())
 
-    def test_smallest_wins_on_overlap(self):
+    @pytest.mark.parametrize("method", METHODS)
+    def test_smallest_wins_on_overlap(self, method):
         big = Polygon("big", [[(0, 0), (100, 0), (100, 100), (0, 100), (0, 0)]])
         small = Polygon("small", [[(10, 10), (20, 10), (20, 20), (10, 20), (10, 10)]])
         idx = PolygonIndex([big, small], level=7)
-        got = idx.find_smallest_containing(np.array([15.0, 50.0]), np.array([15.0, 50.0]))
-        assert list(got) == ["small", "big"]
+        lons, lats = np.array([15.0, 50.0]), np.array([15.0, 50.0])
+        if method == "containing":
+            claims = _claims(idx, method, lons, lats)
+            for p in (big, small):
+                assert np.array_equal(claims[p.area_id], p.contains(lons, lats) >= 0)
+            assert list(claims["small"]) == [True, False]
+            assert list(claims["big"]) == [True, True]
+        else:
+            assert list(getattr(idx, method)(lons, lats)) == ["small", "big"]
+
+    def test_points_on_cell_and_ring_edges(self):
+        """Points exactly on level-7 cell edges (2.8125° × 1.40625°) and on
+        ring edges and vertices, including a ring drawn along cell edges:
+        boundary points must land in the cell the cover classified."""
+        aligned = Polygon(
+            "aligned",
+            [[(2.8125, 1.40625), (8.4375, 1.40625), (8.4375, 5.625),
+              (2.8125, 5.625), (2.8125, 1.40625)]],
+        )
+        polys = [*self._polys(), aligned]
+        idx = PolygonIndex(polys, level=7)
+        gx, gy = np.meshgrid(
+            np.arange(-4, 16) * 2.8125, np.arange(-4, 32) * 1.40625
+        )
+        t = np.linspace(0.0, 1.0, 9)
+        edge = [
+            ring[i] + t[:, None] * (ring[i + 1] - ring[i])
+            for p in polys for ring in [*p.outers, *p.inners]
+            for i in range(len(ring) - 1)
+        ]
+        pts = np.vstack([np.column_stack([gx.ravel(), gy.ravel()]), *edge])
+        _assert_kernel_exact(idx, pts[:, 0], pts[:, 1])
+
+    def test_empty_input(self):
+        idx = PolygonIndex(self._polys(), level=7)
+        empty = np.zeros(0)
+        assert idx.smallest(empty, empty).shape == (0,)
+        assert idx.containing(empty, empty).shape == (0,)
+
+    def test_zero_area_ring(self):
+        """A degenerate (collinear) ring ranks first (area 0) and claims only
+        the points on its segment, exactly as Polygon.contains does."""
+        flat = Polygon("flat", [[(0, 0), (5, 5), (10, 10), (0, 0)]])
+        idx = PolygonIndex([*self._polys(), flat], level=7)
+        assert idx.ranked_ids[0] == "flat"
+        on = np.linspace(0.0, 10.0, 11)
+        lons = np.concatenate([on, rng.uniform(-5, 15, 500)])
+        lats = np.concatenate([on, rng.uniform(-5, 15, 500)])
+        _assert_kernel_exact(idx, lons, lats)
+
+    def test_more_than_64_polygons_raise_at_build(self):
+        squares = [
+            Polygon(f"sq{i}", [[(i, 0), (i + 0.5, 0), (i + 0.5, 0.5), (i, 0.5), (i, 0)]])
+            for i in range(65)
+        ]
+        PolygonIndex(squares[:64], level=7)
+        with pytest.raises(NotImplementedError, match="64"):
+            PolygonIndex(squares, level=7)
+
+    def test_non_finite_coordinates_contained_by_nothing(self):
+        """A NaN or infinite coordinate has no cell. `corner`'s clamped cover
+        makes world cell (0, 0) full, and `centre` makes the cell at
+        (0°, 0°) full: neither may claim such a point."""
+        corner = Polygon(
+            "corner",
+            [[(-185, -95), (-150, -95), (-150, -60), (-185, -60), (-185, -95)]],
+        )
+        centre = Polygon(
+            "centre", [[(-10, -10), (10, -10), (10, 10), (-10, 10), (-10, -10)]]
+        )
+        idx = PolygonIndex([corner, centre], level=7)
+        lons = np.array([np.nan, -170.0, np.inf, -170.0, -np.inf, 1.0])
+        lats = np.array([np.nan, -80.0, -80.0, np.nan, -80.0, 1.0])
+        want = [None, "corner", None, None, None, "centre"]
+        assert list(idx.find_smallest_containing(lons, lats)) == want
+        assert list(idx.smallest(lons, lats)) == want
+        bit = {aid: 1 << r for r, aid in enumerate(idx.ranked_ids)}
+        assert list(idx.containing(lons, lats)) == [
+            0, bit["corner"], 0, 0, 0, bit["centre"]
+        ]
 
     def test_cell_entries_cover_polygons(self):
         idx = PolygonIndex(self._polys(), level=7)

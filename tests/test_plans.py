@@ -248,17 +248,33 @@ class TestPythonStagesAndDriverJobs:
     hot paths: each Python evaluation costs a worker task per partition,
     each driver job a scheduling round trip."""
 
-    @pytest.mark.parametrize("name", ["pip_city", "image_spatial_join"])
+    @pytest.mark.parametrize("name", [
+        "pip_city", "image_spatial_join", "access_flags", "pip_concave_city",
+        "cityside_chains", "pip_hierarchy", "knn_city",
+    ])
     def test_pip_udf_evaluated_once(self, spark, sf_dir, name):
-        """pip_join(how="smallest") filters out unmatched points. Were the
-        null filter pushed below the projection, the executed plan would
-        hold two ArrowEvalPython nodes over the same _resolve call."""
+        """Every PIP query runs the kernel in exactly one ArrowEvalPython.
+        pip_resolve without keep_unmatched filters out unmatched points:
+        were the null filter pushed below the projection, the executed plan
+        would hold two ArrowEvalPython nodes over the same _resolve call."""
         import __spark_entry__ as E
         from osm2mp_spark.metrics import python_eval_counts
 
         df = E.queries()[name](spark, sf_dir)
         df.collect()
         assert python_eval_counts(df)["ArrowEvalPython"] == 1
+
+    @pytest.mark.parametrize("name", ["access_flags", "pip_concave_city"])
+    def test_pip_projection_no_exchange_no_join(self, spark, sf_dir, name):
+        """Flags-OR and any-containment are one projection over the points:
+        no join back and no aggregation to undo a per-container fan-out."""
+        import __spark_entry__ as E
+
+        df = E.queries()[name](spark, sf_dir)
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan
+        assert "Join" not in plan
 
     def test_n_for_reads_footers_without_a_job(self, spark, sf_dir, tmp_path):
         from osm2mp_spark.queries.images_q import _n_for
@@ -313,3 +329,58 @@ class TestPythonStagesAndDriverJobs:
         assert sum(counts.values()) == 1
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "bytes" not in plan
+
+
+class TestPipOperatorEdgeRows:
+    """pip_resolve and pip_flags_or keep one output row per input row, null
+    payload columns included, and a null or non-finite coordinate is
+    contained by nothing."""
+
+    def _index(self):
+        from osm2mp_spark.spatial.index import Polygon, PolygonIndex
+
+        # the clamped cover of `corner` makes world cell (0, 0) full, and
+        # `a` makes the cell at (0°, 0°) full
+        return PolygonIndex([
+            Polygon("a", [[(-10, -10), (10, -10), (10, 10), (-10, 10), (-10, -10)]]),
+            Polygon("b", [[(5, 5), (8, 5), (8, 8), (5, 8), (5, 5)]]),
+            Polygon("corner", [[(-185, -95), (-150, -95), (-150, -60),
+                                (-185, -60), (-185, -95)]]),
+        ])
+
+    def _points(self, spark):
+        nan = float("nan")
+        return spark.createDataFrame(
+            [
+                (1, 6.0, 6.0, None),
+                (2, 6.0, 6.0, "x"),
+                (3, 2.0, 2.0, None),
+                (4, 50.0, 50.0, None),
+                (5, None, None, "x"),
+                (6, nan, nan, "x"),
+                (7, -170.0, None, None),
+                (8, -170.0, -80.0, "x"),
+            ],
+            "id int, lon double, lat double, tag string",
+        )
+
+    def test_flags_or_keeps_rows_with_null_columns(self, spark):
+        from osm2mp_spark.operators.pip_join import pip_flags_or
+
+        out = pip_flags_or(
+            self._points(spark), self._index(), {"a": 4, "b": 1, "corner": 16}
+        )
+        assert out.columns == ["id", "lon", "lat", "tag", "access_mask"]
+        got = {r["id"]: r["access_mask"] for r in out.collect()}
+        assert got == {1: 5, 2: 5, 3: 4, 4: 0, 5: 0, 6: 0, 7: 0, 8: 16}
+
+    def test_resolve_null_coordinates_unmatched(self, spark):
+        from osm2mp_spark.operators.pip_join import pip_resolve
+
+        pts = self._points(spark)
+        kept = pip_resolve(pts, self._index(), keep_unmatched=True)
+        got = {r["id"]: r["area_id"] for r in kept.collect()}
+        assert got == {1: "b", 2: "b", 3: "a", 4: None, 5: None, 6: None,
+                       7: None, 8: "corner"}
+        inner = pip_resolve(pts, self._index())
+        assert sorted(r["id"] for r in inner.collect()) == [1, 2, 3, 8]

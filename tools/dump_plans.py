@@ -37,6 +37,16 @@ DEFAULT = [
     "tile_chain_closure",
     "clip_chains",
     "cell_rollup",
+    # the PIP queries: each runs the PolygonIndex kernel in one Python
+    # evaluation
+    "pip_city",
+    "pip_hierarchy",
+    "knn_city",
+    "access_flags",
+    "cityside_chains",
+    "pip_concave_city",
+    "image_spatial_join",
+    "flagship_image_assign",
 ]
 
 
