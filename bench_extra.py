@@ -64,14 +64,11 @@ def control_query(spark) -> float:
 
 
 def bench_stages(spark) -> dict:
-    from pyspark.sql import functions as F
-
-    from osm2mp_spark.operators.chains import min_label_components
     from osm2mp_spark.operators.images import (
         dhash_wide_images,
         wide_hamming_pairs,
     )
-    from osm2mp_spark.queries.images_q import _img_key, _n_for
+    from osm2mp_spark.queries.images_q import _image_clusters, _n_for
     from osm2mp_spark.sources.images import generate_phash_corpus_df
 
     n = _n_for(spark, SF_DIR)
@@ -109,17 +106,9 @@ def bench_stages(spark) -> dict:
         sigs = dhash_wide_images(
             generate_phash_corpus_df(spark, n)
         ).localCheckpoint(eager=False)
-        p = wide_hamming_pairs(sigs, max_hamming=7).selectExpr(
-            f"{_img_key('id_a')} AS ka", f"{_img_key('id_b')} AS kb"
-        )
-        labels = min_label_components(p, src="ka", dst="kb")
-        allv = (
-            sigs.selectExpr(f"{_img_key('image_id')} AS k")
-            .join(labels.withColumnRenamed("vertex", "k"), "k", "left")
-            .selectExpr("k", "COALESCE(label, k) AS cl")
-        )
-        sizes = allv.groupBy("cl").agg(F.count("*").alias("n"))
-        noop(allv.filter("k = cl").join(sizes, "cl"))
+        noop(_image_clusters(
+            sigs, wide_hamming_pairs(sigs, max_hamming=7)
+        ).filter("keep"))
 
     best2("keepers_sec", keepers)
 

@@ -3,14 +3,22 @@ W1 self-intersection splitting and I1 road merging.
 
 W1 runs as applyInPandas per chain (chains are ≤ a few hundred vertices —
 the per-group Python cost is trivial, the parallelism is across millions of
-chains). I1 is a driver-coordinated DataFrame fixpoint: the mergeable-
-successor relation is a functional graph (each road keeps at most one best
-successor, each road is claimed by at most one predecessor), so chain
-assembly converges in O(log max-chain-length) pointer-doubling rounds of
-self-joins (SURVEY §2.8 I1).
+chains). I1 reduces to connected components: the mergeable-successor
+relation is a functional graph (each road keeps at most one best
+successor, each road is claimed by at most one predecessor), so every
+merged chain is one component of it (SURVEY §2.8 I1).
+
+This module is also the engine's one connected-components path:
+`min_label_components` (a driver union-find at or below the
+`driverMaxEdges` crossover, a distributed fixpoint above it),
+`MinUnionFind` (the one driver union-find, also used by the streaming
+cluster fold and contour-ring assembly) and `component_sizes` (the
+cluster keep/drop decision of every dedup clustering query).
 """
 
 from __future__ import annotations
+
+import logging
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
@@ -19,6 +27,8 @@ from ..oracle.reference import (
     self_intersection_breaks_oracle,
     split_parts_from_breaks,
 )
+
+log = logging.getLogger(__name__)
 
 
 def split_self_intersections(
@@ -100,7 +110,6 @@ def split_self_intersections(
 def merge_roads(
     roads: DataFrame,
     merge_cos: float = 0.2,
-    max_rounds: int = 16,
 ) -> DataFrame:
     """I1 (osm2mp.pl:596-661): merge mergeable road chains to fixpoint.
 
@@ -111,8 +120,9 @@ def merge_roads(
     Plan shape: one self-join builds candidate junction edges; two window
     top-1 passes make the relation functional both ways (best successor per
     road, best predecessor per successor — ties by cosine then id, the
-    canonical determinism rule); pointer doubling then label-propagates the
-    head id in O(log n) shuffle rounds instead of O(n) sequential steps.
+    canonical determinism rule); min_label_components then labels the
+    merged chains — on the driver at or below its edge crossover, by the
+    distributed fixpoint above it.
     """
     r = roads.select(
         "road_id",
@@ -215,19 +225,14 @@ def merge_roads(
     # (measured 25 s → ~4 s at sf0.1, 150k roads, ~14 rounds)
     func = func.localCheckpoint(eager=True)
 
-    # Component labeling by min-road_id propagation over the UNDIRECTED
-    # functional graph — unlike predecessor-pointer chasing this also
-    # converges on CYCLES (roundabout loops of same-attr ways), where the
-    # canonical head is the cycle's smallest road_id (matches the oracle's
-    # break-at-min rule). Each round: take the min of own label and both
-    # neighbors' labels, then jump through the label (pointer doubling) —
-    # O(log chain-length) rounds.
-    # propagate labels only over roads that PARTICIPATE in a merge (2·|func|
-    # rows) — every other road is a singleton component whose head is itself
-    # and needs no iteration. At sf0.1 this shrinks the per-round shuffles
-    # from 150k rows × rounds to ~1k rows × rounds.
+    # Component labeling by min road_id over the UNDIRECTED functional
+    # graph — unlike predecessor-pointer chasing this also handles CYCLES
+    # (roundabout loops of same-attr ways), where the canonical head is the
+    # cycle's smallest road_id (matches the oracle's break-at-min rule).
+    # Only roads that PARTICIPATE in a merge (2·|func| rows) are labeled —
+    # every other road is a singleton component whose head is itself.
     labels = min_label_components(
-        func, src="pred", dst="succ", max_rounds=max_rounds
+        func, src="pred", dst="succ"
     ).withColumnRenamed("vertex", "road_id")
     # head per component: the unique no-predecessor road (path start) when
     # one exists, else the component's min label (cycle break point)
@@ -350,42 +355,77 @@ def fix_close_nodes_walk(
 # Crossover for min_label_components: at or below this many (one-
 # direction) edges the component labeling runs as a DRIVER union-find over
 # the pulled edge list instead of the distributed fixpoint. Rationale
-# (measured r3/r5): each pointer-doubling round costs ~0.4-0.5 s of FIXED
-# job overhead at local[32] regardless of data volume, and a converged run
-# takes 3-6 rounds — while a driver union-find over ≤200k edges is
-# milliseconds and a few MB. Above the bound the distributed path is the
-# only one that scales (a 100-TB corpus' near-dup pair graph can hold
-# billions of edges); the bound is what keeps driver memory safe, exactly
-# like the pruned-scan key crossover bounds plan size.
+# (measured r3/r5): each fixpoint round costs ~0.4-0.5 s of FIXED job
+# overhead at local[32] regardless of data volume, and the round count
+# grows with component diameter — while a driver union-find over ≤200k
+# edges is milliseconds and a few MB. Above the bound the distributed path
+# is the only one that scales (a 100-TB corpus' near-dup pair graph can
+# hold billions of edges); the bound is what keeps driver memory safe,
+# exactly like the pruned-scan key crossover bounds plan size.
 _DRIVER_EDGES_CONF = "spark.osm2mp.components.driverMaxEdges"
 _DEFAULT_DRIVER_EDGES = 200_000
+
+
+class MinUnionFind:
+    """Driver union-find whose every root is its component's MINIMUM
+    vertex: `union` hangs the larger root under the smaller, so `find(v)`
+    is the min-label every components consumer and oracle uses. A vertex
+    never passed to `union` is its own root."""
+
+    def __init__(self):
+        self.parent: dict = {}
+
+    def find(self, x):
+        parent = self.parent
+        r = x
+        while parent.get(r, r) != r:
+            r = parent[r]
+        while parent.get(x, x) != x:  # path compression
+            parent[x], x = r, parent[x]
+        return r
+
+    def union(self, a, b) -> None:
+        ra, rb = self.find(a), self.find(b)
+        if ra != rb:
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            self.parent[hi] = lo
 
 
 def min_label_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_rounds: int = 16,
 ) -> DataFrame:
-    """Connected components by min-vertex-id label propagation with pointer
-    doubling over the undirected graph — (vertex, label) for every vertex
-    appearing in `edges` (callers union singletons back themselves; at scale
-    the participant set is typically a small fraction of the vertex table).
+    """Connected components of the undirected graph `edges` — (vertex,
+    label = the component's minimum vertex) for every vertex appearing in
+    an edge (callers add singletons back themselves, see component_sizes;
+    at scale the participant set is typically a small fraction of the
+    vertex table). Edges with a null endpoint name no vertex and are
+    dropped. The distributed path needs integer vertex ids: its
+    convergence witness sums labels.
 
-    Each round: take the min of own and neighbors' labels, then jump through
-    the label (doubling) — O(log component-diameter) rounds, one job per
-    round (lazy checkpoint materialized by the monotone sum-of-labels
-    convergence witness).
+    ADAPTIVE, and the only place that decides it: the edge list is
+    checkpointed LAZILY, and ONE bounded pull of at most driverMaxEdges + 1
+    edges both materializes it and picks the plan. When the pull comes back
+    within the bound, the graph is already on the driver: MinUnionFind
+    labels it, and the returned table — bounded at 2·driverMaxEdges rows —
+    carries a broadcast hint, so callers join it without shuffling their
+    own side. Beyond the edges' own shuffle stages that is one job.
 
-    ADAPTIVE: the edge list is checkpointed LAZILY, and ONE bounded pull of
-    at most driverMaxEdges + 1 edges both materializes it and picks the
-    plan. When the pull comes back within the bound, the graph is already
-    on the driver: a union-find labels it (identical labels by
-    construction: union-by-min root = component minimum) and the returned
-    table — bounded at 2·driverMaxEdges rows — carries a broadcast hint,
-    so callers join it without shuffling their own side. Beyond the
-    edges' own shuffle stages that is one job. Above the bound the
-    distributed fixpoint runs over the checkpoint the pull filled."""
+    Above the bound the distributed fixpoint runs over the checkpoint the
+    pull filled. Each round takes the min of own and neighbors' labels,
+    then jumps through the label; one action per round (the convergence
+    witness, which also materializes the round's lazy checkpoint). The
+    round count is NOT logarithmic in general: it is when vertex ids
+    follow path order (10 rounds for a 1024-vertex path), but a path whose
+    ids are shuffled needs ~0.4·n rounds in the median and up to ~0.9·n
+    (a numpy replay of this round over 200 shuffled paths: median 23, max
+    55 at 64 vertices). So the loop runs until the witness stops moving —
+    labels only decrease, so it terminates, and a round that changes
+    nothing proves every label is its component's minimum.
+
+    Logs one INFO record per call: the path taken, the edges pulled, the
+    bound and the fixpoint rounds run."""
     spark = edges.sparkSession
     max_edges = int(
         spark.conf.get(_DRIVER_EDGES_CONF, str(_DEFAULT_DRIVER_EDGES))
@@ -404,24 +444,14 @@ def min_label_components(
     # result back through Arrow instead of pickled rows
     pdf = one.limit(max_edges + 1).toPandas()
     if len(pdf) <= max_edges:
-        parent: dict = {}
-
-        def find(x):
-            r = x
-            while parent.get(r, r) != r:
-                r = parent[r]
-            while parent.get(x, x) != x:
-                parent[x], x = r, parent[x]
-            return r
-
+        log.info("components: driver, edges_pulled=%d, driverMaxEdges=%d, "
+                 "rounds=0", len(pdf), max_edges)
+        uf = MinUnionFind()
         verts = set()
         for a, b in zip(pdf["a"].tolist(), pdf["b"].tolist()):
             verts.add(a)
             verts.add(b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
+            uf.union(a, b)
         from pyspark.sql import types as T
 
         vt = one.schema[0].dataType
@@ -431,7 +461,7 @@ def min_label_components(
         ordered = sorted(verts)
         return F.broadcast(spark.createDataFrame(
             pd.DataFrame(
-                {"vertex": ordered, "label": [find(v) for v in ordered]}
+                {"vertex": ordered, "label": [uf.find(v) for v in ordered]}
             ),
             schema,
         ))
@@ -442,8 +472,8 @@ def min_label_components(
         und.select(F.col("a").alias("vertex")).distinct()
         .withColumn("label", F.col("vertex"))
     )
-    prev_sum = None
-    for _ in range(max_rounds):
+    prev_sum, rounds = None, 0
+    while True:
         nb = (
             labels.join(und, labels.vertex == und.a, "inner")
             .select(F.col("b").alias("vertex"), F.col("label"))
@@ -460,14 +490,45 @@ def min_label_components(
             l2, merged.label == l2.j_v, "left"
         ).select("vertex", F.least("label", "j_label").alias("label"))
         # lazy checkpoint: the convergence agg below is the action that
-        # materializes it, so each round costs ONE job, not two
+        # materializes it, so each round costs ONE action, not two
         new = new.localCheckpoint(eager=False)
         # labels only ever DECREASE (min-propagation), so their total is a
         # strictly monotone convergence witness: one cheap agg on the
-        # checkpointed frame instead of a self-join count per round
-        s = new.agg(F.sum("label").alias("s")).first()["s"]
-        labels = new
-        if prev_sum is not None and s == prev_sum:
+        # checkpointed frame instead of a self-join count per round. The
+        # sum is exact in decimal(38,0): a bigint sum of large keys would
+        # overflow (an error under ANSI mode)
+        s = new.agg(
+            F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
+        ).first()["s"]
+        labels, rounds = new, rounds + 1
+        if s == prev_sum:
             break
         prev_sum = s
+    log.info("components: distributed, edges_pulled=%d, driverMaxEdges=%d, "
+             "rounds=%d", len(pdf), max_edges, rounds)
     return labels
+
+
+def component_sizes(
+    vertices: DataFrame, labels: DataFrame, key: str
+) -> DataFrame:
+    """The cluster keep/drop decision: every row of `vertices` (one per
+    `key` value) with its min_label_components label → (key, cluster_id,
+    cluster_size, keep). A vertex in no edge is its own singleton cluster
+    (cluster_id = key); a label row whose vertex is not in `vertices` is
+    dropped; cluster_size counts the cluster's `vertices` rows; `keep`
+    marks the keeper, the row whose key is its cluster's minimum. Plan: a
+    left join of the (usually broadcast) labels, then a groupBy of the
+    cluster sizes joined back."""
+    allv = (
+        vertices.select(key)
+        .join(labels.withColumnRenamed("vertex", key), key, "left")
+        .select(key, F.coalesce("label", key).alias("cluster_id"))
+    )
+    sizes = allv.groupBy("cluster_id").agg(
+        F.count("*").alias("cluster_size")
+    )
+    return allv.join(sizes, "cluster_id").select(
+        key, "cluster_id", "cluster_size",
+        (F.col(key) == F.col("cluster_id")).alias("keep"),
+    )

@@ -449,29 +449,18 @@ FROM allv a JOIN sizes s ON a.cluster_id = s.cluster_id
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pair table → document clusters via min-label connected
-    components (operators.chains.min_label_components — the same pointer-
-    doubling engine road merging uses), keeper = the cluster's min doc_id.
-    This is the dedup family's terminal step: the per-document keep/drop
-    decision a 100 TB training-data pipeline enforces. Scale shape: the
-    component iteration runs only over documents that appear in a pair
-    (typically a small fraction of the corpus); singletons bypass with
-    cluster_id = doc_id. Oracle: recursive-CTE min-label closure over the
-    same banded-LSH pair set."""
-    from ..operators.chains import min_label_components
+    components (operators.chains.min_label_components — the same
+    components path road merging uses), keeper = the cluster's min doc_id
+    (operators.chains.component_sizes). This is the dedup family's
+    terminal step: the per-document keep/drop decision a 100 TB
+    training-data pipeline enforces. Scale shape: the component labeling
+    runs only over documents that appear in a pair (typically a small
+    fraction of the corpus); singletons bypass with cluster_id = doc_id.
+    Oracle: recursive-CTE min-label closure over the same banded-LSH pair
+    set."""
+    from ..operators.chains import component_sizes, min_label_components
 
     pairs = dedup_minhash_lsh(spark, sf_dir)
     labels = min_label_components(pairs, src="doc_a", dst="doc_b")
     docs = _docs(spark, sf_dir).select(F.col("doc_id").cast("bigint").alias("doc_id"))
-    allv = (
-        docs.join(labels.withColumnRenamed("vertex", "doc_id"), "doc_id", "left")
-        .select(
-            "doc_id", F.coalesce("label", "doc_id").alias("cluster_id")
-        )
-    )
-    sizes = allv.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
-    return allv.join(sizes, "cluster_id").select(
-        "doc_id",
-        "cluster_id",
-        F.col("cluster_size").cast("bigint"),
-        (F.col("doc_id") == F.col("cluster_id")).alias("keep"),
-    )
+    return component_sizes(docs, labels, "doc_id")

@@ -4,8 +4,8 @@ osm2mp_spark.oracle.reference).
 
 - ring_assembly        G1  multipolygon stitching (applyInPandas per relation)
 - self_intersect_split W1  per-chain stateful splitting (applyInPandas)
-- road_merge           I1  fixpoint merge via functionalized successor graph
-                           + pointer-doubling label propagation
+- road_merge           I1  merge via functionalized successor graph
+                           + min-label connected components
 - sea_synthesis        G10-G12 coastline closure against the map boundary
 - bsp_tiles            I3  skew-aware BSP tile build + per-tile counts
 """

@@ -272,10 +272,37 @@ def _img_unkey(col: str, engine: str) -> str:
             f"WHEN {col} % 4 = 2 THEN 'e' ELSE '' END)")
 
 
+def _image_clusters(sigs: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Image near-dup pairs (id_a, id_b) over the signature table `sigs`
+    → operators.chains.component_sizes on `_img_key` vertices: (k,
+    cluster_id, cluster_size, keep), keeper = min image key per cluster."""
+    from ..operators.chains import component_sizes, min_label_components
+
+    labels = min_label_components(
+        pairs.selectExpr(
+            f"{_img_key('id_a')} AS ka", f"{_img_key('id_b')} AS kb"
+        ),
+        src="ka", dst="kb",
+    )
+    return component_sizes(
+        sigs.selectExpr(f"{_img_key('image_id')} AS k"), labels, "k"
+    )
+
+
+def _unkey_clusters(clusters: DataFrame) -> DataFrame:
+    """component_sizes rows on `_img_key` vertices → (image_id,
+    cluster_id, cluster_size, keep) with image ids spelled out."""
+    return clusters.selectExpr(
+        f"{_img_unkey('k', 'spark')} AS image_id",
+        f"{_img_unkey('cluster_id', 'spark')} AS cluster_id",
+        "cluster_size", "keep",
+    )
+
+
 def _dhash_clusters_oracle(max_hamming: int = 6) -> str | None:
     """Recursive-CTE connected components over the golden signature table's
-    all-pairs Hamming join — the DuckDB twin of the pointer-doubling
-    min-label engine, computed by a completely different algorithm."""
+    all-pairs Hamming join — the DuckDB twin of min_label_components,
+    computed by a completely different algorithm."""
     from . import golden_path
 
     path = golden_path("image_dhash")
@@ -312,11 +339,10 @@ FROM allv a JOIN sizes s ON s.cl = a.cl
 def image_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The image dedup family's terminal per-row keep/drop decision
     (dedup_clusters' image twin): dHash → banded Hamming pairs →
-    min-label connected components (pointer doubling) → keeper = min
-    image_id per cluster; singletons bypass the iteration. Oracle:
+    min-label connected components → keeper = min image_id per cluster
+    (_image_clusters); singletons bypass the labeling. Oracle:
     recursive-CTE closure over the golden signature table's all-pairs
     join — an entirely independent plan."""
-    from ..operators.chains import min_label_components
     from ..operators.images import dhash_images, phash_hamming_pairs
     from ..sources.images import generate_phash_corpus_df
 
@@ -324,22 +350,8 @@ def image_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two consumers (pair join + vertex table): checkpoint so the
     # generate+decode lineage executes once, not per branch
     sigs = dhash_images(corpus).localCheckpoint(eager=False)
-    pairs = phash_hamming_pairs(sigs, max_hamming=6).selectExpr(
-        f"{_img_key('id_a')} AS ka", f"{_img_key('id_b')} AS kb"
-    )
-    labels = min_label_components(pairs, src="ka", dst="kb")
-    allv = (
-        sigs.selectExpr(f"{_img_key('image_id')} AS k")
-        .join(labels.withColumnRenamed("vertex", "k"), "k", "left")
-        .selectExpr("k", "COALESCE(label, k) AS cl")
-    )
-    sizes = allv.groupBy("cl").agg(F.count("*").alias("n"))
-    return allv.join(sizes, "cl").selectExpr(
-        f"{_img_unkey('k', 'spark')} AS image_id",
-        f"{_img_unkey('cl', 'spark')} AS cluster_id",
-        "CAST(n AS BIGINT) AS cluster_size",
-        "(k = cl) AS keep",
-    )
+    pairs = phash_hamming_pairs(sigs, max_hamming=6)
+    return _unkey_clusters(_image_clusters(sigs, pairs))
 
 
 @register("image_dhash_multi", oracle=golden_oracle("image_dhash_multi"))
@@ -583,29 +595,14 @@ def image_dedup_clusters_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     banded Hamming pairs (linear candidate volume, §1a of BENCH.md) →
     min-label components → keeper = min image_id per cluster. Completes
     the wide family end-to-end (signature → pairs → clusters → keeper)."""
-    from ..operators.chains import min_label_components
     from ..operators.images import wide_hamming_pairs
     from ..sources.images import generate_phash_signatures_df
 
     sigs = generate_phash_signatures_df(
         spark, _n_for(spark, sf_dir)
     ).localCheckpoint(eager=False)
-    pairs = wide_hamming_pairs(sigs, max_hamming=7).selectExpr(
-        f"{_img_key('id_a')} AS ka", f"{_img_key('id_b')} AS kb"
-    )
-    labels = min_label_components(pairs, src="ka", dst="kb")
-    allv = (
-        sigs.selectExpr(f"{_img_key('image_id')} AS k")
-        .join(labels.withColumnRenamed("vertex", "k"), "k", "left")
-        .selectExpr("k", "COALESCE(label, k) AS cl")
-    )
-    sizes = allv.groupBy("cl").agg(F.count("*").alias("n"))
-    return allv.join(sizes, "cl").selectExpr(
-        f"{_img_unkey('k', 'spark')} AS image_id",
-        f"{_img_unkey('cl', 'spark')} AS cluster_id",
-        "CAST(n AS BIGINT) AS cluster_size",
-        "(k = cl) AS keep",
-    )
+    pairs = wide_hamming_pairs(sigs, max_hamming=7)
+    return _unkey_clusters(_image_clusters(sigs, pairs))
 
 
 # --- multimodal image × caption joint dedup: the corpus is the BASELINE
@@ -846,7 +843,6 @@ def flagship_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature keys as a broadcast. Per call that is 5 Python worker tasks
     on local[4]: 4 generator tasks and 1 spatial kernel task (BENCH.md
     §1d)."""
-    from ..operators.chains import min_label_components
     from ..operators.images import wide_hamming_pairs
     from ..plans.flagship import flagship_assign
     from ..sources.images import generate_phash_signatures_df
@@ -855,19 +851,10 @@ def flagship_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs = generate_phash_signatures_df(
         spark, _n_for(spark, sf_dir)
     ).localCheckpoint(eager=False)
-    pairs = wide_hamming_pairs(sigs, max_hamming=7).selectExpr(
-        f"{_img_key('id_a')} AS ka", f"{_img_key('id_b')} AS kb"
-    )
-    labels = min_label_components(pairs, src="ka", dst="kb")
-    allv = (
-        sigs.selectExpr(f"{_img_key('image_id')} AS k")
-        .join(labels.withColumnRenamed("vertex", "k"), "k", "left")
-        .selectExpr("k", "COALESCE(label, k) AS cl")
-    )
-    sizes = allv.groupBy("cl").agg(F.count("*").alias("n"))
     keepers = (
-        allv.filter("k = cl").join(sizes, "cl")
-        .selectExpr("k AS point_id", "n")
+        _image_clusters(sigs, wide_hamming_pairs(sigs, max_hamming=7))
+        .filter("keep")
+        .selectExpr("k AS point_id", "cluster_size AS n")
     )
     pts = with_derived_position(keepers, "point_id")
     return (

@@ -323,8 +323,9 @@ def contours_from_occupancy(occ: DataFrame) -> DataFrame:
 # Every contour endpoint is shared by EXACTLY two segments (closed-curve
 # parity, pytest-proven), so the segment graph is a disjoint union of
 # cycles and ring assembly is connected components — the raster face of G1
-# multipolygon assembly, solved by the same pointer-doubling min-label
-# engine as road merging / dedup clusters. Segment and endpoint identities
+# multipolygon assembly, labeled by the same min-rooted driver union-find
+# (operators.chains.MinUnionFind) that road merging and the dedup clusters
+# use at or below their edge crossover. Segment and endpoint identities
 # pack into exact integers, so the DuckDB oracle (recursive-CTE min-label
 # closure over the identical SQL-derived segment set) matches bit-for-bit.
 # ---------------------------------------------------------------------------
@@ -381,48 +382,39 @@ def raster_contour_rings(spark: SparkSession, sf_dir: str) -> DataFrame:
 def rings_from_segments(segs: DataFrame) -> DataFrame:
     """(k, x0, y0, x1, y1) contour segments → per-ring aggregates.
 
-    Component labeling runs DRIVER-SIDE by union–find over the collected
-    segment graph. That is safe by the same O(cells) argument as the BSP
-    histogram collect: marching squares emits ≤ 2 segments per cell, so
-    the graph is bounded by the PIXEL GRID (≤ ~132k segments at 257²
-    cells), never by the point count — 10^12 input points produce the
-    same bounded graph. The distributed pointer-doubling engine
-    (operators.chains.min_label_components) remains the right tool for
-    point-scale graphs (road_merge, dedup clusters); using it here spent
-    ~13 fixed-overhead jobs on log₂(ring length) rounds to label a
-    dimension-scale graph (measured 11.8 s → ~2 s at sf0.1)."""
+    Component labeling runs DRIVER-SIDE by MinUnionFind over the
+    collected segment graph, with no edge-count bound. That is safe by
+    the same O(cells) argument as the BSP histogram collect: marching
+    squares emits ≤ 2 segments per cell, so the graph is bounded by the
+    PIXEL GRID (≤ ~132k segments at 257² cells), never by the point count
+    — 10^12 input points produce the same bounded graph. The distributed
+    fixpoint behind operators.chains.min_label_components is for point-
+    scale graphs (road_merge, dedup clusters); here it spent ~13 fixed-
+    overhead jobs to label a dimension-scale graph (measured 11.8 s → ~2 s
+    at sf0.1)."""
+    from ..operators.chains import MinUnionFind
+
     spark = segs.sparkSession
     # two consumers (label collect + final agg): checkpoint the lineage
     segs = segs.localCheckpoint(eager=False)
     pdf = segs.toPandas()
 
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        r = x
-        while parent[r] != r:
-            r = parent[r]
-        while parent[x] != r:  # path compression
-            parent[x], x = r, parent[x]
-        return r
-
+    uf = MinUnionFind()
+    keys = set()
     by_ep: dict[tuple[int, int], int] = {}
     for r in pdf.itertuples():
         k = int(r.k)
-        parent.setdefault(k, k)
+        keys.add(k)
         for ep in ((r.x0, r.y0), (r.x1, r.y1)):
             o = by_ep.pop(ep, None)  # each endpoint pairs exactly 2 segs
             if o is None:
                 by_ep[ep] = k
             else:
-                ra, rb = find(k), find(o)
-                if ra != rb:
-                    # min-label union keeps ring_id = min segment key,
-                    # matching the recursive-CTE oracle's MIN(lab)
-                    lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                    parent[hi] = lo
+                # min-label union keeps ring_id = min segment key,
+                # matching the recursive-CTE oracle's MIN(lab)
+                uf.union(k, o)
     labels = spark.createDataFrame(
-        [(k, find(k)) for k in parent], "k long, ring long"
+        [(k, uf.find(k)) for k in keys], "k long, ring long"
     )
     ringv = segs.join(F.broadcast(labels), "k")
     return ringv.groupBy("ring").agg(

@@ -182,7 +182,8 @@ def streaming_incremental_clusters(
     image_dedup_clusters_wide — same recursive-CTE DuckDB oracle."""
     import os
 
-    from .images_q import _img_key, _img_unkey, _n_for
+    from .images_q import _img_key, _n_for, _unkey_clusters
+    from ..operators.chains import component_sizes
     from ..scratch import scratch_dir
     from ..sources.images import generate_phash_corpus_df
     from ..streaming.clusters import compact_labels, read_labels
@@ -222,22 +223,13 @@ def streaming_incremental_clusters(
         q.awaitTermination()
     finally:
         q.stop()
-    labels = read_labels(spark, clusters)
     # the vertex universe comes from the SIGNATURE STORE the stream built
     # (uniform view over compacted + tail) — no second hash pass
-    allv = (
+    return _unkey_clusters(component_sizes(
         read_store_signatures(spark, store)
-        .selectExpr(f"{_img_key('image_id')} AS k")
-        .join(labels.withColumnRenamed("vertex", "k"), "k", "left")
-        .selectExpr("k", "COALESCE(label, k) AS cl")
-    )
-    sizes = allv.groupBy("cl").agg(F.count("*").alias("n"))
-    return allv.join(sizes, "cl").selectExpr(
-        f"{_img_unkey('k', 'spark')} AS image_id",
-        f"{_img_unkey('cl', 'spark')} AS cluster_id",
-        "CAST(n AS BIGINT) AS cluster_size",
-        "(k = cl) AS keep",
-    )
+        .selectExpr(f"{_img_key('image_id')} AS k"),
+        read_labels(spark, clusters), "k",
+    ))
 
 
 def _incremental_flagship_oracle() -> str | None:

@@ -23,15 +23,16 @@ min of the merged roots and any new vertex ids), so resolved labels equal
 the batch min-label components over the union of all pairs seen — which is
 how the gate checks it (same recursive-CTE DuckDB oracle as the one-shot).
 
-Per-batch cost is O(batch): the batch's pair graph + the CURRENT labels of
-its touched vertices (chunked-In point lookup on the vertex-sorted
-compacted labels store — streaming.store._point_lookup) + the forwarding
-tail (bounded by compaction cadence) feed a driver union-find sized by the
-BATCH, never the store. compact_labels resolves every chain and rewrites
-the labels store sorted by vertex with an empty forwarding tail, bounding
-both chain length and tail reads. Both subtrees are streaming.store
-batch-directory stores (layout, certification, replay horizon and commit
-order are stated there).
+Per-batch cost is O(batch): the batch's pair graph, collapsed to one
+spanning edge per non-root vertex by operators.chains.min_label_components,
++ the CURRENT labels of its touched vertices (chunked-In point lookup on
+the vertex-sorted compacted labels store — streaming.store._point_lookup)
++ the forwarding tail (bounded by compaction cadence) feed a driver
+union-find (operators.chains.MinUnionFind) sized by the BATCH, never the
+store. compact_labels resolves every chain and rewrites the labels store
+sorted by vertex with an empty forwarding tail, bounding both chain length
+and tail reads. Both subtrees are streaming.store batch-directory stores
+(layout, certification, replay horizon and commit order are stated there).
 """
 
 from __future__ import annotations
@@ -111,40 +112,28 @@ def update_clusters(
     old roots}}` — so downstream incremental consumers (the flagship
     rollup's retraction deltas, streaming.flagship) see exactly which
     clusters this batch changed without re-deriving the union-find."""
-    from ..operators.chains import (
-        _DEFAULT_DRIVER_EDGES,
-        _DRIVER_EDGES_CONF,
-        min_label_components,
-    )
+    from ..operators.chains import MinUnionFind, min_label_components
 
-    # a self-loop links nothing: drop it before the guard so both paths
-    # below see the same edges (the spanning-edge path cannot carry one).
-    # The lazy checkpoint makes `pairs` evaluate once, whichever path runs.
-    kdf = pairs.selectExpr(
-        f"{key_expr_a} AS ka", f"{key_expr_b} AS kb"
-    ).filter("ka != kb").localCheckpoint(eager=False)
-    max_edges = int(
-        spark.conf.get(_DRIVER_EDGES_CONF, str(_DEFAULT_DRIVER_EDGES))
+    # The batch's pair graph reaches the driver as SPANNING edges: one
+    # (vertex, label) row per vertex that is not its batch component's
+    # minimum. They connect exactly what the raw pairs connect and touch
+    # exactly the same vertices (a self-loop is a singleton with vertex =
+    # label and drops out), so labels, forwarding rows and the fold below
+    # are those of the raw pairs. min_label_components decides by its
+    # bounded pull whether the labeling runs on the driver or distributed,
+    # so a hot micro-batch (near-identical-signature flood, O(n²) pairs)
+    # never ships its quadratic edge list: the driver sees at most that
+    # bounded pull plus O(vertices) label rows. Its lazy edge checkpoint
+    # evaluates `pairs` once on either path.
+    lab = min_label_components(
+        pairs.selectExpr(f"{key_expr_a} AS ka", f"{key_expr_b} AS kb"),
+        src="ka", dst="kb",
     )
-    # GUARD (the r5 verdict's one perf-weak item): a hot micro-batch (near-
-    # identical-signature flood) emits O(n²) pairs — collecting them raw
-    # would put the whole quadratic graph on the driver. One pull of at
-    # most max_edges + 1 edges (the crossover min_label_components uses)
-    # both decides the path and, within the bound, is the edge list. Above
-    # it, pre-collapse the batch graph DISTRIBUTIVELY over the filled
-    # checkpoint and collect only a spanning edge per non-root vertex —
-    # O(batch vertices), connectivity-equivalent, so the union-find below
-    # (and every output: labels, forwarding, fold summary) is unchanged.
-    pdf = kdf.limit(max_edges + 1).toPandas()
-    if len(pdf) <= max_edges:
-        edges = list(zip(pdf["ka"].tolist(), pdf["kb"].tolist()))
-    else:
-        lab = min_label_components(kdf, src="ka", dst="kb")
-        edges = [
-            (int(r.vertex), int(r.label))
-            for r in lab.collect()
-            if r.vertex != r.label
-        ]
+    edges = [
+        (int(r.vertex), int(r.label))
+        for r in lab.collect()
+        if r.vertex != r.label
+    ]
     labels_dir = _join(labels_root, "labels")
     forward_dir = _join(labels_root, "forward")
     if not edges:
@@ -169,31 +158,16 @@ def update_clusters(
     old_root = {v: current_root(v) for v in touched}
 
     # driver union-find sized by the BATCH's pair graph: vertices are the
-    # touched ids and their current roots
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        r = x
-        while parent.get(r, r) != r:
-            r = parent[r]
-        while parent.get(x, x) != x:
-            parent[x], x = r, parent[x]
-        return r
-
-    def union(a: int, b: int) -> None:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            # min-label rule keeps roots = component minima by induction
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
-            parent[hi] = lo
-
+    # touched ids and their current roots. Its min rule keeps roots =
+    # component minima by induction
+    uf = MinUnionFind()
     for v in touched:
-        union(v, current_root(v))
+        uf.union(v, current_root(v))
     for a, b in edges:
-        union(a, b)
+        uf.union(a, b)
 
     new_labels = [
-        (v, find(v)) for v in touched if v not in stored
+        (v, uf.find(v)) for v in touched if v not in stored
     ]
     # forwarding records merges of PRE-EXISTING roots only. A new vertex's
     # root is written directly into its labels row; and every pre-existing
@@ -205,7 +179,7 @@ def update_clusters(
         if v not in stored:
             continue
         old = current_root(v)
-        new = find(old)
+        new = uf.find(old)
         if new != old:
             merges.add((old, new))
     merges = sorted(merges)
@@ -219,7 +193,7 @@ def update_clusters(
         "touched": touched,
         "old_root": old_root,
         "new_root": {
-            x: find(x) for x in set(touched) | set(old_root.values())
+            x: uf.find(x) for x in set(touched) | set(old_root.values())
         },
     }
 

@@ -1614,31 +1614,23 @@ class TestIncrementalClusters:
             assert got == self._batch_uf(seen), f"diverged at batch {i}"
 
     def test_hot_batch_guard_bounds_driver_collect(
-        self, spark, tmp_path, monkeypatch
+        self, spark, tmp_path, caplog
     ):
         """A pair-quadratic jackpot batch (all-pairs clique, the constant-
         band flood shape bench_skew plants) must NOT ship its O(n²) edges
-        to the driver: above driverMaxEdges the fold pre-collapses the
-        batch graph distributively and collects only O(vertices) spanning
-        edges — with outputs identical to the raw-edge fold."""
-        import osm2mp_spark.operators.chains as chains
+        to the driver: above driverMaxEdges the fold's components run
+        distributed and it collects only O(vertices) spanning edges — with
+        outputs identical to the raw-edge fold."""
+        import logging
 
         from osm2mp_spark.streaming.clusters import read_labels
 
-        calls = []
-        orig = chains.min_label_components
-
-        def spy(*a, **k):
-            calls.append(1)
-            return orig(*a, **k)
-
-        monkeypatch.setattr(chains, "min_label_components", spy)
+        caplog.set_level(logging.INFO, logger="osm2mp_spark.operators.chains")
         spark.conf.set("spark.osm2mp.components.driverMaxEdges", "50")
         try:
             root = str(tmp_path / "clusters")
-            # clique of 20 → 190 pairs > 50: guard must take the
-            # distributed pre-collapse (which itself exceeds its own
-            # crossover at 380 undirected edges → real distributed fold)
+            # clique of 20 → 190 pairs > 50: the distributed path pulls
+            # 51 edges and no more
             clique = [
                 (a, b)
                 for a in range(100, 120)
@@ -1646,13 +1638,17 @@ class TestIncrementalClusters:
                 if a < b
             ]
             self._fold(spark, root, 0, clique)
-            assert calls, "guard did not take the distributed path"
+            assert [r.getMessage().split(", rounds=")[0]
+                    for r in caplog.records] == [
+                "components: distributed, edges_pulled=51, "
+                "driverMaxEdges=50"
+            ]
             got = {
                 int(r.vertex): int(r.label)
                 for r in read_labels(spark, root).collect()
             }
             assert got == self._batch_uf(clique)
-            # a later small batch (raw-collect path) must interoperate:
+            # a later small batch (driver path) must interoperate:
             # attaching 50 re-roots the jackpot cluster via forwarding
             self._fold(spark, root, 1, [(50, 100)])
             got = {
@@ -1663,18 +1659,42 @@ class TestIncrementalClusters:
         finally:
             spark.conf.unset("spark.osm2mp.components.driverMaxEdges")
 
+    def test_shuffled_path_fold_above_bound(self, spark, tmp_path):
+        """A 64-vertex path whose ids are shuffled needs ~50 rounds of the
+        distributed fixpoint: folded above driverMaxEdges, every vertex
+        still resolves to the path's minimum id (a round cap would leave
+        unconverged labels in the spanning edges)."""
+        import random
+
+        from osm2mp_spark.streaming.clusters import read_labels
+
+        ids = list(range(64))
+        random.Random(3).shuffle(ids)
+        path = list(zip(ids[:-1], ids[1:]))
+        spark.conf.set("spark.osm2mp.components.driverMaxEdges", "10")
+        try:
+            root = str(tmp_path / "clusters")
+            self._fold(spark, root, 0, path)
+        finally:
+            spark.conf.unset("spark.osm2mp.components.driverMaxEdges")
+        got = {
+            int(r.vertex): int(r.label)
+            for r in read_labels(spark, root).collect()
+        }
+        assert got == self._batch_uf(path) == {v: 0 for v in ids}
+
     def test_self_loop_same_on_both_guard_paths(self, spark, tmp_path):
-        """A self-loop pair links nothing: the raw-collect path (edges ≤
-        driverMaxEdges) and the spanning-edge guard path (above it) must
-        return the same fold and write the same labels/ and forward/
-        rows."""
+        """A self-loop pair links nothing: with the batch's components
+        labeled on the driver (edges ≤ driverMaxEdges) and distributed
+        (above it) the fold is the same, with the same labels/ and
+        forward/ rows."""
         import pandas as pd
 
         from osm2mp_spark.streaming.clusters import update_clusters
 
         edges = [(7, 7), (3, 9), (9, 12)]
         out = {}
-        for max_edges in (1, 10):  # guard path, raw-collect path
+        for max_edges in (1, 10):  # distributed, driver
             spark.conf.set(
                 "spark.osm2mp.components.driverMaxEdges", str(max_edges)
             )
@@ -1703,7 +1723,8 @@ class TestIncrementalClusters:
 
     def test_unmaterialized_pairs_evaluated_once(self, spark, tmp_path):
         """update_clusters accepts any DataFrame: an unmaterialized `pairs`
-        is evaluated once per fold on both guard paths, counted by an
+        is evaluated once per fold on both sides of the components bound,
+        counted by an
         accumulator in a UDF (nondeterministic, so Spark evaluates it
         exactly once per row per pass)."""
         from pyspark.sql import functions as F
@@ -1711,7 +1732,7 @@ class TestIncrementalClusters:
         from osm2mp_spark.streaming.clusters import update_clusters
 
         edges = [(3, 9), (9, 12), (20, 21), (7, 7)]
-        for max_edges in (1, 10):  # guard path, raw-collect path
+        for max_edges in (1, 10):  # distributed, driver
             acc = spark.sparkContext.accumulator(0)
 
             def tap(v, acc=acc):
@@ -2086,24 +2107,15 @@ class TestIncrementalFlagshipRollup:
             wide_hamming_pairs,
         )
 
-        corpus = spark.read.parquet(str(land))
-        sigs = dhash_wide_images(corpus).localCheckpoint(eager=False)
-        pairs = wide_hamming_pairs(sigs, max_hamming=7).selectExpr(
-            f"{_img_key('id_a')} AS ka", f"{_img_key('id_b')} AS kb"
-        )
-        from osm2mp_spark.operators.chains import min_label_components
+        from osm2mp_spark.queries.images_q import _image_clusters
         from pyspark.sql import functions as F
 
-        labels = min_label_components(pairs, src="ka", dst="kb")
-        allv = (
-            sigs.selectExpr(f"{_img_key('image_id')} AS k")
-            .join(labels.withColumnRenamed("vertex", "k"), "k", "left")
-            .selectExpr("k", "COALESCE(label, k) AS cl")
-        )
-        sizes = allv.groupBy("cl").agg(F.count("*").alias("n"))
+        corpus = spark.read.parquet(str(land))
+        sigs = dhash_wide_images(corpus).localCheckpoint(eager=False)
         keepers = (
-            allv.filter("k = cl").join(sizes, "cl")
-            .selectExpr("k AS point_id", "n")
+            _image_clusters(sigs, wide_hamming_pairs(sigs, max_hamming=7))
+            .filter("keep")
+            .selectExpr("k AS point_id", "cluster_size AS n")
         )
         want = {
             (r.city_id, int(r.tile_id)): (int(r.n_keepers), int(r.n_images))

@@ -260,7 +260,7 @@ class TestSparkGraphOps:
         assert got == want
 
 
-class TestReviewRegressions:
+class TestRound1ReviewRegressions:
     """Regression coverage for the round-1 code-review findings."""
 
     def test_coastline_interior_endpoint_no_crash(self):
@@ -757,10 +757,95 @@ class TestIncrementalClustersProperty:
             assert got == expected, f"case {case} diverged"
 
 
+_BOUNDS = pytest.mark.parametrize(
+    "bound", ["1000000", "0"], ids=["driver", "distributed"]
+)
+
+
 class TestAdaptiveComponentsCrossover:
     """min_label_components picks a driver union-find at/below the bounded
-    edge crossover and the distributed pointer-doubling fixpoint above it —
-    both must label identically (label = component minimum)."""
+    edge crossover and the distributed fixpoint above it — both must
+    label identically (label = component minimum)."""
+
+    def _labels(self, spark, df, bound):
+        from osm2mp_spark.operators.chains import min_label_components
+
+        spark.conf.set("spark.osm2mp.components.driverMaxEdges", bound)
+        try:
+            return min_label_components(df)
+        finally:
+            spark.conf.unset("spark.osm2mp.components.driverMaxEdges")
+
+    @_BOUNDS
+    def test_shuffled_path_converges(self, spark, bound):
+        """A 64-vertex path whose ids are shuffled needs ~50 fixpoint
+        rounds, far more than log2(64): every vertex must still get the
+        path's minimum id, on both sides of the bound."""
+        import random
+
+        ids = list(range(64))
+        random.Random(3).shuffle(ids)
+        df = spark.createDataFrame(
+            list(zip(ids[:-1], ids[1:])), "src long, dst long"
+        )
+        got = {
+            int(r.vertex): int(r.label)
+            for r in self._labels(spark, df, bound).collect()
+        }
+        assert got == {v: 0 for v in ids}
+
+    @_BOUNDS
+    def test_component_sizes_keep_drop(self, spark, bound):
+        """component_sizes over min_label_components labels, with bigint
+        keys above 2^62 (the distributed convergence sum exceeds bigint):
+        a vertex in no edge is its own cluster; a labeled vertex absent
+        from the vertex table is dropped and not counted; the keeper is
+        the minimum key; an empty label table leaves every vertex a
+        singleton."""
+        from osm2mp_spark.operators.chains import component_sizes
+
+        b = 1 << 62
+        edges = [(5, 3), (3, 9), (20, 21), (21, 40)]  # 40: no vertex row
+        verts = [3, 5, 9, 20, 21, 30]  # 30: in no edge
+        vdf = spark.createDataFrame([(b + k,) for k in verts], "k long")
+
+        def sizes(edges):
+            labels = self._labels(spark, spark.createDataFrame(
+                [(b + x, b + y) for x, y in edges], "src long, dst long"
+            ), bound)
+            return sorted(
+                (r.k - b, r.cluster_id - b, r.cluster_size, r.keep)
+                for r in component_sizes(vdf, labels, "k").collect()
+            )
+
+        assert sizes(edges) == [
+            (3, 3, 3, True), (5, 3, 3, False), (9, 3, 3, False),
+            (20, 20, 2, True), (21, 20, 2, False), (30, 30, 1, True),
+        ]
+        assert sizes([]) == [(k, k, 1, True) for k in verts]
+
+    def test_min_union_find_roots_are_minima(self):
+        import random
+
+        from osm2mp_spark.operators.chains import MinUnionFind
+
+        rng = random.Random(7)
+        edges = [(rng.randrange(300), rng.randrange(300)) for _ in range(250)]
+        uf = MinUnionFind()
+        for a, b in edges:
+            uf.union(a, b)
+        adj: dict = {}
+        for a, b in edges:
+            adj.setdefault(a, set()).add(b)
+            adj.setdefault(b, set()).add(a)
+        for v in range(300):  # brute force: min of the reachable set
+            seen, todo = {v}, [v]
+            while todo:
+                for u in adj.get(todo.pop(), ()):
+                    if u not in seen:
+                        seen.add(u)
+                        todo.append(u)
+            assert uf.find(v) == min(seen)
 
     def test_paths_agree_on_random_graphs(self, spark):
         import random
@@ -795,14 +880,18 @@ class TestAdaptiveComponentsCrossover:
             # label = component minimum: no label exceeds its vertex
             assert all(l <= v for v, l in drv)
 
-    def test_both_sides_of_the_bound(self, spark):
+    def test_both_sides_of_the_bound(self, spark, caplog):
         """With exactly driverMaxEdges edges the driver union-find runs,
         in ONE Spark job (the bounded pull, which also fills the lazy
         edge checkpoint); with driverMaxEdges + 1 the distributed fixpoint
-        runs. Both label exactly like the distributed path."""
+        runs. Both label exactly like the distributed path, and each call
+        logs one decision record naming its path, pull and bound."""
+        import logging
         import random
 
         from osm2mp_spark.operators.chains import min_label_components
+
+        caplog.set_level(logging.INFO, logger="osm2mp_spark.operators.chains")
 
         rng = random.Random(20261017)
         edges = [(rng.randrange(50), rng.randrange(50)) for _ in range(30)]
@@ -814,24 +903,36 @@ class TestAdaptiveComponentsCrossover:
         def run(bound: int, tag: str):
             spark.conf.set(conf, str(bound))
             sc.setJobGroup(tag, tag)
+            caplog.clear()
             try:
                 out = min_label_components(df)
             finally:
                 sc.setJobGroup("", "")
                 spark.conf.unset(conf)
             jobs = len(sc.statusTracker().getJobIdsForGroup(tag))
+            (record,) = caplog.records
             labels = sorted(
                 (int(r.vertex), int(r.label)) for r in out.collect()
             )
-            return labels, jobs
+            return labels, jobs, record.getMessage()
 
-        dist, _ = run(0, "mlc-bound-dist")
-        at, at_jobs = run(len(edges), "mlc-bound-at")
-        above, above_jobs = run(len(edges) - 1, "mlc-bound-above")
+        n = len(edges)
+        dist, _, _ = run(0, "mlc-bound-dist")
+        at, at_jobs, at_rec = run(n, "mlc-bound-at")
+        above, above_jobs, above_rec = run(n - 1, "mlc-bound-above")
         assert at == dist
         assert above == dist
         assert at_jobs == 1
-        assert above_jobs > 1  # pull + one convergence job per round
+        assert above_jobs > 1  # pull + the fixpoint rounds' jobs
+        assert at_rec == (
+            f"components: driver, edges_pulled={n}, driverMaxEdges={n}, "
+            "rounds=0"
+        )
+        rounds = int(above_rec.rsplit("rounds=", 1)[1])
+        assert above_rec == (
+            f"components: distributed, edges_pulled={n}, "
+            f"driverMaxEdges={n - 1}, rounds={rounds}"
+        )
 
     def test_null_endpoints_dropped_on_both_paths(self, spark):
         """An edge with a null endpoint names no vertex: on both sides of

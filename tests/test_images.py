@@ -472,33 +472,22 @@ class TestPhashDedup:
         forms a 2-cluster keeping the original; everything else is a
         keep=True singleton."""
         import __spark_entry__  # noqa: F401  (registry import)
-        from osm2mp_spark.operators.chains import min_label_components
         from osm2mp_spark.operators.images import (
             dhash_images,
             phash_hamming_pairs,
         )
-        from osm2mp_spark.queries.images_q import _img_key, _img_unkey
+        from osm2mp_spark.queries.images_q import (
+            _image_clusters,
+            _unkey_clusters,
+        )
         from osm2mp_spark.sources.images import generate_phash_corpus_df
-        from pyspark.sql import functions as F
 
         sigs = dhash_images(
             generate_phash_corpus_df(spark, 35, dup_every=7)
         ).localCheckpoint(eager=False)
-        pairs = phash_hamming_pairs(sigs, max_hamming=6).selectExpr(
-            f"{_img_key('id_a')} AS ka", f"{_img_key('id_b')} AS kb"
-        )
-        labels = min_label_components(pairs, src="ka", dst="kb")
-        allv = (
-            sigs.selectExpr(f"{_img_key('image_id')} AS k")
-            .join(labels.withColumnRenamed("vertex", "k"), "k", "left")
-            .selectExpr("k", "COALESCE(label, k) AS cl")
-        )
-        sizes = allv.groupBy("cl").agg(F.count("*").alias("n"))
-        got = allv.join(sizes, "cl").selectExpr(
-            f"{_img_unkey('k', 'spark')} AS image_id",
-            f"{_img_unkey('cl', 'spark')} AS cluster_id",
-            "n", "(k = cl) AS keep",
-        ).toPandas()
+        got = _unkey_clusters(_image_clusters(
+            sigs, phash_hamming_pairs(sigs, max_hamming=6)
+        )).withColumnRenamed("cluster_size", "n").toPandas()
         assert len(got) == 40  # 35 originals + 5 dups
         two = got[got.n == 2]
         assert len(two) == 10  # 5 clusters x 2 members

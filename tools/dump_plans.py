@@ -8,7 +8,9 @@ FlatMapGroupsInPandas): each is one Python worker evaluation per task, so
 a UDF evaluated twice or an unfused Python stage shows up in the dump.
 For each banded Hamming join a query builds, it also prints the layout
 operators.hamming chose (kind, band count, key bits, probes per band) and
-the join's id rule.
+the join's id rule; for each connected-components labeling, the path
+operators.chains.min_label_components took (driver or distributed), the
+edges it pulled, the driverMaxEdges bound and the fixpoint rounds run.
 """
 
 from __future__ import annotations
@@ -47,6 +49,12 @@ DEFAULT = [
     "pip_concave_city",
     "image_spatial_join",
     "flagship_image_assign",
+    # connected components: road_merge and dedup_clusters print the
+    # min_label_components decision; raster_contour_rings always labels
+    # on the driver (its graph is bounded by the pixel grid)
+    "road_merge",
+    "dedup_clusters",
+    "raster_contour_rings",
 ]
 
 
@@ -84,15 +92,16 @@ def main():
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    joins = _Lines()
-    hamming_log = logging.getLogger("osm2mp_spark.operators.hamming")
-    hamming_log.setLevel(logging.INFO)
-    hamming_log.addHandler(joins)
+    records = _Lines()
+    for logger in ("osm2mp_spark.operators.hamming",
+                   "osm2mp_spark.operators.chains"):
+        logging.getLogger(logger).setLevel(logging.INFO)
+        logging.getLogger(logger).addHandler(records)
     for name in names:
         if name not in qs:
             print(f"skip {name}: not in registry")
             continue
-        joins.lines.clear()
+        records.lines.clear()
         df = qs[name](spark, SF_DIR)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
@@ -104,7 +113,7 @@ def main():
         summary = " ".join(f"{k}={v}" for k, v in evals.items())
         print(f"wrote {path} ({len(plan)} chars); python evals "
               f"{sum(evals.values())}: {summary}")
-        for line in joins.lines:
+        for line in records.lines:
             print(f"  {line}")
     spark.stop()
 
