@@ -19,3 +19,14 @@ Layout:
 """
 
 __version__ = "0.1.0"
+
+import os as _os
+
+# Inside a PySpark worker (the daemon sets the factory secret in every
+# worker's environment, never in the driver's): the first engine closure a
+# worker unpickles imports this package, and every later task the reused
+# worker runs skips the per-task zip directory re-read.
+if "PYTHON_WORKER_FACTORY_SECRET" in _os.environ:
+    from .shipping import install_lazy_zip_invalidation
+
+    install_lazy_zip_invalidation()

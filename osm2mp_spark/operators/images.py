@@ -18,6 +18,8 @@ Only the underlying *codec* is the documented container stand-in
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
@@ -318,16 +320,55 @@ WIDE_WORDS = ("h0", "h1", "h2", "h3")
 WIDE_BITS = 64 * len(WIDE_WORDS)
 
 
+@functools.lru_cache(maxsize=256)
+def _wide_plan(h: int, w: int):
+    """The per-(h, w) half of wide_signature, built once per image shape:
+    for each of the WIDE_BITS compare pairs (row 0 = the later block of
+    the pair, row 1 = the earlier; bit order = WIDE_GEOMETRIES order, then
+    _compare_bits' row-major order), the flat indices of its blocks' four
+    corners into the (h+1)×(w+1) prefix sum, and its blocks' pixel counts.
+    Arrays are read-only: the cache hands the same ones to every call."""
+    corners, counts = [], []
+    for rows_c, cols_c, axis in WIDE_GEOMETRIES:
+        yb = (np.arange(rows_c + 1) * h) // rows_c
+        xb = (np.arange(cols_c + 1) * w) // cols_c
+        y0, x0 = np.meshgrid(yb[:-1], xb[:-1], indexing="ij")
+        y1, x1 = np.meshgrid(yb[1:], xb[1:], indexing="ij")
+        # per block: the corners of P[y1,x1] - P[y0,x1] - P[y1,x0] + P[y0,x0],
+        # then its pixel count
+        blk = np.stack([y1 * (w + 1) + x1, y0 * (w + 1) + x1,
+                        y1 * (w + 1) + x0, y0 * (w + 1) + x0,
+                        (y1 - y0) * (x1 - x0)])
+        n = blk.shape[axis + 1]
+        later = blk.take(np.arange(1, n), axis=axis + 1).reshape(5, -1)
+        earlier = blk.take(np.arange(n - 1), axis=axis + 1).reshape(5, -1)
+        corners.append(np.stack([later[:4], earlier[:4]]))
+        counts.append(np.stack([later[4], earlier[4]]))
+    corners = np.concatenate(corners, axis=2)
+    counts = np.concatenate(counts, axis=1).astype(np.int64)
+    corners.setflags(write=False)
+    counts.setflags(write=False)
+    return corners, counts
+
+
 def wide_signature(px: np.ndarray) -> tuple[int, int, int, int]:
     """256-bit perceptual signature of one decoded image: 4 packed words,
     one per WIDE_GEOMETRIES entry. Exact integer arithmetic throughout —
-    bit-stable at any parallelism (same contract as dhash_images)."""
-    pref = _prefix2d(px.sum(axis=2, dtype=np.int64))
-    words = []
-    for rows_c, cols_c, axis in WIDE_GEOMETRIES:
-        s, cnt = _block_sums_from_prefix(pref, rows_c, cols_c)
-        words.append(_pack64(_compare_bits(s, cnt, axis)))
-    return tuple(words)
+    bit-stable at any parallelism (same contract as dhash_images): the two
+    blocks of every compare pair, over all four geometries, are summed
+    from one shared prefix in one gather, and each pair compares exact
+    means by cross-multiplication."""
+    h, w, channels = px.shape
+    gray = px[:, :, 0].astype(np.int64)
+    for c in range(1, channels):
+        gray += px[:, :, c]
+    pref = np.zeros((h + 1, w + 1), dtype=np.int64)
+    np.cumsum(np.cumsum(gray, axis=0, out=gray), axis=1, out=pref[1:, 1:])
+    corners, cnt = _wide_plan(h, w)
+    v = pref.ravel()[corners]
+    s = v[:, 0] - v[:, 1] - v[:, 2] + v[:, 3]
+    bits = s[0] * cnt[1] > s[1] * cnt[0]
+    return tuple(np.frombuffer(np.packbits(bits).tobytes(), ">i8").tolist())
 
 
 def dhash_wide_images(df: DataFrame) -> DataFrame:

@@ -31,7 +31,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from .store import _batch_dir, _compact, _live, pruned_store_scan
+from .store import (
+    _batch_dir, _compact, _live, local_frame, pruned_store_scan,
+)
 
 TOPK_SCHEMA = (
     "query_id string, neighbor_id string, hamming int, rnk int, "
@@ -100,9 +102,7 @@ def _read_state(
         # the touched-only delta invariant holds even when the pruned comp
         # scan fell back to a full pass (the In filters above it remain the
         # ROW-GROUP pruning lever; this is the correctness restriction)
-        tdf = spark.createDataFrame(
-            [(x,) for x in touched], "query_id string"
-        )
+        tdf = local_frame(spark, [(x,) for x in touched], "query_id string")
         out = out.join(F.broadcast(tdf), "query_id", "left_semi")
     return _latest_per_query(out)
 
@@ -150,7 +150,7 @@ def read_topk(spark: SparkSession, state_root: str) -> DataFrame:
     """Current per-query top-k across everything processed so far."""
     st = _read_state(spark, state_root, touched=None)
     if st is None:
-        return spark.createDataFrame([], TOPK_SCHEMA).select(
+        return local_frame(spark, [], TOPK_SCHEMA).select(
             "query_id", "neighbor_id", "hamming", "rnk"
         )
     return st.select("query_id", "neighbor_id", "hamming", "rnk")

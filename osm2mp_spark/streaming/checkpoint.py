@@ -30,6 +30,16 @@ import time
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from .store import local_frame
+
+# One row per manifest record (read_manifest); the same columns whether or
+# not any bucket has been written yet.
+MANIFEST_SCHEMA = (
+    "bucket int, rows long, key_col string, key_min string, key_max string, "
+    "input_fingerprint string, secs double, rows_per_sec double, "
+    "finished_at string"
+)
+
 
 def _bucket_col(key_col: str, n_buckets: int):
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
@@ -163,11 +173,10 @@ def read_manifest(spark, out_dir: str) -> DataFrame:
         if fn.endswith(".json") and not fn.startswith("_"):
             with open(os.path.join(mdir, fn)) as f:
                 recs.append(json.load(f))
-    if not recs:
-        return spark.createDataFrame(
-            [], "bucket int, rows long, key_min string, key_max string, secs double"
-        )
-    return spark.createDataFrame(pd.DataFrame(recs))
+    cols = [f.split()[0] for f in MANIFEST_SCHEMA.split(", ")]
+    return local_frame(
+        spark, [tuple(r.get(c) for c in cols) for r in recs], MANIFEST_SCHEMA
+    )
 
 
 def resume_remaining(

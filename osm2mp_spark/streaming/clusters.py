@@ -46,6 +46,7 @@ from .store import (
     _join,
     _point_lookup,
     _read_live,
+    local_frame,
 )
 
 LABELS_SCHEMA = "vertex long, label long"
@@ -138,10 +139,10 @@ def update_clusters(
     forward_dir = _join(labels_root, "forward")
     if not edges:
         # still write empty deltas so the layout stays per-batch uniform
-        spark.createDataFrame([], LABELS_SCHEMA).write.mode(
+        local_frame(spark, [], LABELS_SCHEMA).write.mode(
             "overwrite"
         ).parquet(_batch_dir(labels_dir, batch_id))
-        spark.createDataFrame([], FORWARD_SCHEMA).write.mode(
+        local_frame(spark, [], FORWARD_SCHEMA).write.mode(
             "overwrite"
         ).parquet(_batch_dir(forward_dir, batch_id))
         return {"touched": [], "old_root": {}, "new_root": {}}
@@ -183,10 +184,10 @@ def update_clusters(
         if new != old:
             merges.add((old, new))
     merges = sorted(merges)
-    spark.createDataFrame(new_labels or [], LABELS_SCHEMA).coalesce(
+    local_frame(spark, new_labels, LABELS_SCHEMA).coalesce(
         1
     ).write.mode("overwrite").parquet(_batch_dir(labels_dir, batch_id))
-    spark.createDataFrame(merges or [], FORWARD_SCHEMA).coalesce(
+    local_frame(spark, merges, FORWARD_SCHEMA).coalesce(
         1
     ).write.mode("overwrite").parquet(_batch_dir(forward_dir, batch_id))
     return {
@@ -204,9 +205,7 @@ def _resolve(spark: SparkSession, lab: DataFrame, forward_root: str):
     fwd = _forward_map(spark, forward_root)
     if not fwd:
         return lab
-    mapping = spark.createDataFrame(
-        [(k, v) for k, v in fwd.items()], FORWARD_SCHEMA
-    )
+    mapping = local_frame(spark, list(fwd.items()), FORWARD_SCHEMA)
     return (
         lab.join(F.broadcast(mapping),
                  lab.label == mapping.from_label, "left")

@@ -44,6 +44,7 @@ from .store import (
     _live,
     _metrics_root,
     _read_live,
+    local_frame,
     pruned_store_scan,
 )
 
@@ -80,7 +81,7 @@ def read_store_signatures(spark: SparkSession, root: str) -> DataFrame:
     if tail:
         parts.append(spark.read.parquet(*tail).select(*cols))
     if not parts:
-        return spark.createDataFrame([], DHASH_WIDE_SCHEMA)
+        return local_frame(spark, [], DHASH_WIDE_SCHEMA)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -233,16 +234,6 @@ BATCH_METRICS_SCHEMA = (
     "batch_id long, n_images long, n_pairs long, secs double, "
     "images_per_sec double, store_rows_scanned long, read_bytes long"
 )
-
-
-def _metrics_row(spark: SparkSession, values: tuple) -> DataFrame:
-    """One BATCH_METRICS_SCHEMA row as a literal projection over a
-    one-partition range: a JVM-only plan, where createDataFrame over a
-    Python list would start a Python worker task to serialize one row."""
-    cols = [f.split() for f in BATCH_METRICS_SCHEMA.split(", ")]
-    return spark.range(0, 1, 1, 1).select(*[
-        F.lit(v).cast(t).alias(c) for (c, t), v in zip(cols, values)
-    ])
 
 
 def start_incremental_dedup(
@@ -424,11 +415,11 @@ def start_incremental_dedup(
         # batch.
         n_pairs = parquet_rows(spark, [out])
         secs = time.time() - t0
-        _metrics_row(spark, (
+        local_frame(spark, [(
             int(batch_id), n_new, n_pairs, float(secs),
             float(n_new / secs) if secs > 0 else 0.0,
             int(n_store), int(read_bytes),
-        )).write.mode("overwrite").parquet(
+        )], BATCH_METRICS_SCHEMA).write.mode("overwrite").parquet(
             _batch_dir(_metrics_root(store_path), batch_id)
         )
         if on_batch_complete is not None:

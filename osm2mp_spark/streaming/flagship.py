@@ -54,7 +54,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .store import _batch_dir, _compact, _join, _point_lookup, _read_live
+from .store import (
+    _batch_dir, _compact, _join, _point_lookup, _read_live, local_frame,
+)
 
 DELTAS_SCHEMA = "city_id string, tile_id int, dk long, di long"
 SIZES_SCHEMA = "root long, size long, b long"
@@ -107,9 +109,7 @@ def update_rollup(
 
     # one touched-set frame reused by the semi-join here AND the
     # singleton anti-join below
-    tdf = spark.createDataFrame(
-        [(v,) for v in touched] or [], "point_id long"
-    )
+    tdf = local_frame(spark, [(v,) for v in touched], "point_id long")
     # which touched vertices arrived THIS batch — semi-join instead of
     # collecting the arrival set: only the (≤ |touched|) intersection ever
     # reaches the driver, keeping driver state O(pairs), not O(batch)
@@ -151,8 +151,8 @@ def update_rollup(
         add_rows.append((R, 1, s_new))
         size_rows.append((R, s_new, batch_id))
 
-    delta = spark.createDataFrame(
-        retract_rows + add_rows or [], "point_id long, dk long, di long"
+    delta = local_frame(
+        spark, retract_rows + add_rows, "point_id long, dk long, di long"
     )
     # singleton arrivals: everything in the batch not touched by a pair —
     # distributed anti-join, never collected
@@ -170,7 +170,7 @@ def update_rollup(
                 "dk", "di")
     )
     out.write.mode("overwrite").parquet(deltas_dir)
-    spark.createDataFrame(size_rows or [], SIZES_SCHEMA).coalesce(
+    local_frame(spark, size_rows, SIZES_SCHEMA).coalesce(
         1
     ).write.mode("overwrite").parquet(_batch_dir(sizes_root, batch_id))
 

@@ -2,7 +2,9 @@
 store: the signature store, pairs and metrics ledger (streaming.dedup), the
 ANN top-k state (streaming.ann), cluster labels and forwarding
 (streaming.clusters), and the rollup deltas and sizes (streaming.flagship).
-This is the only module that knows the on-disk layout.
+This is the only module that knows the on-disk layout. It also builds the
+family's small driver-side frames (local_frame), so that none of them
+costs a Python worker task.
 
 Layout. A store subtree holds one `batch=<id>` dir per micro-batch (id
 zero-padded to 9 digits), each written with mode=overwrite, so a replayed
@@ -170,8 +172,26 @@ def _read_live(spark: SparkSession, root: str, schema: str) -> DataFrame:
     comp, tail = _live(spark, root)
     dirs = ([comp] if comp else []) + tail
     if not dirs:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     return spark.read.parquet(*dirs)
+
+
+def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """`rows` (tuples in the column order of the DDL `schema`; None is
+    null; may be empty) as a driver-built frame that plans as a JVM-only
+    `LocalTableScan`. It goes through an Arrow table: `createDataFrame`
+    over a Python list plans as `Scan ExistingRDD`, which costs a Python
+    worker task every time the frame is evaluated."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(schema)
+    names = struct.fieldNames()
+    table = pa.Table.from_pylist(
+        [dict(zip(names, r)) for r in rows], schema=to_arrow_schema(struct)
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def _certified(spark: SparkSession, store_path: str):

@@ -241,6 +241,153 @@ class TestShippingZip:
         assert len(zipfile.ZipFile(p).namelist()) > 50
 
 
+
+class TestLazyZipInvalidation:
+    """shipping.install_lazy_zip_invalidation: a zipimporter's
+    invalidate_caches re-reads its archive only once it changed on disk."""
+
+    @staticmethod
+    def _write_zip(path, members):
+        import zipfile
+
+        with zipfile.ZipFile(path, "w") as zf:
+            for name, src in members.items():
+                zf.writestr(name, src)
+
+    @pytest.fixture
+    def lazy(self, monkeypatch):
+        """The wrapper installed for one test, then the eager method back;
+        `reads` counts archive directory parses."""
+        import sys
+        import zipimport
+
+        from osm2mp_spark.shipping import install_lazy_zip_invalidation
+
+        if sys.version_info >= (3, 13):
+            pytest.skip("CPython >= 3.13 invalidates zip caches lazily")
+        monkeypatch.setattr(
+            zipimport.zipimporter, "invalidate_caches",
+            zipimport.zipimporter.invalidate_caches,
+        )
+        assert install_lazy_zip_invalidation()
+        assert not install_lazy_zip_invalidation()  # installs once
+        reads = []
+        eager_read = zipimport._read_directory
+
+        def counted(archive):
+            reads.append(archive)
+            return eager_read(archive)
+
+        monkeypatch.setattr(zipimport, "_read_directory", counted)
+        return reads
+
+    def test_unchanged_archive_is_not_reread(self, lazy, tmp_path):
+        import zipimport
+
+        z = str(tmp_path / "lib.zip")
+        self._write_zip(z, {"pkg/__init__.py": "", "pkg/a.py": "X = 1\n"})
+        top = zipimport.zipimporter(z)
+        sub = zipimport.zipimporter(z + "/pkg")
+        lazy.clear()
+        top.invalidate_caches()  # no stamp yet: the one eager read
+        assert lazy == [z]
+        for _ in range(3):
+            top.invalidate_caches()
+            sub.invalidate_caches()
+        assert lazy == [z]
+        assert sub.find_spec("a") is not None
+
+    def test_rewritten_archive_is_reread(self, lazy, tmp_path, monkeypatch):
+        import importlib
+        import sys
+        import zipimport
+
+        z = str(tmp_path / "lib.zip")
+        self._write_zip(z, {"lzi_old.py": "X = 1\n"})
+        monkeypatch.syspath_prepend(z)
+        importlib.invalidate_caches()
+        assert importlib.import_module("lzi_old").X == 1
+        importlib.invalidate_caches()  # the importer's first, stamped read
+        lazy.clear()
+        importlib.invalidate_caches()
+        assert lazy == []
+        # rewritten in place with a new member: new size, new mtime
+        self._write_zip(z, {"lzi_old.py": "X = 1\n", "lzi_new.py": "Y = 2\n"})
+        importlib.invalidate_caches()
+        assert lazy == [z]
+        try:
+            assert importlib.import_module("lzi_new").Y == 2
+        finally:
+            sys.modules.pop("lzi_old", None)
+            sys.modules.pop("lzi_new", None)
+        # a vanished archive takes the eager path, which empties the listing
+        os.remove(z)
+        importer = zipimport.zipimporter.__new__(zipimport.zipimporter)
+        importer.archive = z
+        importer.invalidate_caches()
+        assert lazy == [z, z]
+        assert importer._files == {}
+        assert z not in zipimport._zip_directory_cache
+
+    def test_nothing_installed_from_cpython_3_13(self, monkeypatch):
+        import sys
+        import zipimport
+
+        from osm2mp_spark.shipping import install_lazy_zip_invalidation
+
+        eager = zipimport.zipimporter.invalidate_caches
+        monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches", eager)
+        monkeypatch.setattr(sys, "version_info", (3, 13, 0, "final", 0))
+        assert not install_lazy_zip_invalidation()
+        assert zipimport.zipimporter.invalidate_caches is eager
+
+    def test_reused_worker_skips_rereading_archives(self, spark):
+        """After one engine mapInPandas task, a later task on the same
+        (reused) worker runs with the lazy invalidate_caches, and
+        importlib.invalidate_caches() there parses no archive."""
+        import sys
+
+        def probe(it):
+            import importlib
+            import os
+            import zipimport
+
+            import osm2mp_spark  # noqa: F401  (what an engine closure does)
+
+            reads = []
+            eager_read = zipimport._read_directory
+
+            def counted(archive):
+                reads.append(archive)
+                return eager_read(archive)
+
+            zipimport._read_directory = counted
+            try:
+                importlib.invalidate_caches()
+            finally:
+                zipimport._read_directory = eager_read
+            lazy = getattr(zipimport.zipimporter.invalidate_caches,
+                           "_lazy", False)
+            for _ in it:
+                pass
+            yield pd.DataFrame(
+                {"pid": [os.getpid()], "lazy": [lazy], "reads": [len(reads)]}
+            )
+
+        seen = {}
+        for _ in range(12):
+            (row,) = spark.range(1, numPartitions=1).mapInPandas(
+                probe, "pid long, lazy boolean, reads int"
+            ).collect()
+            if row.pid in seen:
+                break
+            seen[row.pid] = row
+        else:
+            pytest.fail(f"no worker ran two tasks: {sorted(seen)}")
+        assert row.lazy == (sys.version_info < (3, 13))
+        assert row.reads == 0
+
+
 class TestStreamingDedup:
     def test_stream_dedup_matches_batch_hash_set(self, spark, sf_dir, tmp_path):
         import shutil
@@ -1002,9 +1149,9 @@ class TestIncrementalDedupStream:
 
     def test_metrics_rows_mix_across_writers(self, spark, tmp_path):
         """Metrics dirs written by the old createDataFrame path and by the
-        literal-projection row share one parquet schema (names and types of
-        BATCH_METRICS_SCHEMA), so a store holding both reads back the same
-        rows through read_batch_metrics and through compact_store's
+        Arrow-built local_frame row share one parquet schema (names and
+        types of BATCH_METRICS_SCHEMA), so a store holding both reads back
+        the same rows through read_batch_metrics and through compact_store's
         metrics/compacted=<N> roll-up."""
         import glob
 
@@ -1013,10 +1160,10 @@ class TestIncrementalDedupStream:
         from osm2mp_spark.operators.images import DHASH_WIDE_SCHEMA
         from osm2mp_spark.streaming.dedup import (
             BATCH_METRICS_SCHEMA,
-            _metrics_row,
             compact_store,
             read_batch_metrics,
         )
+        from osm2mp_spark.streaming.store import local_frame
 
         store = str(tmp_path / "store")
         rows = [
@@ -1034,7 +1181,9 @@ class TestIncrementalDedupStream:
                     1
                 ).write.mode("overwrite").parquet(mdir)
             else:
-                _metrics_row(spark, row).write.mode("overwrite").parquet(mdir)
+                local_frame(spark, [row], BATCH_METRICS_SCHEMA).write.mode(
+                    "overwrite"
+                ).parquet(mdir)
 
         def arrow_cols(b):
             (f,) = glob.glob(f"{store}/metrics/batch={b:09d}/*.parquet")

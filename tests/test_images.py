@@ -581,6 +581,54 @@ class TestWideSignatures:
                 b[f // 64] ^= 1 << int(f % 64)
             assert any(ka == kb for ka, kb in zip(keys(a), keys(b)))
 
+    def test_wide_signature_matches_per_geometry_formula(self):
+        """Differential fuzz: the one-gather kernel equals the per-geometry
+        prefix / block-sum / cross-multiplied compare formula word for
+        word — random sizes in 1..130 (many below the 17-block grids, most
+        not divisible by any grid), all-constant and all-255 images, and
+        the three corpus shapes through every codec."""
+        from osm2mp_spark.operators.images import (
+            WIDE_GEOMETRIES,
+            _block_sums_from_prefix,
+            _compare_bits,
+            _pack64,
+            _prefix2d,
+            wide_signature,
+        )
+        from osm2mp_spark.sources.images import (
+            FMT_CHOICES, H_CHOICES, W_CHOICES, encode,
+        )
+
+        def reference(px):
+            pref = _prefix2d(px.sum(axis=2, dtype=np.int64))
+            out = []
+            for rows_c, cols_c, axis in WIDE_GEOMETRIES:
+                s, cnt = _block_sums_from_prefix(pref, rows_c, cols_c)
+                out.append(_pack64(_compare_bits(s, cnt, axis)))
+            return tuple(out)
+
+        rng = np.random.default_rng(20261018)
+        sizes = [(1, 1), (1, 130), (130, 1), (3, 7), (16, 16), (17, 17),
+                 (8, 9), (130, 130)]
+        sizes += [tuple(int(x) for x in rng.integers(1, 131, size=2))
+                  for _ in range(400)]
+        images = []
+        for i, (h, w) in enumerate(sizes):
+            if i % 8 == 0:
+                px = np.full((h, w, 3), 255, np.uint8)
+            elif i % 8 == 1:
+                px = np.full((h, w, 3), int(rng.integers(0, 256)), np.uint8)
+            else:
+                px = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
+            images.append(px)
+        for h, w in zip(H_CHOICES, W_CHOICES):
+            px = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
+            images += [decode(encode(px, fmt), fmt) for fmt in FMT_CHOICES]
+        for px in images:
+            got = wide_signature(px)
+            assert got == reference(px), px.shape
+            assert all(type(x) is int for x in got)
+
     def test_wide_corpus_separation(self):
         """Planted dups within 7/256 bits; unrelated far outside (>= 64) —
         the margin that makes threshold tuning safe at scale."""

@@ -47,3 +47,49 @@ def test_no_name_defined_twice_in_one_scope():
         )
     ]
     assert hits == []
+
+
+def _create_dataframe_calls(tree: ast.AST):
+    """(enclosing def name or None, line) of every `*.createDataFrame(...)`
+    call in `tree`."""
+
+    def walk(node, scope):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                yield from walk(child, child.name)
+                continue
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr == "createDataFrame"
+            ):
+                yield scope, child.lineno
+            yield from walk(child, scope)
+
+    yield from walk(tree, None)
+
+
+def test_create_dataframe_calls_found():
+    src = (
+        "x = spark.createDataFrame([])\n"
+        "def f(s):\n    def g():\n        return s.createDataFrame(t, u)\n"
+    )
+    assert list(_create_dataframe_calls(ast.parse(src))) == [
+        (None, 1), ("g", 4),
+    ]
+
+
+def test_streaming_frames_are_built_by_local_frame():
+    """A streaming driver-side frame goes through store.local_frame, which
+    plans a JVM-only LocalTableScan; createDataFrame over a Python list
+    plans a Python RDD scan that costs a worker task per evaluation."""
+    pkg = ROOT / "osm2mp_spark" / "streaming"
+    hits = [
+        f"{path.relative_to(ROOT)}:{line} (in {scope})"
+        for path in sorted(pkg.rglob("*.py"))
+        for scope, line in _create_dataframe_calls(
+            ast.parse(path.read_text(), str(path))
+        )
+        if (path.name, scope) != ("store.py", "local_frame")
+    ]
+    assert hits == []
