@@ -1,4 +1,5 @@
-"""Measurement helpers shared by bench.py and the test suite."""
+"""Measurement helpers shared by tools/ledgers.py, tools/dump_plans.py and
+the test suite."""
 
 from __future__ import annotations
 

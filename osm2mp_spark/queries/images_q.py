@@ -762,13 +762,15 @@ def flagship_image_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     ArrowEvalPython pass, expression-kNN nearest-city fallback.
     Golden-gated; the spatial kernels themselves are independently
     hash-verified (pip_city, knn_city, bsp_tiles). This golden is the
-    spatial leg of flagship_dedup's composed oracle."""
+    spatial leg of flagship_dedup's composed oracle. The ids come from
+    the caption generator, which emits the corpus ids without
+    synthesizing or encoding pixels."""
     from ..plans.flagship import flagship_assign
-    from ..sources.images import generate_phash_corpus_df
+    from ..sources.images import generate_captions_df
     from ..sources.points import with_derived_position
 
-    corpus = generate_phash_corpus_df(spark, _n_for(spark, sf_dir))
-    keys = corpus.selectExpr(
+    ids = generate_captions_df(spark, _n_for(spark, sf_dir))
+    keys = ids.selectExpr(
         "image_id", f"{_img_key('image_id')} AS point_id"
     )
     pts = with_derived_position(keys, "point_id")

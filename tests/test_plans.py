@@ -330,6 +330,14 @@ class TestPythonStagesAndDriverJobs:
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "bytes" not in plan
 
+    def test_flagship_image_assign_generates_no_payload(self, spark, sf_dir):
+        """The per-image assignment reads only the corpus ids, so its plan
+        synthesizes no image bytes: no `bytes` column appears anywhere."""
+        import __spark_entry__ as E
+
+        df = E.queries()["flagship_image_assign"](spark, sf_dir)
+        assert "bytes" not in plan_of(df)
+
 
 class TestPipOperatorEdgeRows:
     """pip_resolve and pip_flags_or keep one output row per input row, null

@@ -150,7 +150,7 @@ class TestBandJoinSkew:
         # AQE's skew split shows up as MORE tasks than shuffle partitions
         # in the join stage — the stable witness (the plan string's
         # skew=true marker prints only while the re-optimized query stage
-        # object is still materialized). Shared with bench.py --skew.
+        # object is still materialized). Shared with tools/ledgers.py skew.
         from osm2mp_spark.metrics import max_stage_tasks
 
         try:

@@ -77,21 +77,12 @@ def main():
     os.makedirs(out_dir, exist_ok=True)
 
     import __spark_entry__ as entry
-    from pyspark.sql import SparkSession
+    from spark_session import make_session
 
     from osm2mp_spark.metrics import python_eval_counts
 
     qs = entry.queries()
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("dump-plans")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = make_session("dump-plans")
     records = _Lines()
     for logger in ("osm2mp_spark.operators.hamming",
                    "osm2mp_spark.operators.chains"):

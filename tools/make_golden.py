@@ -24,7 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import SparkSession
+from spark_session import make_session
 
 GOLDEN_QUERIES = [
     "bsp_tiles", "sea_synthesis", "clip_polygons_concave",
@@ -48,16 +48,7 @@ def main():
 
     names = sys.argv[1:] or GOLDEN_QUERIES
     os.makedirs(OUT_DIR, exist_ok=True)
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("make_golden")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = make_session("make_golden")
     qs = entry.queries()
     for name in names:
         pdf = qs[name](spark, SF_DIR).toPandas()
