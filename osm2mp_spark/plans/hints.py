@@ -31,45 +31,6 @@ def broadcast_threshold(df: DataFrame) -> int:
         return _DEFAULT_MAX_ROWS
 
 
-def parquet_row_count(path: str) -> int | None:
-    """Row count of a parquet file/dir from FOOTER metadata only — a
-    driver-side pyarrow read, no Spark job, so broadcast gates can size
-    themselves at plan-construction time without breaking laziness.
-
-    Plain OS paths read directly; URI paths (file://, hdfs://, s3a://, ...)
-    go through pyarrow's filesystem inference. Returns None when the
-    scheme/path can't be sized that way — maybe_broadcast treats None as
-    over-threshold, falling back to the unhinted (shuffle/AQE) join, which
-    is always safe."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    try:
-        if "://" in path:
-            from pyarrow import fs as pafs
-
-            fsys, inner = pafs.FileSystem.from_uri(path)
-            info = fsys.get_file_info(inner)
-            if info.type == pafs.FileType.Directory:
-                sel = pafs.FileSelector(inner)
-                return sum(
-                    pq.ParquetFile(f.path, filesystem=fsys).metadata.num_rows
-                    for f in fsys.get_file_info(sel)
-                    if f.path.endswith(".parquet")
-                )
-            return pq.ParquetFile(inner, filesystem=fsys).metadata.num_rows
-        if os.path.isdir(path):
-            return sum(
-                pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            )
-        return pq.ParquetFile(path).metadata.num_rows
-    except Exception:
-        return None
-
-
 def maybe_broadcast(df: DataFrame, est_rows: int | None) -> DataFrame:
     """Broadcast-hint `df` only if the caller's (upper-bound) row estimate
     fits under `spark.osm2mp.broadcast.maxRows`; otherwise — including

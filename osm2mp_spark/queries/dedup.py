@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from . import register
+from . import oracle_sql, register
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -81,10 +81,8 @@ sh AS (
 """
 
 
-@register(
-    "dedup_minhash_lsh",
-    oracle=f"""
-WITH {_SHINGLE_CTE},
+# the LSH candidate pairs (doc_a < doc_b) as CTE `pairs`
+_LSH_PAIRS_CTE = f"""{_SHINGLE_CTE},
 seeds AS (SELECT UNNEST(generate_series(0, {_N_HASH - 1})) AS seed),
 sig AS (
   SELECT doc_id, seed, MIN(md5(CAST(seed AS VARCHAR) || '|' || shingle)) AS mh
@@ -92,13 +90,16 @@ sig AS (
 bands AS (
   SELECT doc_id, CAST(seed // 2 AS INT) AS band_no,
          md5(STRING_AGG(mh, '|' ORDER BY seed)) AS band_key
-  FROM sig GROUP BY doc_id, seed // 2)
-SELECT DISTINCT CAST(a.doc_id AS BIGINT) AS doc_a,
-                CAST(b.doc_id AS BIGINT) AS doc_b
-FROM bands a JOIN bands b
-  ON a.band_no = b.band_no AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-""",
-)
+  FROM sig GROUP BY doc_id, seed // 2),
+pairs AS (
+  SELECT DISTINCT CAST(a.doc_id AS BIGINT) AS doc_a,
+                  CAST(b.doc_id AS BIGINT) AS doc_b
+  FROM bands a JOIN bands b
+    ON a.band_no = b.band_no AND a.band_key = b.band_key
+   AND a.doc_id < b.doc_id)"""
+
+
+@register("dedup_minhash_lsh", oracle=f"WITH {_LSH_PAIRS_CTE}\nSELECT * FROM pairs")
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup candidates: shingle→minhash→band→bucket-join.
     Signatures are min-of-md5-string (engine-portable); banding makes the
@@ -160,9 +161,37 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SimHash (32-bit) + near-dup pairs by hamming distance
 # ---------------------------------------------------------------------------
 
-_HEXPOS_CTE = """
-hexpos AS (SELECT UNNEST(generate_series(1, 8)) AS p)
-"""
+def _simhash_sql(n_hex: int) -> str:
+    """DuckDB twin of _simhash_df: CTEs through `sh(doc_id, simhash)`,
+    every token's first n_hex md5 hex digits exploded into 4·n_hex bit
+    rows and a majority vote per (doc, bit). The exploded shape is kept on
+    purpose: the gate proves _simhash_df's one-aggregate rewrite against
+    it."""
+    return f"""toks AS (
+  SELECT doc_id, md5(t.w) AS h
+  FROM documents, UNNEST(string_split(text, ' ')) AS t(w)),
+hexpos AS (SELECT UNNEST(generate_series(1, {n_hex})) AS p),
+digits AS (
+  SELECT doc_id, p,
+         STRPOS('0123456789abcdef', SUBSTR(h, p, 1)) - 1 AS v
+  FROM toks CROSS JOIN hexpos),
+bits AS (
+  SELECT doc_id, (p - 1) * 4 + k AS bit_no,
+         CASE WHEN ((v >> (3 - k)) & 1) = 1 THEN 1 ELSE -1 END AS s
+  FROM digits, UNNEST(generate_series(0, 3)) AS g(k)),
+votes AS (SELECT doc_id, bit_no, SUM(s) AS vote FROM bits GROUP BY doc_id, bit_no),
+sh AS (
+  SELECT CAST(doc_id AS BIGINT) AS doc_id,
+         CAST(SUM(CASE WHEN vote > 0
+                       THEN CAST(1 AS BIGINT) << ({4 * n_hex - 1} - bit_no)
+                       ELSE 0 END) AS BIGINT) AS simhash
+  FROM votes GROUP BY doc_id)"""
+
+
+def _simhash_pairs_sql(n_hex: int) -> str:
+    """All-pairs Hamming ≤ 6 join over _simhash_sql's signatures."""
+    return f"""WITH {_simhash_sql(n_hex)}
+{oracle_sql.hamming_pairs("sh", "doc_id", ("simhash",), 6, ("doc_a", "doc_b"))}"""
 
 
 def _simhash_df(d: DataFrame, n_hex: int) -> DataFrame:
@@ -205,29 +234,7 @@ def _simhash_df(d: DataFrame, n_hex: int) -> DataFrame:
     )
 
 
-@register(
-    "dedup_simhash",
-    oracle=f"""
-WITH toks AS (
-  SELECT doc_id, md5(t.w) AS h
-  FROM documents, UNNEST(string_split(text, ' ')) AS t(w)),
-{_HEXPOS_CTE},
-digits AS (
-  SELECT doc_id, p,
-         STRPOS('0123456789abcdef', SUBSTR(h, p, 1)) - 1 AS v
-  FROM toks CROSS JOIN hexpos),
-bits AS (
-  SELECT doc_id, (p - 1) * 4 + k AS bit_no,
-         CASE WHEN ((v >> (3 - k)) & 1) = 1 THEN 1 ELSE -1 END AS s
-  FROM digits, UNNEST(generate_series(0, 3)) AS g(k)),
-votes AS (
-  SELECT doc_id, bit_no, SUM(s) AS vote FROM bits GROUP BY doc_id, bit_no)
-SELECT CAST(doc_id AS BIGINT) AS doc_id,
-       CAST(SUM(CASE WHEN vote > 0 THEN CAST(1 AS BIGINT) << (31 - bit_no) ELSE 0 END)
-            AS BIGINT) AS simhash
-FROM votes GROUP BY doc_id
-""",
-)
+@register("dedup_simhash", oracle=f"WITH {_simhash_sql(8)}\nSELECT * FROM sh")
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash: per-token md5 → 32 bit votes → majority sign per bit.
     Pure integer hex-digit decomposition — portable and shuffle-light:
@@ -309,33 +316,7 @@ def ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "simhash_pairs",
-    oracle="""
-WITH toks AS (
-  SELECT doc_id, md5(t.w) AS h
-  FROM documents, UNNEST(string_split(text, ' ')) AS t(w)),
-hexpos AS (SELECT UNNEST(generate_series(1, 8)) AS p),
-digits AS (
-  SELECT doc_id, p,
-         STRPOS('0123456789abcdef', SUBSTR(h, p, 1)) - 1 AS v
-  FROM toks CROSS JOIN hexpos),
-bits AS (
-  SELECT doc_id, (p - 1) * 4 + k AS bit_no,
-         CASE WHEN ((v >> (3 - k)) & 1) = 1 THEN 1 ELSE -1 END AS s
-  FROM digits, UNNEST(generate_series(0, 3)) AS g(k)),
-votes AS (SELECT doc_id, bit_no, SUM(s) AS vote FROM bits GROUP BY doc_id, bit_no),
-sh AS (
-  SELECT CAST(doc_id AS BIGINT) AS doc_id,
-         CAST(SUM(CASE WHEN vote > 0 THEN CAST(1 AS BIGINT) << (31 - bit_no)
-                       ELSE 0 END) AS BIGINT) AS simhash
-  FROM votes GROUP BY doc_id)
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       CAST(bit_count(CAST(xor(a.simhash, b.simhash) AS BIGINT)) AS INT) AS hamming
-FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-WHERE bit_count(CAST(xor(a.simhash, b.simhash) AS BIGINT)) <= 6
-""",
-)
+@register("simhash_pairs", oracle=_simhash_pairs_sql(8))
 def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs: 32-bit signatures, Hamming ≤ 6.
 
@@ -367,38 +348,7 @@ def _simhash_pairs(sh: DataFrame, bits: int) -> DataFrame:
 # sign bit. Same lossless 7-band pigeonhole for Hamming ≤ 6.
 # ---------------------------------------------------------------------------
 
-_SIM64_SQL = """
-toks AS (
-  SELECT doc_id, md5(t.w) AS h
-  FROM documents, UNNEST(string_split(text, ' ')) AS t(w)),
-hexpos AS (SELECT UNNEST(generate_series(1, 15)) AS p),
-digits AS (
-  SELECT doc_id, p,
-         STRPOS('0123456789abcdef', SUBSTR(h, p, 1)) - 1 AS v
-  FROM toks CROSS JOIN hexpos),
-bits AS (
-  SELECT doc_id, (p - 1) * 4 + k AS bit_no,
-         CASE WHEN ((v >> (3 - k)) & 1) = 1 THEN 1 ELSE -1 END AS s
-  FROM digits, UNNEST(generate_series(0, 3)) AS g(k)),
-votes AS (SELECT doc_id, bit_no, SUM(s) AS vote FROM bits GROUP BY doc_id, bit_no),
-sh AS (
-  SELECT CAST(doc_id AS BIGINT) AS doc_id,
-         CAST(SUM(CASE WHEN vote > 0 THEN CAST(1 AS BIGINT) << (59 - bit_no)
-                       ELSE 0 END) AS BIGINT) AS simhash
-  FROM votes GROUP BY doc_id)
-"""
-
-
-@register(
-    "simhash_wide_pairs",
-    oracle=f"""
-WITH {_SIM64_SQL}
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       CAST(bit_count(CAST(xor(a.simhash, b.simhash) AS BIGINT)) AS INT) AS hamming
-FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-WHERE bit_count(CAST(xor(a.simhash, b.simhash) AS BIGINT)) <= 6
-""",
-)
+@register("simhash_wide_pairs", oracle=_simhash_pairs_sql(15))
 def simhash_wide_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """60-bit simhash near-dup pairs, Hamming ≤ 6, via the lossless 7-band
     pigeonhole equi-join (widths 9,9,9,9,8,8,8 → per-band buckets hold
@@ -414,38 +364,10 @@ def simhash_wide_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_clusters",
-    oracle=f"""
-WITH RECURSIVE {_SHINGLE_CTE},
-seeds AS (SELECT UNNEST(generate_series(0, {_N_HASH - 1})) AS seed),
-sig AS (
-  SELECT doc_id, seed, MIN(md5(CAST(seed AS VARCHAR) || '|' || shingle)) AS mh
-  FROM sh CROSS JOIN seeds GROUP BY doc_id, seed),
-bands AS (
-  SELECT doc_id, CAST(seed // 2 AS INT) AS band_no,
-         md5(STRING_AGG(mh, '|' ORDER BY seed)) AS band_key
-  FROM sig GROUP BY doc_id, seed // 2),
-pairs AS (
-  SELECT DISTINCT CAST(a.doc_id AS BIGINT) AS doc_a,
-                  CAST(b.doc_id AS BIGINT) AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band_no = b.band_no AND a.band_key = b.band_key
-   AND a.doc_id < b.doc_id),
-und AS (SELECT doc_a AS a, doc_b AS b FROM pairs
-        UNION ALL SELECT doc_b AS a, doc_a AS b FROM pairs),
-comp(doc_id, lab) AS (
-  SELECT a, a FROM (SELECT DISTINCT a FROM und)
-  UNION
-  SELECT u.b, c.lab FROM comp c JOIN und u ON u.a = c.doc_id),
-lbl AS (SELECT doc_id, MIN(lab) AS cluster_id FROM comp GROUP BY doc_id),
-allv AS (
-  SELECT CAST(d.doc_id AS BIGINT) AS doc_id,
-         COALESCE(l.cluster_id, CAST(d.doc_id AS BIGINT)) AS cluster_id
-  FROM documents d LEFT JOIN lbl l ON CAST(d.doc_id AS BIGINT) = l.doc_id),
-sizes AS (SELECT cluster_id, COUNT(*) AS n FROM allv GROUP BY cluster_id)
-SELECT a.doc_id, a.cluster_id, CAST(s.n AS BIGINT) AS cluster_size,
-       (a.doc_id = a.cluster_id) AS keep
-FROM allv a JOIN sizes s ON a.cluster_id = s.cluster_id
-""",
+    oracle=f"""WITH RECURSIVE {_LSH_PAIRS_CTE},
+{oracle_sql.clusters("(SELECT CAST(doc_id AS BIGINT) AS doc_id FROM documents)",
+                     "doc_id", "pairs", "doc_a", "doc_b")}
+SELECT v AS doc_id, cluster_id, cluster_size, keep FROM clusters""",
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pair table → document clusters via min-label connected

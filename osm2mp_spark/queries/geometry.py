@@ -20,6 +20,7 @@ from ..operators.rings import assemble_rings
 from ..operators.tiles import assign_tiles_bsp
 from ..sources.points import LINEITEM_SEQ_SQL, derived_lat_sql, derived_lon_sql
 from . import golden_oracle, register
+from .oracle_sql import min_label
 
 
 # unit-hexagon direction constants (cos/sin of i·60°) as EXACT double
@@ -301,21 +302,15 @@ func AS (
            ROW_NUMBER() OVER (PARTITION BY succ ORDER BY cosv DESC, pred) AS rn2
     FROM e1 WHERE rn = 1)
   WHERE rn2 = 1),
-und AS (SELECT pred AS a, succ AS b FROM func
-        UNION ALL SELECT succ AS a, pred AS b FROM func),
-comp(road_id, lab) AS (
-  SELECT road_id, road_id FROM r
-  UNION
-  SELECT u.b, c.lab FROM comp c JOIN und u ON u.a = c.road_id),
-lbl AS (SELECT road_id, MIN(lab) AS label FROM comp GROUP BY road_id),
+{min_label('func', 'pred', 'succ', seed='SELECT road_id AS a FROM r')},
 starts AS (
-  SELECT l.label, MIN(l.road_id) AS head_id
-  FROM lbl l LEFT JOIN (SELECT DISTINCT succ FROM func) s ON l.road_id = s.succ
+  SELECT l.lab AS label, MIN(l.v) AS head_id
+  FROM lbl l LEFT JOIN (SELECT DISTINCT succ FROM func) s ON l.v = s.succ
   WHERE s.succ IS NULL
-  GROUP BY l.label),
+  GROUP BY l.lab),
 heads AS (
-  SELECT l.road_id, COALESCE(st.head_id, l.label) AS head_id
-  FROM lbl l LEFT JOIN starts st ON l.label = st.label),
+  SELECT l.v AS road_id, COALESCE(st.head_id, l.lab) AS head_id
+  FROM lbl l LEFT JOIN starts st ON l.lab = st.label),
 sizes AS (SELECT head_id, COUNT(*) AS n FROM heads GROUP BY head_id)
 SELECT h.road_id, h.head_id, CAST(s.n AS BIGINT) AS chain_len
 FROM heads h JOIN sizes s ON h.head_id = s.head_id

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..sources.points import LINEITEM_VKEY_SQL as _VKEY, derived_lat_sql, derived_lon_sql
 from . import register
+from .oracle_sql import min_label
 
 _G = 16          # pixels per tile side
 _NX = 16         # tiles per world axis (grid_tile_expr default)
@@ -353,14 +354,8 @@ eps AS (SELECT k, {_ep_key('x0', 'y0')} AS ep FROM sk
 edges AS (
   SELECT DISTINCT a.k AS ka, b.k AS kb
   FROM eps a JOIN eps b ON a.ep = b.ep AND a.k < b.k),
-und AS (SELECT ka AS a, kb AS b FROM edges
-        UNION ALL SELECT kb AS a, ka AS b FROM edges),
-comp(v, lab) AS (
-  SELECT a, a FROM (SELECT DISTINCT a FROM und)
-  UNION
-  SELECT u.b, c.lab FROM comp c JOIN und u ON u.a = c.v),
-lbl AS (SELECT v, MIN(lab) AS ring FROM comp GROUP BY v),
-ringv AS (SELECT l.ring, s.* FROM sk s JOIN lbl l ON l.v = s.k)
+{min_label('edges', 'ka', 'kb')},
+ringv AS (SELECT l.lab AS ring, s.* FROM sk s JOIN lbl l ON l.v = s.k)
 SELECT CAST(ring AS INT) AS ring_id, CAST(COUNT(*) AS BIGINT) AS n_segs,
        CAST(LEAST(MIN(x0), MIN(x1)) AS INT) AS x_min,
        CAST(GREATEST(MAX(x0), MAX(x1)) AS INT) AS x_max,

@@ -366,7 +366,8 @@ def entrance_poi(spark: SparkSession, sf_dir: str) -> DataFrame:
     rings = blds.select(
         "building_id", F.posexplode("ring").alias("pos", "node_id")
     )
-    from ..plans.hints import maybe_broadcast, parquet_row_count
+    from ..plans.hints import maybe_broadcast
+    from ..sources.parquet_footers import rowgroup_stats
 
     part = spark.read.parquet(f"{sf_dir}/part.parquet")
     entr = part.filter("p_partkey % 23 = 0").select(
@@ -375,8 +376,8 @@ def entrance_poi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # entrance nodes are FACT-derived (~1/23 of parts), so the broadcast is
     # size-gated; the estimate comes from parquet footers (driver-side, no
     # job) so query construction stays lazy
-    n_part = parquet_row_count(f"{sf_dir}/part.parquet")
-    est = None if n_part is None else n_part // 23 + 1
+    stats = rowgroup_stats(f"{sf_dir}/part.parquet")
+    est = None if stats is None else stats[0] // 23 + 1
     hit = (
         rings.join(maybe_broadcast(entr, est_rows=est), "node_id")
         .groupBy("building_id")

@@ -288,9 +288,11 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # driver-side (no Spark job — construction stays lazy), and past the
     # ceiling the planner shuffles instead (sort-merge on vec_id — the
     # candidate side is already shuffled by the distinct).
-    from ..plans.hints import maybe_broadcast, parquet_row_count
+    from ..plans.hints import maybe_broadcast
+    from ..sources.parquet_footers import rowgroup_stats
 
-    n_vec = parquet_row_count(f"{sf_dir}/embeddings.parquet")
+    stats = rowgroup_stats(f"{sf_dir}/embeddings.parquet")
+    n_vec = None if stats is None else stats[0]
     pairs = (
         cand.join(maybe_broadcast(na, est_rows=n_vec), "vec_a")
         .join(maybe_broadcast(nb, est_rows=n_vec), "vec_b")

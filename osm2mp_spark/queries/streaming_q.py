@@ -2,10 +2,24 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..streaming.windows import windowed_counts_batch
 from . import register
+from .images_q import (
+    ANN_K,
+    ANN_QUERIES,
+    WIDE,
+    _flagship_dedup_oracle,
+    _img_key,
+    _n_for,
+    _unkey_clusters,
+    clusters_oracle,
+    pairs_oracle,
+    topk_oracle,
+)
 
 
 @register(
@@ -46,15 +60,98 @@ def sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sessionize_batch(spark.read.parquet(f"{sf_dir}/events.parquet"))
 
 
-def _incremental_dedup_oracle() -> str | None:
-    # Identical oracle to image_dedup_wide: the incremental streaming union
-    # must equal the one-shot batch join (see streaming.dedup docstring).
-    from .images_q import _wide_pairs_oracle
+def run_image_stream(spark: SparkSession, base: str, n: int, files: int, *,
+                     variants: int = 1, ann: bool = False,
+                     clusters: bool = False, rollup: bool = False,
+                     compact_after=()) -> list[float]:
+    """Land the image dedup corpus of `n` originals as `files` parquet
+    files under `base`/landing and stream them through
+    start_incremental_dedup, one file per micro-batch, until the landing
+    zone is drained. The stream always maintains the signature store and
+    the pairs; `ann`, `clusters` and `rollup` add the ANN top-k state, the
+    cluster labels and the per-(city, tile) keeper rollup (which needs
+    `clusters`). Every store lives under `base`. After each batch id in
+    `compact_after`, between batches, every maintained store is
+    compacted; returns the seconds each compaction round took."""
+    import time
 
-    return _wide_pairs_oracle()
+    from ..plans.flagship import flagship_assign
+    from ..sources.images import generate_phash_corpus_df
+    from ..sources.points import with_derived_position
+    from ..streaming.ann import compact_topk_state
+    from ..streaming.clusters import compact_labels
+    from ..streaming.dedup import (
+        compact_pairs,
+        compact_store,
+        start_incremental_dedup,
+    )
+    from ..streaming.flagship import compact_rollup
+
+    land, store = f"{base}/landing", f"{base}/store"
+    corpus = generate_phash_corpus_df(spark, n, variants=variants)
+    corpus.repartition(files).write.mode("overwrite").parquet(land)
+    # the stream takes files in mtime order: distinct mtimes in file-name
+    # order pin the file -> batch assignment, so two runs compare batch by
+    # batch
+    parts = sorted(f for f in os.listdir(land) if f.endswith(".parquet"))
+    first = time.time() - len(parts)
+    for i, f in enumerate(parts):
+        os.utime(f"{land}/{f}", (first + i, first + i))
+    compactions = [(compact_store, store),
+                   (compact_pairs, f"{base}/pairs", store)]
+    family = {}
+    if ann:
+        family.update(ann_state_path=f"{base}/state",
+                      ann_query_pred=ANN_QUERIES, ann_k=ANN_K)
+        compactions.append((compact_topk_state, f"{base}/state", store))
+    if clusters:
+        family.update(clusters_root=f"{base}/clusters",
+                      cluster_key_exprs=(_img_key("id_a"), _img_key("id_b")))
+        compactions.append((compact_labels, f"{base}/clusters", store))
+    if rollup:
+        family.update(
+            rollup_root=f"{base}/rollup", rollup_key_expr=_img_key("image_id"),
+            rollup_assign=lambda df: flagship_assign(
+                with_derived_position(df, "point_id")
+            ),
+        )
+        compactions.append((compact_rollup, f"{base}/rollup", store))
+    secs = []
+
+    def hook(batch_id):
+        if batch_id in compact_after:
+            t0 = time.time()
+            for compact, *paths in compactions:
+                compact(spark, *paths)
+            secs.append(round(time.time() - t0, 2))
+
+    q = start_incremental_dedup(
+        spark, land, spark.read.parquet(land).schema,
+        store_path=store, pairs_path=f"{base}/pairs",
+        checkpoint_path=f"{base}/ckpt",
+        max_hamming=WIDE.max_hamming, max_files_per_trigger=1,
+        on_batch_complete=hook, **family,
+    )
+    try:
+        q.awaitTermination()
+    finally:
+        q.stop()
+    return secs
 
 
-@register("streaming_incremental_dedup", oracle=_incremental_dedup_oracle())
+def _stream(spark: SparkSession, sf_dir: str, prefix: str, **family) -> str:
+    """run_image_stream over the sf tier's corpus as 4 landing files (4
+    micro-batches), in this application's scratch dir
+    `<prefix>_<sf>_<app id>`; returns that dir."""
+    from ..scratch import scratch_dir
+
+    sf_name = os.path.basename(os.path.normpath(sf_dir))
+    base = scratch_dir(f"{prefix}_{sf_name}", spark.sparkContext.applicationId)
+    run_image_stream(spark, base, _n_for(spark, sf_dir), 4, **family)
+    return base
+
+
+@register("streaming_incremental_dedup", oracle=pairs_oracle(WIDE))
 def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming ingest composed with incremental dedup: the dedup corpus
     lands as parquet FILES, a foreachBatch stream (availableNow, one file
@@ -63,112 +160,29 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulated pair union across micro-batches must equal the one-shot
     batch join, so the gate runs the SAME all-pairs oracle as
     image_dedup_wide."""
-    import os
+    from ..streaming.dedup import read_pairs
 
-    from .images_q import _n_for
-    from ..scratch import scratch_dir
-    from ..sources.images import generate_phash_corpus_df
-    from ..streaming.dedup import read_pairs, start_incremental_dedup
-
-    sf_name = os.path.basename(os.path.normpath(sf_dir))
-    base = scratch_dir(
-        f"osm2mp_inc_dedup_{sf_name}", spark.sparkContext.applicationId
-    )
-    land = os.path.join(base, "landing")
-    corpus = generate_phash_corpus_df(spark, _n_for(spark, sf_dir))
-    # 4 landing files → 4 micro-batches at maxFilesPerTrigger=1
-    corpus.repartition(4).write.mode("overwrite").parquet(land)
-    schema = spark.read.parquet(land).schema
-    q = start_incremental_dedup(
-        spark, land, schema,
-        store_path=os.path.join(base, "store"),
-        pairs_path=os.path.join(base, "pairs"),
-        checkpoint_path=os.path.join(base, "ckpt"),
-        max_hamming=7, max_files_per_trigger=1,
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
-    return read_pairs(spark, os.path.join(base, "pairs"))
+    base = _stream(spark, sf_dir, "osm2mp_inc_dedup")
+    return read_pairs(spark, f"{base}/pairs")
 
 
-def _incremental_ann_oracle() -> str | None:
-    # Identical oracle to image_ann_topk_wide: the incrementally-maintained
-    # top-k state must equal the one-shot batch top-k (see streaming.ann).
-    from .images_q import _ann_topk_wide_oracle
-
-    return _ann_topk_wide_oracle()
-
-
-@register("streaming_incremental_ann", oracle=_incremental_ann_oracle())
+@register("streaming_incremental_ann", oracle=topk_oracle(WIDE))
 def streaming_incremental_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental ANN top-k maintenance (VERDICT r04 ask #3): the ANN
     corpus streams in file-by-file; each micro-batch's incremental pairs
     are folded into a per-query top-k state (delta writes for touched
     queries only, previous state read through query-id row-group pruning).
-    Mid-run, both the signature store AND the ANN state are compacted
-    (exercising the pruned at-scale read paths). The final state must
-    equal the one-shot image_ann_topk_wide — same DuckDB oracle."""
-    import os
+    Mid-run, the signature store, the pairs AND the ANN state are
+    compacted (exercising the pruned at-scale read paths). The final state
+    must equal the one-shot image_ann_topk_wide — same DuckDB oracle."""
+    from ..streaming.ann import read_topk
 
-    from .images_q import _n_for
-    from ..scratch import scratch_dir
-    from ..sources.images import generate_phash_corpus_df
-    from ..streaming.ann import compact_topk_state, read_topk
-    from ..streaming.dedup import (
-        compact_pairs,
-        compact_store,
-        start_incremental_dedup,
-    )
-
-    sf_name = os.path.basename(os.path.normpath(sf_dir))
-    base = scratch_dir(
-        f"osm2mp_inc_ann_{sf_name}", spark.sparkContext.applicationId
-    )
-    land = os.path.join(base, "landing")
-    corpus = generate_phash_corpus_df(spark, _n_for(spark, sf_dir), variants=2)
-    corpus.repartition(4).write.mode("overwrite").parquet(land)
-    schema = spark.read.parquet(land).schema
-    store = os.path.join(base, "store")
-    state = os.path.join(base, "state")
-
-    def hook(batch_id):
-        if batch_id == 1:  # compact mid-stream: later batches take the
-            compact_pairs(spark, os.path.join(base, "pairs"), store)
-            compact_store(spark, store)  # pruned-scan store path
-            compact_topk_state(spark, state, store)
-
-    q = start_incremental_dedup(
-        spark, land, schema,
-        store_path=store,
-        pairs_path=os.path.join(base, "pairs"),
-        checkpoint_path=os.path.join(base, "ckpt"),
-        max_hamming=7, max_files_per_trigger=1,
-        on_batch_complete=hook,
-        ann_state_path=state,
-        ann_query_pred="{col} LIKE '%d' OR {col} LIKE '%e'",
-        ann_k=3,
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
-    return read_topk(spark, state)
+    base = _stream(spark, sf_dir, "osm2mp_inc_ann", variants=2, ann=True,
+                   compact_after=(1,))
+    return read_topk(spark, f"{base}/state")
 
 
-def _incremental_clusters_oracle() -> str | None:
-    # Identical oracle to image_dedup_clusters_wide: incrementally-
-    # maintained min-label components must equal the one-shot batch
-    # clustering (see streaming.clusters).
-    from .images_q import _wide_clusters_oracle
-
-    return _wide_clusters_oracle()
-
-
-@register(
-    "streaming_incremental_clusters", oracle=_incremental_clusters_oracle()
-)
+@register("streaming_incremental_clusters", oracle=clusters_oracle(WIDE))
 def streaming_incremental_clusters(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -176,73 +190,26 @@ def streaming_incremental_clusters(
     the corpus streams in, each micro-batch's pairs fold into a min-label
     component state via a forwarding log — cluster merges never rewrite
     member rows, so per-batch cost is O(batch) (streaming.clusters).
-    Labels are compacted mid-stream (chains resolved, store re-sorted by
-    vertex for the pruned reads). Final resolved labels + per-cluster
+    Every store is compacted mid-stream (label chains resolved, stores
+    re-sorted for the pruned reads). Final resolved labels + per-cluster
     sizes + keeper decision must equal the one-shot
     image_dedup_clusters_wide — same recursive-CTE DuckDB oracle."""
-    import os
-
-    from .images_q import _img_key, _n_for, _unkey_clusters
     from ..operators.chains import component_sizes
-    from ..scratch import scratch_dir
-    from ..sources.images import generate_phash_corpus_df
-    from ..streaming.clusters import compact_labels, read_labels
-    from ..streaming.dedup import (
-        compact_store,
-        read_store_signatures,
-        start_incremental_dedup,
-    )
+    from ..streaming.clusters import read_labels
+    from ..streaming.dedup import read_store_signatures
 
-    sf_name = os.path.basename(os.path.normpath(sf_dir))
-    base = scratch_dir(
-        f"osm2mp_inc_clu_{sf_name}", spark.sparkContext.applicationId
-    )
-    land = os.path.join(base, "landing")
-    corpus = generate_phash_corpus_df(spark, _n_for(spark, sf_dir))
-    corpus.repartition(4).write.mode("overwrite").parquet(land)
-    schema = spark.read.parquet(land).schema
-    store = os.path.join(base, "store")
-    clusters = os.path.join(base, "clusters")
-
-    def hook(batch_id):
-        if batch_id == 1:  # mid-stream: later batches read the compacted
-            compact_store(spark, store)  # (pruned) layouts of both stores
-            compact_labels(spark, clusters, store)
-
-    q = start_incremental_dedup(
-        spark, land, schema,
-        store_path=store,
-        pairs_path=os.path.join(base, "pairs"),
-        checkpoint_path=os.path.join(base, "ckpt"),
-        max_hamming=7, max_files_per_trigger=1,
-        on_batch_complete=hook,
-        clusters_root=clusters,
-        cluster_key_exprs=(_img_key("id_a"), _img_key("id_b")),
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    base = _stream(spark, sf_dir, "osm2mp_inc_clu", clusters=True,
+                   compact_after=(1,))
     # the vertex universe comes from the SIGNATURE STORE the stream built
     # (uniform view over compacted + tail) — no second hash pass
     return _unkey_clusters(component_sizes(
-        read_store_signatures(spark, store)
+        read_store_signatures(spark, f"{base}/store")
         .selectExpr(f"{_img_key('image_id')} AS k"),
-        read_labels(spark, clusters), "k",
+        read_labels(spark, f"{base}/clusters"), "k",
     ))
 
 
-def _incremental_flagship_oracle() -> str | None:
-    # Identical oracle to flagship_dedup: the delta-log sums must equal the
-    # one-shot batch rollup (see streaming.flagship).
-    from .images_q import _flagship_dedup_oracle
-
-    return _flagship_dedup_oracle()
-
-
-@register(
-    "streaming_incremental_flagship", oracle=_incremental_flagship_oracle()
-)
+@register("streaming_incremental_flagship", oracle=_flagship_dedup_oracle())
 def streaming_incremental_flagship(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -252,59 +219,14 @@ def streaming_incremental_flagship(
     cluster merge retracts the merged clusters' previously-published rows
     and adds the combined cluster at its (possibly moved) root position;
     per-batch work is O(batch) and unchanged clusters are never touched.
-    All four stores (signatures, labels, sizes, deltas) are compacted
+    Every store (signatures, pairs, labels, sizes, deltas) is compacted
     mid-stream. Summing the log must equal the one-shot flagship_dedup —
     same composed DuckDB oracle."""
-    import os
+    from ..streaming.flagship import read_rollup
 
-    from .images_q import _img_key, _n_for
-    from ..plans.flagship import flagship_assign
-    from ..scratch import scratch_dir
-    from ..sources.images import generate_phash_corpus_df
-    from ..sources.points import with_derived_position
-    from ..streaming.clusters import compact_labels
-    from ..streaming.dedup import compact_store, start_incremental_dedup
-    from ..streaming.flagship import compact_rollup, read_rollup
-
-    sf_name = os.path.basename(os.path.normpath(sf_dir))
-    base = scratch_dir(
-        f"osm2mp_inc_flag_{sf_name}", spark.sparkContext.applicationId
-    )
-    land = os.path.join(base, "landing")
-    corpus = generate_phash_corpus_df(spark, _n_for(spark, sf_dir))
-    corpus.repartition(4).write.mode("overwrite").parquet(land)
-    schema = spark.read.parquet(land).schema
-    store = os.path.join(base, "store")
-    clusters = os.path.join(base, "clusters")
-    rollup = os.path.join(base, "rollup")
-
-    def assign(df: DataFrame) -> DataFrame:
-        return flagship_assign(with_derived_position(df, "point_id"))
-
-    def hook(batch_id):
-        if batch_id == 1:  # mid-stream: later batches read the compacted
-            compact_store(spark, store)  # (pruned) layouts of all stores
-            compact_labels(spark, clusters, store)
-            compact_rollup(spark, rollup, store)
-
-    q = start_incremental_dedup(
-        spark, land, schema,
-        store_path=store,
-        pairs_path=os.path.join(base, "pairs"),
-        checkpoint_path=os.path.join(base, "ckpt"),
-        max_hamming=7, max_files_per_trigger=1,
-        on_batch_complete=hook,
-        clusters_root=clusters,
-        cluster_key_exprs=(_img_key("id_a"), _img_key("id_b")),
-        rollup_root=rollup,
-        rollup_key_expr=_img_key("image_id"),
-        rollup_assign=assign,
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
-    return read_rollup(spark, rollup).select(
+    base = _stream(spark, sf_dir, "osm2mp_inc_flag", clusters=True,
+                   rollup=True, compact_after=(1,))
+    return read_rollup(spark, f"{base}/rollup").select(
         "city_id", "tile_id",
         F.col("n_keepers").cast("bigint").alias("n_keepers"),
         F.col("n_images").cast("bigint").alias("n_images"),

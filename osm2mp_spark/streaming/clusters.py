@@ -2,7 +2,7 @@
 maintained across micro-batches — the third leg of the incremental family
 (pairs: streaming.dedup; ANN top-k: streaming.ann; cluster/keeper: here).
 
-The batch form (queries.images_q.image_dedup_clusters_wide) labels each
+The batch form (query image_dedup_clusters_wide, queries.images_q) labels each
 signature with the minimum packed id of its connected component over the
 near-dup pair graph. Incrementally, a micro-batch's new pairs can (a) link
 brand-new vertices, (b) attach new vertices to existing clusters, or (c)

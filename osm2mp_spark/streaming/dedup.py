@@ -287,8 +287,8 @@ def start_incremental_dedup(
         compacted dir exists;
       - read_bytes: /proc rchar of the child JVM, less the pruned
         count's own re-read;
-      - the row itself is a literal projection over one partition, so
-        writing it starts no Python worker.
+      - the row itself is a store.local_frame, a JVM-only
+        LocalTableScan, so writing it starts no Python worker.
     On 4 cores with 45-image batches a micro-batch submits 7–11 Spark jobs
     (15–19 when it counted its inputs, store and output with Spark jobs
     and wrote the row through createDataFrame).

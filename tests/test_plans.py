@@ -242,6 +242,47 @@ class TestConditionalBroadcast:
             spark.conf.unset(key)
             spark.conf.set(auto, old_auto)
 
+    def test_partitioned_table_is_not_sized_for_broadcast(
+        self, spark, sf_dir, tmp_path, monkeypatch
+    ):
+        """A hive-partitioned table keeps its rows under `k=<v>/`
+        subdirectories, which a flat footer listing does not count. Its
+        size is unknown, so the corpus-sized joins of
+        dedup_embedding_cosine and entrance_poi get no broadcast hint; an
+        estimate of 0 rows would broadcast a table of any size."""
+        import os
+
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        import __spark_entry__ as E
+        import osm2mp_spark.plans.hints as hints
+
+        sf = tmp_path / "sf"
+        sf.mkdir()
+        for f in os.listdir(sf_dir):
+            (sf / f).symlink_to(os.path.join(sf_dir, f))
+        for t in ("embeddings", "part"):
+            tab = pq.read_table(os.path.join(sf_dir, f"{t}.parquet"))
+            (sf / f"{t}.parquet").unlink()
+            pq.write_to_dataset(
+                tab.append_column("k", pa.array(np.arange(len(tab)) % 2)),
+                str(sf / f"{t}.parquet"), partition_cols=["k"],
+            )
+        orig = hints.maybe_broadcast
+        for name in ("dedup_embedding_cosine", "entrance_poi"):
+            gated = []
+
+            def spy(df, est_rows):
+                gated.append(est_rows)
+                return orig(df, est_rows=est_rows)
+
+            monkeypatch.setattr(hints, "maybe_broadcast", spy)
+            E.queries()[name](spark, str(sf))
+            monkeypatch.setattr(hints, "maybe_broadcast", orig)
+            assert gated and all(e is None for e in gated), (name, gated)
+
 
 class TestPythonStagesAndDriverJobs:
     """Python worker evaluations and driver-side jobs of the image and PIP

@@ -2,6 +2,9 @@
 
 import ast
 import pathlib
+import re
+
+import pytest
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 _REDEFINABLE = ("setter", "deleter", "overload")
@@ -93,3 +96,24 @@ def test_streaming_frames_are_built_by_local_frame():
         if (path.name, scope) != ("store.py", "local_frame")
     ]
     assert hits == []
+
+
+# SQL the oracles share: the DuckDB popcount of XORed signature words and
+# the recursive min-label components CTE
+_SHARED_SQL = {
+    "popcount": re.compile(r"bit_count\((CAST\()?\s*xor\("),
+    "min-label CTE": re.compile(r"SELECT u\.b, c\.lab FROM comp c JOIN und u"),
+}
+
+
+@pytest.mark.parametrize("what", sorted(_SHARED_SQL))
+def test_shared_oracle_sql_is_written_once(what):
+    """Each shared oracle fragment is built by one module
+    (queries/oracle_sql.py); a second spelling drifts from the first."""
+    hits = sorted(
+        str(path.relative_to(ROOT))
+        for pkg in ("osm2mp_spark", "tools")
+        for path in (ROOT / pkg).rglob("*.py")
+        if _SHARED_SQL[what].search(path.read_text())
+    )
+    assert hits == ["osm2mp_spark/queries/oracle_sql.py"]
