@@ -58,4 +58,29 @@ def python_eval_counts(df) -> dict[str, int]:
     return counts
 
 
-__all__ = ["PYTHON_EVAL_NODES", "max_stage_tasks", "python_eval_counts"]
+def codegen_compiles(spark) -> dict:
+    """Janino compilations of generated code since the JVM started, from
+    Spark's CodegenMetrics: `compiles` (one per compiled source: a
+    whole-stage body or an expression class, counted once under each
+    class loader that compiles it) and `source_bytes`, their total source
+    size. Subtract two readings to count what a call compiled; a call
+    whose rerun still compiles generates per-call source, or lost its
+    classes to the cache (spark.sql.codegen.cache.maxEntries).
+    `source_bytes` sums the size histogram's sample, which holds every
+    compile only until it overflows (1028 entries); past that it is None."""
+    jvm = spark._jvm
+    metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    sizes = metrics.METRIC_SOURCE_CODE_SIZE()
+    sample = sizes.getSnapshot().getValues()
+    return {
+        "compiles": int(metrics.METRIC_COMPILATION_TIME().getCount()),
+        # summed in the JVM: one py4j call, not one per sampled value
+        "source_bytes": int(jvm.java.util.Arrays.stream(sample).sum())
+        if len(sample) == sizes.getCount() else None,
+    }
+
+
+__all__ = [
+    "PYTHON_EVAL_NODES", "codegen_compiles", "max_stage_tasks",
+    "python_eval_counts",
+]

@@ -12,8 +12,9 @@ This module is also the engine's one connected-components path:
 `min_label_components` (a driver union-find at or below the
 `driverMaxEdges` crossover, a distributed fixpoint above it),
 `MinUnionFind` (the one driver union-find, also used by the streaming
-cluster fold and contour-ring assembly) and `component_sizes` (the
-cluster keep/drop decision of every dedup clustering query).
+cluster fold and contour-ring assembly), `component_sizes` (the
+per-vertex cluster keep/drop decision of every dedup clustering query)
+and `component_keepers` (only the keepers and their cluster sizes).
 """
 
 from __future__ import annotations
@@ -509,6 +510,17 @@ def min_label_components(
     return labels
 
 
+def _labeled(vertices: DataFrame, labels: DataFrame, key: str) -> DataFrame:
+    """(key, cluster_id) for every row of `vertices`: its
+    min_label_components label, or the key itself for a vertex in no edge.
+    A label row whose vertex is not in `vertices` is dropped."""
+    return (
+        vertices.select(key)
+        .join(labels.withColumnRenamed("vertex", key), key, "left")
+        .select(key, F.coalesce("label", key).alias("cluster_id"))
+    )
+
+
 def component_sizes(
     vertices: DataFrame, labels: DataFrame, key: str
 ) -> DataFrame:
@@ -519,16 +531,36 @@ def component_sizes(
     dropped; cluster_size counts the cluster's `vertices` rows; `keep`
     marks the keeper, the row whose key is its cluster's minimum. Plan: a
     left join of the (usually broadcast) labels, then a groupBy of the
-    cluster sizes joined back."""
-    allv = (
-        vertices.select(key)
-        .join(labels.withColumnRenamed("vertex", key), key, "left")
-        .select(key, F.coalesce("label", key).alias("cluster_id"))
-    )
+    cluster sizes joined back. A caller that needs only the keepers
+    reads `component_keepers`, which skips the join back."""
+    allv = _labeled(vertices, labels, key)
     sizes = allv.groupBy("cluster_id").agg(
         F.count("*").alias("cluster_size")
     )
     return allv.join(sizes, "cluster_id").select(
         key, "cluster_id", "cluster_size",
         (F.col(key) == F.col("cluster_id")).alias("keep"),
+    )
+
+
+def component_keepers(
+    vertices: DataFrame, labels: DataFrame, key: str
+) -> DataFrame:
+    """The keepers of component_sizes and nothing else → (key,
+    cluster_size), one row per cluster whose minimum vertex is a
+    `vertices` row: the rows of `component_sizes(...).filter("keep")`.
+    A cluster whose minimum is a label vertex missing from `vertices`
+    has no keeper, and a null key keeps nothing. Plan: the same left
+    join of the labels, then ONE aggregate per cluster (its size and
+    whether its minimum is present), so `vertices` is read once and no
+    per-vertex join back is planned."""
+    return (
+        _labeled(vertices, labels, key)
+        .groupBy("cluster_id")
+        .agg(
+            F.count("*").alias("cluster_size"),
+            F.max(F.col(key) == F.col("cluster_id")).alias("keep"),
+        )
+        .filter("keep")
+        .select(F.col("cluster_id").alias(key), "cluster_size")
     )

@@ -19,8 +19,13 @@ classic gaps-and-islands window over (chain_id ORDER BY seq):
     (an outside vertex may emit up to two rows — one per adjacent run)
 
 Parts with fewer than 2 vertices are dropped (a clipped line needs ≥2 pts).
-No Python anywhere; one shuffle (the window partition), which co-partitions
-with any later per-chain stage.
+A part is a run plus its outside neighbours, so it has one vertex only
+when it is a LONE inside vertex: both lag(flag) and lead(flag) are null
+(a chain end, or a neighbour whose null coordinate leaves its flag null;
+a null flag belongs to no part). An outside neighbour would join the
+part. That rule drops the lone vertex in the per-vertex pass itself, so
+no second window counts part sizes. No Python anywhere; one shuffle and one sort (the
+window partition), which co-partition with any later per-chain stage.
 """
 
 from __future__ import annotations
@@ -80,7 +85,11 @@ def clip_chains_by_predicate(
 
     Output: (chain_col, part_no, seq_col, lon, lat) — vertices of each
     clipped part; an outside vertex shared by two parts appears twice with
-    different part_no. part_no is 1-based per chain in chain order.
+    different part_no. part_no is 1-based per chain in chain order. A
+    lone inside vertex, whose neighbours' flags are both null (absent, or
+    undecided by a null coordinate), would be a one-vertex part: it
+    belongs to no part, and its part_no is skipped.
+    Plan: one Sort and two Windows (lag/lead, then the running sum).
     """
     w = Window.partitionBy(chain_col).orderBy(seq_col)
     wcum = w.rowsBetween(Window.unboundedPreceding, 0)
@@ -96,37 +105,32 @@ def clip_chains_by_predicate(
         .withColumn("__run_cum", F.sum(F.col("__new_run").cast("int")).over(wcum))
     )
 
-    # single pass: each vertex's part memberships (0, 1 or 2 of them) as an
-    # array, then explode — the window subtree is evaluated ONCE, not three
-    # times as a 3-way union would (profiled 3× faster at 600k vertices)
-    memberships = F.filter(
-        F.array(
-            F.when(F.col("__in"), F.col("__run_cum")),
-            F.when(
-                ~F.col("__in") & F.coalesce(F.col("__prev_in"), F.lit(False)),
-                F.col("__run_cum"),
-            ),
-            F.when(
-                ~F.col("__in") & F.coalesce(F.col("__next_in"), F.lit(False)),
-                F.col("__run_cum") + 1,
-            ),
+    # single pass: each vertex's part memberships (0, 1 or 2 of them) as a
+    # 3-slot array, null where the vertex is not a member, then explode —
+    # the window subtree is evaluated ONCE, not three times as a 3-way
+    # union would (profiled 3× faster at 600k vertices). The null slots are
+    # filtered after the explode: a lambda filter inside it would keep the
+    # Generate out of whole-stage codegen (4 more compiled classes).
+    # A lone inside vertex gets none: its part would have one vertex
+    lone = F.col("__prev_in").isNull() & F.col("__next_in").isNull()
+    memberships = F.array(
+        F.when(F.col("__in") & ~lone, F.col("__run_cum")),
+        F.when(
+            ~F.col("__in") & F.coalesce(F.col("__prev_in"), F.lit(False)),
+            F.col("__run_cum"),
         ),
-        lambda x: x.isNotNull(),
+        F.when(
+            ~F.col("__in") & F.coalesce(F.col("__next_in"), F.lit(False)),
+            F.col("__run_cum") + 1,
+        ),
     )
-    parts = flagged.select(
+    return flagged.select(
         F.col(chain_col),
         F.explode(memberships).alias("part_no"),
         F.col(seq_col),
         F.col(lon),
         F.col(lat),
-    )
-    # drop degenerate parts (<2 vertices)
-    wpart = Window.partitionBy(chain_col, "part_no")
-    return (
-        parts.withColumn("__n", F.count("*").over(wpart))
-        .filter(F.col("__n") >= 2)
-        .drop("__n")
-    )
+    ).filter(F.col("part_no").isNotNull())
 
 
 def clip_chains_to_bbox(

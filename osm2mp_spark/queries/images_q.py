@@ -226,11 +226,18 @@ def _img_unkey(col: str, engine: str) -> str:
             f"WHEN {col} % 4 = 2 THEN 'e' ELSE '' END)")
 
 
-def _image_clusters(sigs: DataFrame, pairs: DataFrame) -> DataFrame:
+def _image_clusters(sigs: DataFrame, pairs: DataFrame,
+                    keepers: bool = False) -> DataFrame:
     """Image near-dup pairs (id_a, id_b) over the signature table `sigs`
     → operators.chains.component_sizes on `_img_key` vertices: (k,
-    cluster_id, cluster_size, keep), keeper = min image key per cluster."""
-    from ..operators.chains import component_sizes, min_label_components
+    cluster_id, cluster_size, keep), keeper = min image key per cluster.
+    With `keepers`, component_keepers instead: (k, cluster_size) of the
+    keepers only."""
+    from ..operators.chains import (
+        component_keepers,
+        component_sizes,
+        min_label_components,
+    )
 
     labels = min_label_components(
         pairs.selectExpr(
@@ -238,7 +245,8 @@ def _image_clusters(sigs: DataFrame, pairs: DataFrame) -> DataFrame:
         ),
         src="ka", dst="kb",
     )
-    return component_sizes(
+    clusters = component_keepers if keepers else component_sizes
+    return clusters(
         sigs.selectExpr(f"{_img_key('image_id')} AS k"), labels, "k"
     )
 
@@ -667,18 +675,21 @@ def flagship_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (min_label_components), and the driver-built label table joins the
     signature keys as a broadcast. Per call that is 5 Python worker tasks
     on local[4]: 4 generator tasks and 1 spatial kernel task (BENCH.md
-    §1d)."""
+    §1d).
+
+    Plan: component_keepers turns the labeled keys into the keepers and
+    their cluster sizes in ONE aggregate, so the executed plan scans the
+    signature checkpoint once, joins the labels once and holds no
+    sort-merge join; the spatial kernel runs over the keepers only."""
     from ..plans.flagship import flagship_assign
     from ..sources.points import with_derived_position
 
     sigs = WIDE.generate(spark, _n_for(spark, sf_dir), 1).localCheckpoint(
         eager=False
     )
-    keepers = (
-        _image_clusters(sigs, WIDE.pairs(sigs))
-        .filter("keep")
-        .selectExpr("k AS point_id", "cluster_size AS n")
-    )
+    keepers = _image_clusters(
+        sigs, WIDE.pairs(sigs), keepers=True
+    ).selectExpr("k AS point_id", "cluster_size AS n")
     pts = with_derived_position(keepers, "point_id")
     return (
         flagship_assign(pts)

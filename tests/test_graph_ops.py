@@ -770,7 +770,8 @@ class TestAdaptiveComponentsCrossover:
     def _labels(self, spark, df, bound):
         from osm2mp_spark.operators.chains import min_label_components
 
-        spark.conf.set("spark.osm2mp.components.driverMaxEdges", bound)
+        if bound is not None:  # None: the default bound
+            spark.conf.set("spark.osm2mp.components.driverMaxEdges", bound)
         try:
             return min_label_components(df)
         finally:
@@ -823,6 +824,44 @@ class TestAdaptiveComponentsCrossover:
             (20, 20, 2, True), (21, 20, 2, False), (30, 30, 1, True),
         ]
         assert sizes([]) == [(k, k, 1, True) for k in verts]
+
+    @pytest.mark.parametrize(
+        "bound", [None, "0"], ids=["default", "distributed"]
+    )
+    def test_component_keepers_are_the_kept_sizes(self, spark, bound):
+        """component_keepers returns exactly the keep rows of
+        component_sizes, as (key, cluster_size): a cluster whose minimum
+        is a label vertex missing from the vertex table has no keeper
+        (1 → {50, 51}), a labeled vertex missing from the table is not
+        counted (40), and a null key keeps nothing."""
+        from osm2mp_spark.operators.chains import (
+            component_keepers,
+            component_sizes,
+        )
+
+        b = 1 << 62
+        edges = [(5, 3), (3, 9), (20, 21), (21, 40), (1, 50), (50, 51)]
+        verts = [3, 5, 9, 20, 21, 30, 50, 51, None]
+        vdf = spark.createDataFrame(
+            [(None if k is None else b + k,) for k in verts], "k long"
+        )
+        labels = self._labels(spark, spark.createDataFrame(
+            [(b + x, b + y) for x, y in edges], "src long, dst long"
+        ), bound)
+        keepers = sorted(
+            (r.k - b, r.cluster_size)
+            for r in component_keepers(vdf, labels, "k").collect()
+        )
+        assert component_keepers(vdf, labels, "k").columns == [
+            "k", "cluster_size"
+        ]
+        assert keepers == [(3, 3), (20, 2), (30, 1)]
+        kept = sorted(
+            (r.k - b, r.cluster_size)
+            for r in component_sizes(vdf, labels, "k").filter("keep")
+            .collect()
+        )
+        assert keepers == kept
 
     def test_min_union_find_roots_are_minima(self):
         import random

@@ -33,3 +33,13 @@ def test_inc_ledger_counts_add_up(spark, tmp_path):
     assert out["final_store_signatures"] == landed
     assert len(out["compaction_secs"]) == 1  # after batch 1
     assert out["rollup_cells"] > 0
+
+
+def test_codegen_ledger_warm_calls_compile_nothing(spark, sf_dir):
+    """Each batch_rollup query, called again right after its first call,
+    finds every generated class cached: no per-call literal in generated
+    source, and no plan that changes between calls."""
+    ledgers = _ledgers()
+    out = ledgers.codegen(spark, sf_dir)
+    warm = {q: out[q]["warm"]["compiles"] for q in ledgers.CODEGEN_QUERIES}
+    assert warm == dict.fromkeys(ledgers.CODEGEN_QUERIES, 0)

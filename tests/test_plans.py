@@ -4,6 +4,7 @@ column pruning) fail loudly."""
 
 import contextlib
 import io
+import re
 
 import pytest
 
@@ -13,6 +14,20 @@ def plan_of(df) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain()
     return buf.getvalue()
+
+
+def final_plan(df) -> str:
+    """The executed physical plan of `df`, AQE's final plan once `df`
+    has run (without the initial plan AQE prints beside it)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return plan.treeString()
+
+
+def node_count(plan: str, node: str) -> int:
+    """Operators named `node` in a plan tree string."""
+    return len(re.findall(rf"(?:^|[-+:*)\s]){node}\b", plan, re.M))
 
 
 class TestPlanShapes:
@@ -284,6 +299,42 @@ class TestConditionalBroadcast:
             assert gated and all(e is None for e in gated), (name, gated)
 
 
+class TestClipPlan:
+    def test_clip_chains_one_sort_two_windows(self, spark, sf_dir):
+        """Clipping sorts each chain once: lag/lead and the running run
+        count are its two windows, and the lone-vertex rule leaves no
+        per-part size window (which would add a Sort and a Window)."""
+        import __spark_entry__ as E
+
+        p = plan_of(E.queries()["clip_chains"](spark, sf_dir))
+        assert node_count(p, "Window") == 2, p
+        assert node_count(p, "Sort") == 1, p
+
+
+class TestCodegenLedger:
+    def test_fresh_source_compiles_once(self, spark):
+        """A projection with a literal no earlier plan used compiles new
+        classes; running the same query again compiles none."""
+        import time
+
+        from osm2mp_spark.metrics import codegen_compiles
+
+        lit = 10**12 + time.time_ns() % 10**9
+
+        def run():
+            spark.range(5).selectExpr(f"id * {lit} AS x").collect()
+
+        before = codegen_compiles(spark)
+        run()
+        cold = codegen_compiles(spark)
+        run()
+        warm = codegen_compiles(spark)
+        assert cold["compiles"] - before["compiles"] >= 1
+        assert warm["compiles"] == cold["compiles"]
+        if cold["source_bytes"] is not None and before["source_bytes"] is not None:
+            assert cold["source_bytes"] > before["source_bytes"]
+
+
 class TestPythonStagesAndDriverJobs:
     """Python worker evaluations and driver-side jobs of the image and PIP
     hot paths: each Python evaluation costs a worker task per partition,
@@ -370,6 +421,27 @@ class TestPythonStagesAndDriverJobs:
         assert sum(counts.values()) == 1
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "bytes" not in plan
+
+    def test_flagship_dedup_keepers_one_aggregate(self, spark, sf_dir):
+        """The keepers and their cluster sizes come from one aggregate
+        over the labeled signature keys: the executed plan scans the
+        signature checkpoint once, joins the labels once (the broadcast
+        the driver-built label table carries) and joins nothing back. The
+        automatic broadcast is off, as for a corpus too large to
+        broadcast, so a cluster-size join back would plan as a
+        SortMergeJoin."""
+        import __spark_entry__ as E
+
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            df = E.queries()["flagship_dedup"](spark, sf_dir)
+            df.collect()
+        finally:
+            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+        plan = final_plan(df)
+        assert node_count(plan, "SortMergeJoin") == 0, plan
+        assert node_count(plan, "Scan ExistingRDD") == 1, plan
+        assert node_count(plan, "BroadcastHashJoin") == 1, plan
 
     def test_flagship_image_assign_generates_no_payload(self, spark, sf_dir):
         """The per-image assignment reads only the corpus ids, so its plan

@@ -11,12 +11,20 @@ operators.hamming chose (kind, band count, key bits, probes per band) and
 the join's id rule; for each connected-components labeling, the path
 operators.chains.min_label_components took (driver or distributed), the
 edges it pulled, the driverMaxEdges bound and the fixpoint rounds run.
+
+Exchange `plan_id`s and `#N` expression ids count up across the session,
+so a query that runs Spark jobs while it is built (road_merge,
+dedup_clusters, raster_contour_rings) would print different ids on each
+run. Both are renumbered in order of first appearance before a dump is
+written, so two runs of one tree give byte-identical dumps and a diff of
+two trees shows only plan changes.
 """
 
 from __future__ import annotations
 
 import logging
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -58,6 +66,19 @@ DEFAULT = [
 ]
 
 
+def normalize_ids(plan: str) -> str:
+    """`plan` with its exchange plan ids and expression ids renumbered
+    from 0 in order of first appearance."""
+    for pattern in (r"(plan_id=)(\d+)", r"(#)(\d+)"):
+        seen: dict[str, int] = {}
+        plan = re.sub(
+            pattern,
+            lambda m: m.group(1) + str(seen.setdefault(m.group(2), len(seen))),
+            plan,
+        )
+    return plan
+
+
 class _Lines(logging.Handler):
     """Keeps the messages of the records it is handed."""
 
@@ -94,9 +115,9 @@ def main():
             continue
         records.lines.clear()
         df = qs[name](spark, SF_DIR)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
+        plan = normalize_ids(df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
-        )
+        ))
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(plan)

@@ -8,10 +8,12 @@ from run to run; its seconds are context.
     python tools/ledgers.py inc-ledger [B [N]]   # §1b-full, §1f: B batches
                                                  # of N originals (10 1000)
     python tools/ledgers.py scaling              # §2a-cluster: N vs 4N executors
+    python tools/ledgers.py codegen SF_DIR       # §1l: compiles per call
 
-dedup-scale, skew and inc-ledger run on local[C], C = the CPUs this
-process may use, with a 4 GB driver heap and the web UI on (dedup-scale
-reads stage totals from its REST API). scaling starts its own sessions.
+dedup-scale, skew, inc-ledger and codegen run on local[C], C = the CPUs
+this process may use, with a 4 GB driver heap and the web UI on
+(dedup-scale reads stage totals from its REST API). scaling starts its
+own sessions.
 """
 
 from __future__ import annotations
@@ -50,6 +52,24 @@ def _stage_totals(spark) -> dict:
                        + s.get("shuffleWriteBytes", 0) for s in stages),
         "spill_disk": sum(s.get("diskBytesSpilled", 0) for s in stages),
     }
+
+
+# physical join operators, as the executed plan names them
+JOIN_NODES = ("BroadcastHashJoin", "ShuffledHashJoin", "SortMergeJoin",
+              "BroadcastNestedLoopJoin", "CartesianProduct")
+
+
+def _plan_joins(df) -> list[str]:
+    """The join operators of `df`'s executed plan, in plan order: AQE's
+    final plan once `df` has run, so a join AQE re-planned at run time
+    shows as what ran."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return [
+        node for line in plan.treeString().splitlines()
+        for node in JOIN_NODES if f"{node} " in line
+    ]
 
 
 def _synthetic_wide_sigs(spark, n: int, dup_every: int = 7):
@@ -133,9 +153,12 @@ def dedup_scale(spark, ns=(20_000, 60_000, 180_000)) -> dict:
         for _ in range(2):
             df = (wide_hamming_pairs(sigs, max_hamming=7) if wide
                   else phash_hamming_pairs(sigs, max_hamming=6))
+            # df.count() as a frame of its own, so its executed plan can
+            # be read back
+            counted = df.groupBy().count()
             b0 = _stage_totals(spark)
             t0 = time.time()
-            pairs = df.count()
+            pairs = counted.first()[0]
             dt = time.time() - t0
             if dt < join_sec:
                 join_sec = dt
@@ -148,6 +171,7 @@ def dedup_scale(spark, ns=(20_000, 60_000, 180_000)) -> dict:
                 "join_sec": round(join_sec, 3),
                 "images_per_sec_join": round(n_imgs / join_sec, 1),
                 "candidates": cand, "pairs": pairs,
+                "join_operators": _plan_joins(counted),
                 "join_shuffle_mb": round(res["shuffle"] / 2**20, 1),
                 "join_spill_mb": round(res["spill_disk"] / 2**20, 1)}
 
@@ -278,6 +302,48 @@ def inc_ledger(spark, base: str, n_batches: int = 10,
     }
 
 
+# the queries of a batch_rollup pass (perfbench/workloads.py): the five
+# geometry queries (flagship_lineitem is a plan, not a registered query)
+# and flagship_dedup
+CODEGEN_QUERIES = ("pip_city", "knn_city", "clip_chains",
+                   "tile_chain_closure", "flagship_lineitem", "flagship_dedup")
+
+
+def codegen(spark, sf_dir: str) -> dict:
+    """Generated code each query compiles per call: every query is built
+    and run to a noop sink twice in a row, and each call reports the
+    CodegenMetrics compiles and source KB it caused (builder jobs
+    included). The cold call pays the query's classes (and any set-up its
+    builder caches, such as the BSP tile tree); a warm call that still
+    compiles generates source per call, or its plan changed between
+    calls (an AQE re-plan). `session` totals every call, plus whatever
+    the session compiled before the first."""
+    import __spark_entry__ as entry
+
+    from osm2mp_spark.metrics import codegen_compiles
+    from osm2mp_spark.plans.flagship import flagship_lineitem
+
+    qs = dict(entry.queries(), flagship_lineitem=flagship_lineitem)
+    out: dict = {"sf_dir": sf_dir}
+    for name in CODEGEN_QUERIES:
+        calls = []
+        for _ in range(2):
+            before = codegen_compiles(spark)
+            qs[name](spark, sf_dir).write.format("noop").mode(
+                "overwrite").save()
+            after = codegen_compiles(spark)
+            kb = (None if after["source_bytes"] is None
+                  else round((after["source_bytes"]
+                              - before["source_bytes"]) / 1024, 1))
+            calls.append({
+                "compiles": after["compiles"] - before["compiles"],
+                "source_kb": kb,
+            })
+        out[name] = {"cold": calls[0], "warm": calls[1]}
+    out["session"] = codegen_compiles(spark)["compiles"]
+    return out
+
+
 def _jvm_compute_job(spark, n: int):
     """The JVM-only compute flagship: derived positions → expression kNN
     (12 anchors, pure codegen) → grid tile id → per-(city, tile)
@@ -381,6 +447,8 @@ def main() -> None:
     inc.add_argument("batches", type=int, nargs="?", default=10)
     inc.add_argument("images", type=int, nargs="?", default=1_000)
     sub.add_parser("scaling")
+    cg = sub.add_parser("codegen")
+    cg.add_argument("sf_dir", help="a generated scale-factor directory")
     args = ap.parse_args()
     if args.mode == "scaling":
         print(json.dumps({"scaling": scaling()}))
@@ -400,6 +468,8 @@ def main() -> None:
             out = {"dedup_scale": dedup_scale(spark)}
         elif args.mode == "skew":
             out = {"band_join_skew": skew(spark)}
+        elif args.mode == "codegen":
+            out = {"codegen": codegen(spark, args.sf_dir)}
         else:
             with tempfile.TemporaryDirectory(prefix="osm2mp_inc_ledger_") as base:
                 out = {"incremental_family_ledger": inc_ledger(
